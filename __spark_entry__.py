@@ -1935,10 +1935,10 @@ def q_engine_replay(spark, sf_dir):
     n = ch.agg(F.max("seq")).first()[0] or 0
     half = n // 2
     merge_batch(table, ch.where(F.col("seq") <= half), run_id="entry", batch_id=0,
-                collect_stats=False, transform_after_dedup=norm)
+                transform_after_dedup=norm)
     compact(table, max_files_per_bucket=0)  # fold every bucket mid-replay
     merge_batch(table, ch.where(F.col("seq") > half), run_id="entry", batch_id=1,
-                collect_stats=False, transform_after_dedup=norm)
+                transform_after_dedup=norm)
     return read_state(table).select("conv_id", "turn_idx", "text")
 
 
@@ -1983,7 +1983,7 @@ def q_corpus_view_replay(spark, sf_dir):
         b = ch.where(
             (F.col("seq") > bounds[i]) & (F.col("seq") <= bounds[i + 1])
         )
-        merge_batch(primary, b, run_id="cv", batch_id=i, collect_stats=False)
+        merge_batch(primary, b, run_id="cv", batch_id=i)
         view.refresh(
             b.select("conv_id"), seq=bounds[i + 1], run_id="cv-view", batch_id=i
         )

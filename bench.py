@@ -96,7 +96,6 @@ def _replay_once(spark, feed: str, work: str, n_buckets: int, mfpt: int,
         checkpoint_dir=os.path.join(work, "ckpt"),
         n_buckets=n_buckets,
         max_files_per_trigger=mfpt,
-        collect_stats=False,
         **view_kw,
     )
     t0 = time.time()
@@ -171,7 +170,6 @@ def run_view_incremental_bench(
             checkpoint_dir=os.path.join(work, "ckpt"),
             n_buckets=n_buckets,
             max_files_per_trigger=1,
-            collect_stats=False,
             **kw,
         )
         pipe.run_available()  # cold build + initial view render: untimed

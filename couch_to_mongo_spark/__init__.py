@@ -8,7 +8,7 @@ lineage — re-expressed Spark-first:
 - thread pool            -> Spark executors / Catalyst-planned scans
 - key-range partitions   -> hash buckets on conv_id (skew-safe)
 - in-memory dedup maps   -> last-writer-wins aggregation (partial-agg safe)
-- Mongo $set upsert      -> MERGE-as-copy-on-write into a mini lakehouse
+- Mongo $set upsert      -> merge-on-read LWW MERGE into a mini lakehouse
                             table (parquet + atomic snapshot log)
 - metadata collection    -> lineage table + Structured Streaming checkpoint
 """

@@ -11,9 +11,10 @@ same columns as the table, plus
   (committed-ness is determined against the table's fence map — the fence
   entry IS the commit record, so no per-row snapshot id is stored)
 
-Scale shape: the feed is O(changed rows) per batch — computed from the
-classification join the stats path already runs (one extra projection, no
-new shuffle) and appended as parquet. A 10^10-event replay emits 10^10
+Scale shape: the feed is O(changed rows) per batch — one join of the
+batch's written delta files against the touched buckets' LWW-resolved
+pre-state, run only for merges with a feed attached (merge_batch
+``cdf=``), and appended as parquet. A 10^10-event replay emits 10^10
 feed rows total, written incrementally; consumers tail it like any
 append-only table.
 
@@ -206,9 +207,13 @@ def classify_changes(
       - insert            -> after image   (batch wins; key absent or dead)
       - update_preimage   -> before image  (batch wins over a live row)
       - update_postimage  -> after image   (batch wins over a live row)
-      - delete            -> before image  (tombstone wins over a live row)
+      - delete            -> before image  (tombstone wins over a live row),
+                             with the TOMBSTONE's ``_seq``/``_rev``
     A tombstone over an absent/already-dead key is a state no-op and emits
-    nothing (same rule as the n_deletes stat)."""
+    nothing (same rule as the n_deletes stat). The delete row orders like
+    the tombstone so a consumer folding the feed by LWW (seq, rev) places
+    it after the row it deletes — with the pre-image's own ordering
+    columns the two would tie."""
     from couch_to_mongo_spark.operators.dedup import with_rev_gen
 
     cols = [c for c in payload_cols if c != deleted_col]
@@ -240,18 +245,22 @@ def classify_changes(
         > _ord(f"_pre_{seq_col}", "_pre_rev_gen", f"_pre_{rev_col}")
     )
 
-    def image(df, change_type, pre: bool):
+    def image(df, change_type, pre_cols=()):
         sel = list(key_cols) + [
-            (F.col(f"_pre_{c}") if pre else F.col(c)).alias(c)
+            (F.col(f"_pre_{c}") if c in pre_cols else F.col(c)).alias(c)
             for c in cols
             if c not in key_cols
         ]
         return df.select(*sel).withColumn(CHANGE_TYPE_COL, F.lit(change_type))
 
-    inserts = image(j.where(~is_del & wins & ~pre_live), "insert", pre=False)
-    upd_post = image(j.where(~is_del & wins & pre_live), "update_postimage", pre=False)
-    upd_pre = image(j.where(~is_del & wins & pre_live), "update_preimage", pre=True)
-    deletes = image(j.where(is_del & wins & pre_live), "delete", pre=True)
+    inserts = image(j.where(~is_del & wins & ~pre_live), "insert")
+    upd_post = image(j.where(~is_del & wins & pre_live), "update_postimage")
+    upd_pre = image(j.where(~is_del & wins & pre_live), "update_preimage", cols)
+    deletes = image(
+        j.where(is_del & wins & pre_live),
+        "delete",
+        [c for c in cols if c not in (seq_col, rev_col)],
+    )
 
     out = inserts.unionByName(upd_pre).unionByName(upd_post).unionByName(deletes)
     out = out.withColumn("_run_id", F.lit(run_id)).withColumn(

@@ -1,6 +1,6 @@
 """Compaction: fold merge-on-read delta files back to one file per bucket.
 
-The MOR write path (operators/merge.py mode='mor') appends O(batch) delta
+The merge-on-read write path (operators/merge.py) appends O(batch) delta
 files per micro-batch; compaction amortizes the table rewrite over many
 batches — each bucket is rewritten once per ``max_files_per_bucket``
 batches instead of once per batch, so total write amplification is

@@ -97,7 +97,6 @@ class RenderedCorpusView:
             self.plan_refresh(changed_convs, seq, broadcast_convs),
             run_id=run_id,
             batch_id=batch_id,
-            collect_stats=False,
         )
 
     #: above this many changed convs the broadcast path stops inlining the

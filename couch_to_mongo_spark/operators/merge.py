@@ -1,4 +1,4 @@
-"""MERGE INTO as bucket-scoped copy-on-write (SURVEY.md §2.1 S6, §2.6 JN3).
+"""MERGE INTO as a merge-on-read LWW append (SURVEY.md §2.1 S6, §2.6 JN3).
 
 Semantics of the reference's upsert sink — unordered bulkWrite of
 ``UpdateOneModel({_id}, {$set: doc}, upsert=true)`` (reference:
@@ -12,37 +12,48 @@ SURVEY.md §2.10):
     WHEN MATCHED AND (s._seq, s.rev) > (t._seq, t.rev) THEN UPDATE SET *
     WHEN NOT MATCHED THEN INSERT *
 
-Physical plan (no Iceberg/Delta jars in this image, so copy-on-write from
-scratch), chosen to be **order-insensitive**: the table stores the winning
-``(_seq, _rev)`` per key plus tombstones (``_deleted``), so MERGE is just
+Physical plan (no Iceberg/Delta jars in this image, so merge-on-read from
+scratch), chosen to be **order-insensitive**: the table stores every
+key's LWW winner per batch plus tombstones (``_deleted``) as append-only
+delta files, and readers resolve
 
-    winners = LWW( existing(touched buckets) ∪ batch )
+    state = LWW( all delta rows )
 
-— one hash aggregation with map-side partial combine (skew-safe), no
-anti-join, no conditional update logic. Replaying any batch, in any order,
+— so MERGE never reads the table: no anti-join, no conditional update
+logic, write cost O(batch). Replaying any batch, in any order,
 reconverges to the same state; deletes are durable tombstones (purged by
-compaction), fixing the reference's delete-resurrection gap.
+compaction, operators/compact.py, which also folds the deltas back to one
+key-sorted file per bucket), fixing the reference's delete-resurrection
+gap.
 
-Steps:
-1. batch is LWW-deduped to one row per key (dedup-before-merge bounds any
-   hot-conversation skew: at most one row per key reaches the rewrite);
-2. touched buckets = distinct ``pmod(xxhash64(conv_id), n_buckets)`` of
-   the batch — only those buckets are read and rewritten, O(changed) I/O;
-3. ``existing ∪ batch`` → ``max_by(row, (_seq, rev_gen, _rev, _src))``
-   per key; tombstone rows kept (flagged), schema evolved by union;
-4. winners written per-bucket; snapshot committed atomically with lineage
-   and the (run_id, batch_id) fence entry.
+One path, one shuffle (:func:`merge_batch`):
+1. ``bucket_partitioned_lww``: repartition by bucket, then window-LWW the
+   batch to one row per key inside those partitions (dedup-before-write
+   bounds hot-conversation skew);
+2. post-dedup transform (text normalizer) + poison quarantine;
+3. align to the evolved table schema, ``write_bucketed`` one delta file
+   per touched bucket;
+4. lineage from the write itself: the source seq range from an
+   ``Observation`` on the raw batch, rows applied from the parquet
+   footers — no extra Spark job;
+5. snapshot committed atomically with lineage and the (run_id, batch_id)
+   fence entry.
+
+Insert/update/delete classification needs the pre-state, so only a
+change-feed consumer pays for it (``cdf=``).
 """
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass
+import os
+from dataclasses import asdict, dataclass, fields
 from typing import Any, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from couch_to_mongo_spark.operators.cdf import CHANGE_TYPE_COL, classify_changes
 from couch_to_mongo_spark.operators.dedup import (
     bucket_partitioned_lww,
     lww_dedup,
@@ -78,9 +89,11 @@ def with_engine_schema(payload: T.StructType) -> T.StructType:
 class MergeResult:
     skipped: bool
     snapshot_id: int | None = None
-    n_inserts: int = 0
-    n_updates: int = 0
-    n_deletes: int = 0
+    # insert/update/delete classification: filled only when a change feed
+    # is attached (it needs the pre-state); None otherwise
+    n_inserts: int | None = None
+    n_updates: int | None = None
+    n_deletes: int | None = None
     rows_applied: int = 0
     seq_min: int | None = None
     seq_max: int | None = None
@@ -100,10 +113,7 @@ def merge_batch(
     op_col: str = "op",
     seq_col: str = "seq",
     rev_col: str = "_rev",
-    already_deduped: bool = False,
     files_per_bucket: int = 1,
-    collect_stats: bool = True,
-    mode: str = "mor",
     transform_after_dedup=None,
     dead_letter=None,
     cdf=None,
@@ -112,73 +122,59 @@ def merge_batch(
 
     ``batch_df`` columns: key_cols + op + seq + _rev + payload columns.
 
-    mode='mor' (default, merge-on-read): append the LWW-deduped batch
-    (including tombstones) as per-bucket delta files — write cost O(batch),
-    never O(table); readers resolve multi-version rows via the same LWW
-    ordering (read_state), and compaction (operators/compact.py) folds
-    buckets back to one file. This is what survives 10^10 events: COW's
-    per-batch bucket rewrite is O(batches x table) when batches touch all
-    buckets.
-
-    mode='cow' (copy-on-write): rewrite touched buckets to contain only
-    winners — reads pay nothing, writes pay O(touched buckets). Also used
-    as the compaction kernel.
+    Appends the LWW-deduped batch (tombstones included) as per-bucket
+    delta files — write cost O(batch), never O(table); readers resolve
+    multi-version rows with the same LWW ordering (:func:`read_state`) and
+    compaction folds buckets back to one file. The whole apply is one
+    Spark write (plan-asserted single shuffle:
+    tests/test_plans.py::test_fast_merge_single_shuffle); lineage comes
+    from that write: ``seq_min``/``seq_max`` are the raw SOURCE range
+    (pre-dedup, the analogue of the reference's per-doc sequence-number
+    audit, Mongo.java:535) observed on the batch as it streams through,
+    ``rows_applied`` the written winners (tombstones included) from the
+    parquet footers.
 
     ``cdf`` (a :class:`~couch_to_mongo_spark.operators.cdf.ChangeFeedLog`):
     emit row-level semantic changes (insert / update pre+post images /
-    delete) for this batch — O(changed rows), derived from the same
-    pre-state the stats classification reads. Forces the stats-shaped path
-    (pre-images need the touched buckets' live winners).
-    """
-    if table.is_batch_committed(run_id, batch_id):
-        return MergeResult(skipped=True)
+    delete) for this batch, classified against the touched buckets'
+    pre-state at the merge's base snapshot — read after the write, before
+    the commit. Only then are ``n_inserts``/``n_updates``/``n_deletes``
+    filled (they count the emitted changes).
 
-    # metadata-only load: merge needs version/schema/n_buckets here;
-    # read_buckets resolves just the touched buckets' manifests, so a cold
-    # driver's per-batch manifest I/O is O(touched), not O(n_buckets)
+    A fenced (already committed) batch returns ``skipped=True`` carrying
+    the committing snapshot's lineage when the batch is the run's
+    high-water batch (the only one a stream resume replays)."""
+    if table.is_batch_committed(run_id, batch_id):
+        return _fenced_result(table, run_id, batch_id)
+
+    # metadata-only load: merge needs version/schema/n_buckets here
     snap = table.snapshot(materialize=False)
     n_buckets = snap.n_buckets
     key_cols = list(key_cols)
 
-    # --- normalize batch to engine shape: _seq/_rev/_deleted + payload ---
-    b = batch_df
+    # the source seq range rides along the write as observed metrics
+    src_range = Observation()
+    b = batch_df.observe(
+        src_range, F.min(seq_col).alias("seq_min"), F.max(seq_col).alias("seq_max")
+    )
     if rev_col not in b.columns:
         b = b.withColumn(rev_col, F.lit(None).cast("string"))
     b = with_rev_gen(b, rev_col=rev_col)
-    order_in_batch = [seq_col, "rev_gen", rev_col]
-    fast_mor = mode == "mor" and not collect_stats and cdf is None
-    raw_range = None
-    if collect_stats and not already_deduped:
-        # lineage records the *source* seq range (pre-dedup), the analogue of
-        # the reference's per-doc sequence-number audit (Mongo.java:535)
-        raw_range = batch_df.agg(
-            F.min(seq_col).alias("mn"), F.max(seq_col).alias("mx")
-        ).collect()[0]
-    if fast_mor:
-        # FAST PATH — single-shuffle apply. The ONE exchange is the bucket
-        # repartition, done FIRST; everything downstream reuses it: the
-        # partition keys are a subset of the dedup window's partitionBy, so
-        # Catalyst plans the LWW as Sort+WindowGroupLimit+Window with NO
-        # further exchange (WindowGroupLimit prunes losers during the
-        # sort), and the bucket-partitioned write streams straight out of
-        # the same partitions (one file per bucket x salt). The payload
-        # crosses the wire exactly once; round-1's kernel moved it twice
-        # (dedup-join shuffle on key, then the write repartition).
-        # Plan-asserted in tests/test_plans.py::test_fast_merge_single_shuffle.
-        if already_deduped:
-            n_parts = n_buckets * max(files_per_bucket, 1)
-            b = b.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
-            b = b.repartition(n_parts, F.col(BUCKET_COL))
-        else:
-            b = bucket_partitioned_lww(
-                b, key_cols, order_in_batch, n_buckets, files_per_bucket
-            )
-        b, n_poison, poison_cache = _transform_and_quarantine(
-            b, transform_after_dedup, dead_letter, run_id, batch_id
-        )
-        b = (
-            b.withColumn(DELETED_COL, F.col(op_col) == F.lit("d"))
-            .withColumnRenamed(seq_col, SEQ_COL)
+    # Single-shuffle apply. The ONE exchange is the bucket repartition, done
+    # FIRST; everything downstream reuses it: the partition keys are a
+    # subset of the dedup window's partitionBy, so Catalyst plans the LWW
+    # as Sort+WindowGroupLimit+Window with NO further exchange, and the
+    # bucket-partitioned write streams straight out of the same partitions
+    # (one file per bucket x salt). The payload crosses the wire once.
+    b = bucket_partitioned_lww(
+        b, key_cols, [seq_col, "rev_gen", rev_col], n_buckets, files_per_bucket
+    )
+    b, n_poison, poison_cache = _transform_and_quarantine(
+        b, transform_after_dedup, dead_letter, run_id, batch_id
+    )
+    try:
+        b = b.withColumn(DELETED_COL, F.col(op_col) == F.lit("d")).withColumnRenamed(
+            seq_col, SEQ_COL
         )
         if rev_col != REV_COL:
             b = b.withColumnRenamed(rev_col, REV_COL)
@@ -199,188 +195,101 @@ def merge_batch(
         delta = table.write_bucketed(
             new_rows, snapshot_hint=f"s{snap.version + 1:08d}", n_buckets=n_buckets
         )
-        touched = sorted(delta.keys())
-        result = MergeResult(skipped=False, touched_buckets=len(touched), n_poison=n_poison)
-        rows, mn, mx, per_file = _footer_seq_stats(table, delta)
-        result.rows_applied = rows
-        # Fast-path lineage semantics: seq_min/seq_max are the APPLIED
-        # (post-dedup, post-quarantine winner) range from the written files'
-        # footers — the stats path records the raw SOURCE range instead
-        # (Mongo.java:535 audit analogue), at the cost of an extra agg pass
-        # the fast path exists to avoid. Resume correctness is unaffected
-        # (fencing is by batch id; re-apply is idempotent); audits wanting
-        # source ranges should run with collect_stats=True.
-        result.seq_min, result.seq_max = mn, mx
-        # append commit: rebases automatically under concurrent writers
-        new_snap = table.commit(
-            delta, touched, result.to_lineage(), new_schema=evolved,
-            run_id=run_id, batch_id=batch_id, append=True,
-            new_file_stats=per_file,
-        )
-        result.snapshot_id = new_snap.snapshot_id
-        if poison_cache is not None:
-            poison_cache.unpersist()
-        return result
-
-    # ---- stats / COW path: exact one-row-per-key dedup, then classify ----
-    if not already_deduped:
-        b = lww_dedup(b, key_cols, order_in_batch)
-    b, n_poison, poison_cache = _transform_and_quarantine(
-        b, transform_after_dedup, dead_letter, run_id, batch_id
-    )
-    b = (
-        b.withColumn(DELETED_COL, F.col(op_col) == F.lit("d"))
-        .withColumnRenamed(seq_col, SEQ_COL)
-    )
-    if rev_col != REV_COL:
-        b = b.withColumnRenamed(rev_col, REV_COL)
-    b = b.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
-
-    payload_fields = [
-        f
-        for f in b.schema.fields
-        if f.name not in TRANSIENT_COLS and f.name not in ENGINE_COLS
-    ]
-    evolved = evolve_schema(snap.schema, with_engine_schema(T.StructType(payload_fields)))
-
-    b = b.persist()
-    ex_cache = None
-    try:
-        touched = [r[0] for r in b.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            new_snap = table.commit(
-                {}, [], MergeResult(skipped=False).to_lineage(), run_id=run_id, batch_id=batch_id
-            )
-            return MergeResult(skipped=False, snapshot_id=new_snap.snapshot_id)
-
-        existing = None
-        if collect_stats or mode != "mor" or cdf is not None:
-            existing = table.read_buckets(touched)
-
-        stats_row = None
-        ex_keys = None
-        if collect_stats or cdf is not None:
-            # LWW-resolved LIVE pre-state of the touched buckets. Live = the
-            # RESOLVED winner is non-deleted (not "any version non-deleted"):
-            # after delete-then-reinsert the reinsert must classify as an
-            # insert, and a delete of an already-tombstoned key must not
-            # count as a delete. Narrow (keys+engine) when only stats need
-            # it; full width when CDF pre-images do.
-            src = (
-                align_to_schema(existing, evolved)
-                if cdf is not None
-                else existing.select(*key_cols, SEQ_COL, REV_COL, DELETED_COL)
-            )
-            ex = with_rev_gen(src, rev_col=REV_COL)
-            ex = lww_dedup(ex, key_cols, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
-            if collect_stats and cdf is not None:
-                # both consumers (CDF classification join + stats ex_keys
-                # join) read the same pre-state scan+dedup: persist it so
-                # the touched-bucket read and LWW run once per batch
-                ex_cache = ex.persist()
-                ex = ex_cache
-            ex_live = ex.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-            ex_keys = ex_live.select(*key_cols).withColumn("_m", F.lit(1))
-        if cdf is not None:
-            from couch_to_mongo_spark.operators.cdf import classify_changes
-
-            changes, cdf_cache = classify_changes(
-                align_to_schema(b, evolved),
-                ex,  # RESOLVED winners incl. tombstones (see classify docstring)
-                list(key_cols),
-                DELETED_COL,
-                [f.name for f in evolved.fields],
-                run_id,
-                batch_id,
-            )
-            # written BEFORE the commit to a deterministic per-batch dir
-            # (overwrite): crash-replay rewrites identical content; orphan
-            # rows of a never-committed batch are excluded by fence-aware
-            # reads (ChangeFeedLog.read committed_only)
-            cdf.append(changes, run_id, batch_id)
-            cdf_cache.unpersist()
-        if collect_stats:
-            # one-pass classification of batch rows against existing live keys
-            cls = b.select(*key_cols, DELETED_COL, SEQ_COL).join(ex_keys, key_cols, "left")
-            is_del = F.col(DELETED_COL)
-            matched = F.col("_m").isNotNull()
-            stats_row = cls.agg(
-                F.min(SEQ_COL).alias("seq_min"),
-                F.max(SEQ_COL).alias("seq_max"),
-                F.count(F.when(~is_del & ~matched, 1)).alias("n_inserts"),
-                F.count(F.when(~is_del & matched, 1)).alias("n_updates"),
-                F.count(F.when(is_del & matched, 1)).alias("n_deletes"),
-            ).collect()[0]
-
-        if mode == "mor":
-            # append deduped batch (with tombstones) as delta files
-            new_rows = align_to_schema(b, evolved)
-        else:
-            # --- union + LWW: existing vs batch rows, batch wins ties ---
-            ex = align_to_schema(existing, evolved).withColumn("_src", F.lit(0))
-            ba = align_to_schema(b, evolved).withColumn("_src", F.lit(1))
-            combined = ex.unionByName(ba)
-            combined = with_rev_gen(combined, rev_col=REV_COL)
-            winners = lww_dedup(combined, key_cols, [SEQ_COL, "rev_gen", REV_COL, "_src"])
-            new_rows = winners.drop("rev_gen", "_src")
-        new_rows = new_rows.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
-
-        n_parts = max(len(touched), 1) * max(files_per_bucket, 1)
-        if files_per_bucket > 1:
-            # salt hash seeded independently of the bucket hash (see
-            # bucket_partitioned_lww): same-hash double-mod degenerates to a
-            # constant salt per bucket whenever files_per_bucket | n_buckets
-            new_rows = new_rows.repartition(
-                n_parts,
-                F.col(BUCKET_COL),
-                F.pmod(F.xxhash64(F.col(key_cols[0]), F.lit(1)), F.lit(files_per_bucket)),
-            )
-        else:
-            new_rows = new_rows.repartition(n_parts, F.col(BUCKET_COL))
-
-        new_files = table.write_bucketed(
-            new_rows, snapshot_hint=f"s{snap.version + 1:08d}", n_buckets=n_buckets
-        )
-
-        result = MergeResult(skipped=False, touched_buckets=len(touched), n_poison=n_poison)
-        # footer pass always runs: per-file seq bounds feed the snapshot's
-        # scan-pruning stats even when row classification came from the join
-        rows, mn, mx, per_file = _footer_seq_stats(table, new_files)
-        if stats_row is None:
-            result.rows_applied = rows
-            result.seq_min = raw_range["mn"] if raw_range is not None else mn
-            result.seq_max = raw_range["mx"] if raw_range is not None else mx
-        if stats_row is not None:
-            result.n_inserts = stats_row["n_inserts"]
-            result.n_updates = stats_row["n_updates"]
-            result.n_deletes = stats_row["n_deletes"]
-            result.rows_applied = (
-                stats_row["n_inserts"] + stats_row["n_updates"] + stats_row["n_deletes"]
-            )
-            result.seq_min = raw_range["mn"] if raw_range is not None else stats_row["seq_min"]
-            result.seq_max = raw_range["mx"] if raw_range is not None else stats_row["seq_max"]
-        new_snap = table.commit(
-            new_files,
-            touched,
-            result.to_lineage(),
-            new_schema=evolved,
-            run_id=run_id,
-            batch_id=batch_id,
-            # MOR appends deltas (always rebaseable); COW replaces the
-            # touched buckets it rewrote from `snap` (conflicts if a
-            # concurrent commit touched them since).
-            append=(mode == "mor"),
-            base_version=None if mode == "mor" else snap.version,
-            new_file_stats=per_file,
-        )
-        result.snapshot_id = new_snap.snapshot_id
-        return result
     finally:
-        b.unpersist()
-        if ex_cache is not None:
-            ex_cache.unpersist()
         if poison_cache is not None:
             poison_cache.unpersist()
+    touched = sorted(delta.keys())
+    rows, _, _, per_file = _footer_seq_stats(table, delta)
+    result = MergeResult(
+        skipped=False, rows_applied=rows, touched_buckets=len(touched), n_poison=n_poison
+    )
+    if touched or n_poison:
+        # a batch that wrote and quarantined nothing was empty, and an
+        # empty batch may be planned away entirely (empty local relation),
+        # leaving the Observation without a row
+        src = src_range.get
+        result.seq_min, result.seq_max = src["seq_min"], src["seq_max"]
+    if cdf is not None:
+        result.n_inserts, result.n_updates, result.n_deletes = _emit_changes(
+            table, cdf, delta, snap.version, evolved, key_cols, run_id, batch_id
+        )
+    # append commit: rebases automatically under concurrent writers
+    new_snap = table.commit(
+        delta, touched, result.to_lineage(), new_schema=evolved,
+        run_id=run_id, batch_id=batch_id, append=True,
+        new_file_stats=per_file,
+    )
+    result.snapshot_id = new_snap.snapshot_id
+    return result
+
+
+def _fenced_result(table: LakeTable, run_id: str, batch_id: int) -> MergeResult:
+    """The skip result of an already-committed batch, carrying the
+    committing snapshot's lineage when it is still resolvable (the run's
+    high-water batch, snapshot not expired)."""
+    sid = table.fence_snapshot_id(run_id, batch_id)
+    if sid is None:
+        return MergeResult(skipped=True)
+    try:
+        lin = table.snapshot_by_id(sid).lineage
+    except FileNotFoundError:  # expired by snapshot retention
+        return MergeResult(skipped=True, snapshot_id=sid)
+    names = {f.name for f in fields(MergeResult)} - {"skipped", "snapshot_id"}
+    return MergeResult(
+        skipped=True, snapshot_id=sid, **{k: v for k, v in lin.items() if k in names}
+    )
+
+
+def _emit_changes(
+    table: LakeTable,
+    cdf,
+    delta: dict[int, list[str]],
+    base_version: int,
+    evolved: T.StructType,
+    key_cols: list[str],
+    run_id: str,
+    batch_id: int,
+) -> tuple[int, int, int]:
+    """Classify the just-written batch against the touched buckets' LWW-
+    resolved pre-state at ``base_version`` and append the semantic change
+    rows to ``cdf``. Returns (n_inserts, n_updates, n_deletes) — counts of
+    the emitted changes, observed during the feed write.
+
+    Runs after the write and before the commit: the batch side is read
+    back from the freshly written delta files (the winners exactly as
+    committed, no second dedup or transform pass), and the feed is written
+    to a deterministic per-batch dir (overwrite) — a crash-replay rewrites
+    identical content; orphan rows of a never-committed batch are excluded
+    by fence-aware reads (ChangeFeedLog.read committed_only)."""
+    if not delta:
+        return 0, 0, 0
+    batch = table.spark.read.schema(evolved).parquet(
+        *[os.path.join(table.path, f) for fl in delta.values() for f in fl]
+    )
+    # RESOLVED winners incl. tombstones (see classify_changes docstring)
+    pre = with_rev_gen(
+        align_to_schema(table.read_buckets(sorted(delta), version=base_version), evolved),
+        rev_col=REV_COL,
+    )
+    pre = lww_dedup(pre, key_cols, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+    changes, cache = classify_changes(
+        batch, pre, key_cols, DELETED_COL, [f.name for f in evolved.fields], run_id, batch_id
+    )
+    counts = Observation()
+    kind = F.col(CHANGE_TYPE_COL)
+    changes = changes.observe(
+        counts,
+        *[
+            F.count(F.when(kind == t, 1)).alias(t)
+            for t in ("insert", "update_postimage", "delete")
+        ],
+    )
+    try:
+        cdf.append(changes, run_id, batch_id)
+    finally:
+        cache.unpersist()
+    c = counts.get
+    return c["insert"], c["update_postimage"], c["delete"]
 
 
 def read_state(
@@ -392,7 +301,10 @@ def read_state(
 
     Merge-on-read resolution: LWW over (_seq, rev_gen, _rev) collapses the
     multi-version delta rows; tombstone winners are then dropped. On a
-    compacted/COW table the dedup is a no-op pass."""
+    compacted table the dedup is a no-op pass. A key filter on the result
+    (``read_state(t).where(conv_id == c)``) reaches the parquet scan: LWW
+    is per key, and the fold emits the keys from its group keys, so
+    Catalyst pushes the predicate below the aggregate."""
     df = table.read(version)
     key_cols = [c for c in key_cols if c in df.columns]
     if SEQ_COL in df.columns and key_cols:
@@ -402,7 +314,6 @@ def read_state(
     if DELETED_COL in df.columns:
         df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
     return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
-
 
 
 def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, batch_id):
@@ -428,6 +339,7 @@ def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, bat
         n_poison = dead_letter.append(poison, run_id, batch_id)
         b = poison_cache.where(F.col(POISON_COL).isNull()).drop(POISON_COL)
     return b, n_poison, poison_cache
+
 
 def _one_footer(path: str) -> tuple[int, int | None, int | None]:
     """(rows, seq_min, seq_max) of one parquet file from its footer."""

@@ -15,7 +15,7 @@ atomic strict-replace commit:
   rescale without replaying applied batches;
 - any concurrent merge that lands between our snapshot read and commit
   raises CommitConflict (its rows would otherwise be lost in the re-key),
-  and the caller re-runs — same safety rule as COW strict replace.
+  and the caller re-runs — the strict-replace commit's safety rule.
 
 The rewrite itself folds multi-version MOR deltas with the same LWW kernel
 compaction uses (tombstones kept — out-of-order replays must still lose to

@@ -91,8 +91,6 @@ class CdcPipeline:
         normalize: bool = True,
         since_seq: int | None = None,
         files_per_bucket: int = 1,
-        collect_stats: bool = True,
-        mode: str = "mor",
         compact_threshold: int = 8,
         compact_async: bool = True,
         quarantine_poison: bool = False,
@@ -113,8 +111,6 @@ class CdcPipeline:
         self.normalize = normalize
         self.since_seq = since_seq
         self.files_per_bucket = files_per_bucket
-        self.collect_stats = collect_stats
-        self.mode = mode
         self.compact_threshold = compact_threshold
         self.compact_async = compact_async
         self.compactions = 0
@@ -244,8 +240,6 @@ class CdcPipeline:
             run_id=self.run_id,
             batch_id=batch_id,
             files_per_bucket=self.files_per_bucket,
-            collect_stats=self.collect_stats,
-            mode=self.mode,
             transform_after_dedup=transform,
             dead_letter=self.dead_letter,
             cdf=self.cdf,
@@ -254,8 +248,8 @@ class CdcPipeline:
             self.batches_fenced += 1
             # a crash between snapshot commit and lineage append loses the
             # batch's lineage row; the fenced replay backfills it from the
-            # committed snapshot's lineage (which stores the MergeResult)
-            self._backfill_lineage(batch_id)
+            # committed snapshot's lineage the skip result carries
+            self._backfill_lineage(batch_id, res)
             self._refresh_view(batch_df, batch_id, res)
             return
         self.batches_applied += 1
@@ -276,9 +270,10 @@ class CdcPipeline:
 
     def _refresh_view(self, batch_df: DataFrame, batch_id: int, res) -> None:
         """Refresh the maintained corpus view for this batch's touched
-        conversations. Stamped with the batch's max seq (from lineage
-        stats when collected, else one bounded agg); runs under the
-        pipeline run_id so the view's fences track the primary's.
+        conversations. Stamped with the batch's source max seq from the
+        merge result's lineage (a fenced replay carries the committed
+        snapshot's); runs under the pipeline run_id so the view's fences
+        track the primary's.
 
         With ``view_refresh_every=K > 1`` the per-batch refresh is
         skipped; every K-th batch triggers a catch-up that derives the
@@ -295,14 +290,11 @@ class CdcPipeline:
             if (batch_id + 1) % self.view_refresh_every == 0:
                 self.view.catch_up(run_id=f"{self.run_id}:catchup")
             return
-        seq_max = getattr(res, "seq_max", None)
-        if seq_max is None:
-            seq_max = batch_df.agg(F.max("seq")).first()[0]
-        if seq_max is None:  # empty batch: nothing touched
+        if res.seq_max is None:  # empty batch, or no resolvable lineage
             return
         self.view.refresh(
             batch_df.select("conv_id"),
-            seq=int(seq_max),
+            seq=int(res.seq_max),
             run_id=self.run_id,
             batch_id=batch_id,
         )
@@ -347,11 +339,9 @@ class CdcPipeline:
         merges, so the racing thread is safe; at most one compaction runs
         at a time. The maintained view's MOR deltas (one per touched view
         bucket per refresh — unbounded without folding) compact in the
-        same guarded pass: view refreshes always merge in MOR mode, so
-        the view leg is gated on compact_threshold only, not the
-        primary's mode."""
-        do_primary = self.mode == "mor" and bool(self.compact_threshold)
-        do_view = self.view is not None and bool(self.compact_threshold)
+        same guarded pass, gated on the same compact_threshold."""
+        do_primary = bool(self.compact_threshold)
+        do_view = self.view is not None and do_primary
         applied_now = self.batches_applied
         do_expire = bool(
             self.retention_keep_last
@@ -412,24 +402,20 @@ class CdcPipeline:
             # the primary's seq hwm under the dedicated catch-up run key.
             self.view.catch_up(run_id=f"{self.run_id}:catchup")
 
-    def _backfill_lineage(self, batch_id: int) -> None:
-        if self.lineage.has(self.run_id, batch_id):
+    def _backfill_lineage(self, batch_id: int, res) -> None:
+        if res.snapshot_id is None or self.lineage.has(self.run_id, batch_id):
             return
-        sid = self.table.fence_snapshot_id(self.run_id, batch_id)
-        if sid is None:
-            return
-        lin = self.table.snapshot_by_id(sid).lineage
         self.lineage.append(
             self.run_id,
             batch_id,
-            seq_min=lin.get("seq_min"),
-            seq_max=lin.get("seq_max"),
-            rows_applied=lin.get("rows_applied", 0),
-            n_inserts=lin.get("n_inserts", 0),
-            n_updates=lin.get("n_updates", 0),
-            n_deletes=lin.get("n_deletes", 0),
-            snapshot_id=sid,
-            partition_stats={"touched_buckets": lin.get("touched_buckets", 0), "backfilled": 1},
+            seq_min=res.seq_min,
+            seq_max=res.seq_max,
+            rows_applied=res.rows_applied,
+            n_inserts=res.n_inserts,
+            n_updates=res.n_updates,
+            n_deletes=res.n_deletes,
+            snapshot_id=res.snapshot_id,
+            partition_stats={"touched_buckets": res.touched_buckets, "backfilled": 1},
         )
 
     # ---------------- drivers ----------------

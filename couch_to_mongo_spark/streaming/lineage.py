@@ -14,26 +14,35 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
+from datetime import datetime, timezone
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-LINEAGE_COLUMNS = [
-    "run_id",
-    "batch_id",
-    "seq_min",
-    "seq_max",
-    "rows_applied",
-    "n_inserts",
-    "n_updates",
-    "n_deletes",
-    "snapshot_id",
-    "partition_stats",
-    "committed_at",
-]
+# one fixed physical schema for every lineage file: a row whose optional
+# fields are None (an empty batch's seq range, unclassified counts) must
+# still write int64 columns, or a later multi-file read trips over a
+# null-typed column
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("batch_id", pa.int64()),
+        ("seq_min", pa.int64()),
+        ("seq_max", pa.int64()),
+        ("rows_applied", pa.int64()),
+        ("n_inserts", pa.int64()),
+        ("n_updates", pa.int64()),
+        ("n_deletes", pa.int64()),
+        ("snapshot_id", pa.int64()),
+        ("partition_stats", pa.string()),
+        ("committed_at", pa.timestamp("us")),
+    ]
+)
+LINEAGE_COLUMNS = LINEAGE_SCHEMA.names
 
 
 class LineageLog:
@@ -49,30 +58,31 @@ class LineageLog:
         seq_min: int | None,
         seq_max: int | None,
         rows_applied: int,
-        n_inserts: int = 0,
-        n_updates: int = 0,
-        n_deletes: int = 0,
+        n_inserts: int | None = None,
+        n_updates: int | None = None,
+        n_deletes: int | None = None,
         snapshot_id: int | None = None,
         partition_stats: dict[str, Any] | None = None,
     ) -> str:
+        """One lineage row. ``n_*`` stay null unless the batch was
+        classified (only merges with a change feed attached are)."""
         row = {
             "run_id": run_id,
             "batch_id": int(batch_id),
             "seq_min": seq_min,
             "seq_max": seq_max,
             "rows_applied": int(rows_applied),
-            "n_inserts": int(n_inserts),
-            "n_updates": int(n_updates),
-            "n_deletes": int(n_deletes),
+            "n_inserts": n_inserts,
+            "n_updates": n_updates,
+            "n_deletes": n_deletes,
             "snapshot_id": snapshot_id,
             "partition_stats": json.dumps(partition_stats or {}),
             # audit timestamp — NOT in the data path (determinism lives there)
-            "committed_at": pd.Timestamp.utcnow().tz_localize(None),
+            "committed_at": datetime.now(timezone.utc).replace(tzinfo=None),
         }
-        pdf = pd.DataFrame([row])[LINEAGE_COLUMNS]
         name = f"lineage-{run_id}-{batch_id:08d}-{uuid.uuid4().hex[:6]}.parquet"
         p = os.path.join(self.path, name)
-        pdf.to_parquet(p, index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
+        pq.write_table(pa.Table.from_pylist([row], schema=LINEAGE_SCHEMA), p)
         return p
 
     def has(self, run_id: str, batch_id: int) -> bool:

@@ -180,7 +180,7 @@ def _cache_put(p: str, entry: tuple[list[str], dict[str, list]]) -> None:
 
 
 class LakeTable:
-    """A bucketed copy-on-write table with an atomic snapshot log."""
+    """A bucketed parquet table with an atomic snapshot log."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -507,16 +507,11 @@ class LakeTable:
         downstream consumer polls this instead of re-reading the table.
         Rows are raw multi-version deltas (tombstones included) in the
         later snapshot's schema. Any rewrite-style commit — one that
-        REMOVED files relative to its parent (compaction, COW merge,
-        strict replace) — is excluded, because its new files re-materialize
-        previously-delivered rows; matching on lineage op alone would
-        re-deliver every touched bucket of a COW table as "appended".
-        Consequently the changelog is precise on MOR tables and
-        conservative on COW ones (a rewrite commit's genuinely-new rows
-        are folded into the rewritten files and skipped — consume the
-        table state, not the changelog, for COW). Requires snapshot
-        retention (expire_snapshots keep_last) to cover the consumer's
-        lag."""
+        REMOVED files relative to its parent (compaction, rescale, strict
+        replace) — is excluded, because its new files re-materialize
+        previously-delivered rows. Merges only append, so every merged
+        row is delivered exactly once. Requires snapshot retention
+        (expire_snapshots keep_last) to cover the consumer's lag."""
         snap = self.snapshot(version)
         target = snap.version
         base = self.snapshot(since_version)
@@ -593,7 +588,7 @@ class LakeTable:
           buckets become ``new_files + (prev - replaced_files)`` — files
           appended by concurrent merges *after* our read survive the
           rewrite. Also always rebaseable.
-        - neither (strict replace: bootstrap / COW merge): touched buckets
+        - neither (strict replace: bootstrap / rescale): touched buckets
           become exactly ``new_files``; rebase is only safe if no concurrent
           commit modified a touched bucket since ``base_version`` — if one
           did, its rows would be silently dropped, so we raise

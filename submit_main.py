@@ -54,7 +54,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--max-files-per-trigger", type=int, default=None)
     p.add_argument("--since-seq", type=int, default=None)
-    p.add_argument("--no-stats", action="store_true")
     p.add_argument("--emit-cdf", action="store_true",
                    help="write the row-level change feed per batch")
     p.add_argument("--maintain-view", default=None, metavar="PATH",
@@ -195,7 +194,6 @@ def main(argv: list[str] | None = None) -> int:
             n_buckets=args.n_buckets,
             max_files_per_trigger=args.max_files_per_trigger,
             since_seq=getattr(args, "since_seq", None),
-            collect_stats=not getattr(args, "no_stats", False),
             emit_cdf=getattr(args, "emit_cdf", False),
             maintain_view=getattr(args, "maintain_view", None),
             view_refresh_every=getattr(args, "view_refresh_every", 1),

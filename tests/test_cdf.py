@@ -241,7 +241,7 @@ def test_cdf_feeds_a_downstream_replica_stream(spark, tmp_path):
         )
         from couch_to_mongo_spark.operators.merge import merge_batch as mb
 
-        mb(mirror, rows, run_id="mirror", batch_id=batch_id, collect_stats=False)
+        mb(mirror, rows, run_id="mirror", batch_id=batch_id)
 
     q = (
         feed_as_stream(spark, cdf.root, feed_schema, max_files_per_trigger=2)

@@ -101,8 +101,7 @@ def test_compaction_survives_racing_merge(spark, tmp_table_path):
     base = make_changes_df(n_events=600, n_convs=8, seed=43, delete_frac=0.0)
     for i, lo in enumerate(range(0, 600, 200)):
         part = base[(base.seq >= lo) & (base.seq < lo + 200)]
-        merge_batch(table, _batch(spark, part), run_id="r", batch_id=i,
-                    collect_stats=False)
+        merge_batch(table, _batch(spark, part), run_id="r", batch_id=i)
 
     late = make_changes_df(n_events=100, n_convs=8, seed=44, delete_frac=0.0,
                            seq_start=10_000)
@@ -113,8 +112,7 @@ def test_compaction_survives_racing_merge(spark, tmp_table_path):
         if not raced["done"] and snap.lineage.get("op") == "compact":
             raced["done"] = True
             other = LakeTable(spark, table.path)
-            merge_batch(other, _batch(spark, late), run_id="r", batch_id=3,
-                        collect_stats=False)
+            merge_batch(other, _batch(spark, late), run_id="r", batch_id=3)
         return original(snap)
 
     table._write_snapshot = racing

@@ -19,7 +19,7 @@ from couch_to_mongo_spark.tableformat import LakeTable
 
 def _apply(spark, table, pdf, bid):
     return merge_batch(
-        table, spark.createDataFrame(pdf), run_id="r", batch_id=bid, collect_stats=False
+        table, spark.createDataFrame(pdf), run_id="r", batch_id=bid
     )
 
 

@@ -137,6 +137,77 @@ def test_fast_merge_single_shuffle(spark):
         assert "WindowGroupLimit" in plan, plan
 
 
+def test_merge_starts_no_job_besides_its_write(spark, tmp_path):
+    """Without a change feed, merge_batch runs no Spark job besides its own
+    bucketed write, which AQE runs as two jobs (the bucket shuffle's map
+    stage, then the write). Lineage rides on that write: the source seq
+    range from an Observation, rows applied from the parquet footers — no
+    seq-range aggregate, touched-bucket collect or classification join."""
+    from couch_to_mongo_spark.gen import make_changes_df
+    from couch_to_mongo_spark.operators.merge import merge_batch, with_engine_schema
+    from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
+    from couch_to_mongo_spark.tableformat import LakeTable
+
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=4
+    )
+    pdf = make_changes_df(n_events=600, n_convs=10, seed=1)
+    sc = spark.sparkContext
+    for i in range(2):  # the second batch lands on a non-empty table
+        group = f"merge-jobs-{tmp_path.name}-{i}"
+        sc.setJobGroup(group, "merge_batch")
+        try:
+            res = merge_batch(
+                table, spark.createDataFrame(pdf.iloc[i * 300 : (i + 1) * 300]),
+                run_id="r", batch_id=i,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 1 <= len(jobs) <= 2, jobs
+        assert (res.seq_min, res.seq_max) == (i * 300, i * 300 + 299)
+        assert res.rows_applied > 0
+        assert (res.n_inserts, res.n_updates, res.n_deletes) == (None, None, None)
+
+
+def test_read_state_key_filter_reaches_scan(spark, tmp_path):
+    """A point lookup over the merge-on-read fold filters in the parquet
+    scan: the LWW fold emits the keys from its group keys, so the conv
+    filter pushes below the aggregate (LWW is per key, so the rows are
+    the same as filtering the folded table)."""
+    from pyspark.sql import functions as F
+
+    from couch_to_mongo_spark.gen import make_changes_df
+    from couch_to_mongo_spark.operators.merge import (
+        merge_batch,
+        read_state,
+        with_engine_schema,
+    )
+    from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
+    from couch_to_mongo_spark.tableformat import LakeTable
+
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=4
+    )
+    pdf = make_changes_df(n_events=900, n_convs=12, seed=5, delete_frac=0.1)
+    for i in range(3):
+        merge_batch(
+            table, spark.createDataFrame(pdf.iloc[i * 300 : (i + 1) * 300]),
+            run_id="r", batch_id=i,
+        )
+    c = pdf["conv_id"].iloc[0]
+    df = read_state(table).where(F.col("conv_id") == c)
+    # pushed_filters splits entries on commas: EqualTo(conv_id,c) -> 2
+    pf = pushed_filters(df)
+    assert "EqualTo(conv_id" in pf and f"{c})" in pf, formatted_plan(df)
+    keys = ["conv_id", "turn_idx"]
+    whole = read_state(table).toPandas()
+    want = whole[whole["conv_id"] == c].sort_values(keys).reset_index(drop=True)
+    got = df.toPandas().sort_values(keys).reset_index(drop=True)
+    assert len(want) > 0
+    assert got.equals(want)
+
+
 def test_emb_lsh_pairs_no_cartesian_and_local_expansion(spark):
     """The label-free embedding verify must be bucket-collision bound: no
     CartesianProduct anywhere, probe expansion local (Generate), and the

@@ -96,8 +96,8 @@ def test_engine_matches_fold_on_random_case(spark, tmp_path):
     # apply in 3 batches, then replay batch 1 under a new run (at-least-once)
     thirds = [pdf[pdf.seq % 3 == i] for i in range(3)]
     for i, b in enumerate(thirds):
-        merge_batch(table, spark.createDataFrame(b), run_id="r", batch_id=i, collect_stats=False)
-    merge_batch(table, spark.createDataFrame(thirds[1]), run_id="r2", batch_id=0, collect_stats=False)
+        merge_batch(table, spark.createDataFrame(b), run_id="r", batch_id=i)
+    merge_batch(table, spark.createDataFrame(thirds[1]), run_id="r2", batch_id=0)
 
     model = fold([(r[0], r[1], r[2], r[3], r[4]) for r in rows])
     got = read_state(table).toPandas()

@@ -32,7 +32,6 @@ def _apply(spark, table, pdf, run_id="r", batch_start=0):
             spark.createDataFrame(pdf.iloc[lo : lo + 400]),
             run_id=run_id,
             batch_id=batch_start + i,
-            collect_stats=False,
         )
     return i + 1
 
@@ -73,7 +72,6 @@ def test_merges_and_fences_work_across_rescale(spark, tmp_table_path):
         spark.createDataFrame(pdf.iloc[0:400]),
         run_id="runA",
         batch_id=0,
-        collect_stats=False,
     )
     assert res.skipped
 
@@ -84,7 +82,6 @@ def test_merges_and_fences_work_across_rescale(spark, tmp_table_path):
         spark.createDataFrame(late),
         run_id="runA",
         batch_id=n_batches,
-        collect_stats=False,
     )
     assert table.snapshot().n_buckets == 8
     combined = expected_state(pd.concat([pdf, late], ignore_index=True), normalize=False)
@@ -118,7 +115,6 @@ def test_rescale_conflicts_with_concurrent_merge(spark, tmp_table_path):
                 spark.createDataFrame(late),
                 run_id="r2",
                 batch_id=0,
-                collect_stats=False,
             )
         return original(snap)
 

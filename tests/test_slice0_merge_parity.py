@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.functions.normalize import normalize_text
+from couch_to_mongo_spark.operators.cdf import ChangeFeedLog
 from couch_to_mongo_spark.operators.merge import merge_batch, read_state, with_engine_schema
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
@@ -18,18 +21,27 @@ def spark_changes(spark, pdf: pd.DataFrame):
     return spark.createDataFrame(pdf)
 
 
-def apply_one_batch(spark, path, pdf, run_id="r1", batch_id=0, n_buckets=8):
+def change_feed(spark, path):
+    """Insert/update/delete counts are filled only for merges with a
+    change feed attached — the tests asserting them attach one."""
+    return ChangeFeedLog(spark, os.path.join(path, "_changes"))
+
+
+def apply_one_batch(spark, path, pdf, run_id="r1", batch_id=0, n_buckets=8, cdf=False):
     table = LakeTable.create(
         spark, path, with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=n_buckets
     )
     batch = spark_changes(spark, pdf).withColumn("text", normalize_text(F.col("text")))
-    res = merge_batch(table, batch, run_id=run_id, batch_id=batch_id)
+    res = merge_batch(
+        table, batch, run_id=run_id, batch_id=batch_id,
+        cdf=change_feed(spark, path) if cdf else None,
+    )
     return table, res
 
 
 def test_single_batch_parity(spark, tmp_table_path):
     pdf = make_changes_df(n_events=3000, n_convs=50, seed=7)
-    table, res = apply_one_batch(spark, tmp_table_path, pdf)
+    table, res = apply_one_batch(spark, tmp_table_path, pdf, cdf=True)
     assert not res.skipped
     assert res.snapshot_id == 1
     assert res.seq_min == 0 and res.seq_max == 2999
@@ -48,7 +60,9 @@ def test_two_batches_parity_and_updates(spark, tmp_table_path):
     b1, b2 = pdf[pdf.seq < 2000], pdf[pdf.seq >= 2000]
     table, res1 = apply_one_batch(spark, tmp_table_path, b1)
     batch2 = spark_changes(spark, b2).withColumn("text", normalize_text(F.col("text")))
-    res2 = merge_batch(table, batch2, run_id="r1", batch_id=1)
+    res2 = merge_batch(
+        table, batch2, run_id="r1", batch_id=1, cdf=change_feed(spark, tmp_table_path)
+    )
     assert res2.n_updates > 0  # overlapping keys across batches
 
     actual = read_state(table).toPandas()
@@ -116,7 +130,9 @@ def test_deletes_produce_tombstones(spark, tmp_table_path):
     b1, b2 = pdf[pdf.seq < 1500], pdf[pdf.seq >= 1500]
     table, _ = apply_one_batch(spark, tmp_table_path, b1)
     batch2 = spark_changes(spark, b2).withColumn("text", normalize_text(F.col("text")))
-    res2 = merge_batch(table, batch2, run_id="r1", batch_id=1)
+    res2 = merge_batch(
+        table, batch2, run_id="r1", batch_id=1, cdf=change_feed(spark, tmp_table_path)
+    )
     assert res2.n_deletes > 0
     assert res2.seq_min == 1500 and res2.seq_max == 2999
     raw = table.read().toPandas()
@@ -139,3 +155,22 @@ def test_touched_bucket_pruning(spark, tmp_table_path):
         b for b in files_before if files_before[b] == files_after.get(b)
     ]
     assert len(unchanged) >= len(files_before) - 1
+
+
+def test_empty_batch_commits_fence_only(spark, tmp_table_path):
+    """An empty batch commits only its fence entry: no files, no seq range,
+    nothing applied — also when the optimizer plans the empty input away
+    entirely (an empty local relation runs no job at all)."""
+    pdf = make_changes_df(n_events=500, n_convs=10, seed=17)
+    table, _ = apply_one_batch(spark, tmp_table_path, pdf)
+    files = table.snapshot().files
+    batch = spark_changes(spark, pdf)
+    empties = [spark.createDataFrame([], batch.schema), batch.where(F.col("seq") < 0)]
+    for batch_id, empty in enumerate(empties, start=1):
+        res = merge_batch(table, empty, run_id="r1", batch_id=batch_id)
+        assert not res.skipped
+        assert (res.rows_applied, res.touched_buckets) == (0, 0)
+        assert (res.seq_min, res.seq_max) == (None, None)
+        assert table.is_batch_committed("r1", batch_id)
+    assert table.snapshot().files == files
+    assert_state_parity(read_state(table).toPandas(), expected_state(pdf))

@@ -79,13 +79,11 @@ def test_timestamp_time_travel(spark, tmp_path):
         spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=4
     )
     halves = [pdf[pdf.seq < 400], pdf[pdf.seq >= 400]]
-    merge_batch(table, spark.createDataFrame(halves[0]), run_id="r", batch_id=0,
-                collect_stats=False)
+    merge_batch(table, spark.createDataFrame(halves[0]), run_id="r", batch_id=0)
     time.sleep(0.05)
     t_mid = time.time()
     time.sleep(0.05)
-    merge_batch(table, spark.createDataFrame(halves[1]), run_id="r", batch_id=1,
-                collect_stats=False)
+    merge_batch(table, spark.createDataFrame(halves[1]), run_id="r", batch_id=1)
 
     assert table.version_as_of(t_mid) == 1
     assert table.version_as_of(time.time()) == table.latest_version()

@@ -161,7 +161,7 @@ def test_compaction_folds_files_and_preserves_state(spark, tmp_path):
         b = spark.createDataFrame(pdf[pdf.seq % 6 == i]).withColumn(
             "text", normalize_text(F.col("text"))
         )
-        merge_batch(table, b, run_id="r", batch_id=i, collect_stats=False)
+        merge_batch(table, b, run_id="r", batch_id=i)
     before = max(len(fl) for fl in table.snapshot().files.values())
     assert before >= 5
 
@@ -214,16 +214,23 @@ def test_multimodal_plumbing(spark):
 
 
 def test_merge_stats_classify_delete_reinsert(spark, tmp_path):
-    """Lineage classification resolves the LWW winner (ADVICE r01): a
-    reinsert after delete counts as an insert, and deleting an
-    already-tombstoned key does not count as a delete."""
-    from couch_to_mongo_spark.operators.merge import merge_batch, with_engine_schema
+    """Lineage classification (filled for merges with a change feed
+    attached) resolves the LWW winner (ADVICE r01): a reinsert after
+    delete counts as an insert, and deleting an already-tombstoned key
+    does not count as a delete."""
+    from couch_to_mongo_spark.operators.cdf import ChangeFeedLog
+    from couch_to_mongo_spark.operators.merge import with_engine_schema
+    from couch_to_mongo_spark.operators.merge import merge_batch as _merge
     from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
     from couch_to_mongo_spark.tableformat import LakeTable
 
     table = LakeTable.create(
         spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=2
     )
+    cdf = ChangeFeedLog(spark, str(tmp_path / "cdf"))
+
+    def merge_batch(*a, **k):
+        return _merge(*a, cdf=cdf, **k)
 
     def b(rows):
         return spark.createDataFrame(
@@ -246,6 +253,28 @@ def test_merge_stats_classify_delete_reinsert(spark, tmp_path):
     assert (r4.n_inserts, r4.n_updates, r4.n_deletes) == (0, 0, 0)
 
 
+def test_lineage_reads_with_null_first_row(spark, tmp_path):
+    """Lineage files share one int64 schema: a row with a null seq range
+    (an empty batch) and null counts (no change feed attached) written
+    first must not break the multi-file reads."""
+    from couch_to_mongo_spark.streaming.lineage import LineageLog
+
+    log = LineageLog(str(tmp_path / "lineage"))
+    log.append("r", 0, seq_min=None, seq_max=None, rows_applied=0, snapshot_id=1)
+    log.append("r", 1, seq_min=3, seq_max=9, rows_applied=4, snapshot_id=2)
+    log.append(
+        "r", 2, seq_min=10, seq_max=12, rows_applied=2,
+        n_inserts=1, n_updates=1, n_deletes=0, snapshot_id=3,
+    )
+    rows = log.read(spark).orderBy("batch_id").collect()
+    assert [(r.seq_min, r.seq_max) for r in rows] == [(None, None), (3, 9), (10, 12)]
+    assert [(r.n_inserts, r.n_deletes) for r in rows] == [(None, None), (None, None), (1, 0)]
+    pdf = log.read_pandas().sort_values("batch_id")
+    assert pdf["seq_max"].isna().tolist() == [True, False, False]
+    assert pdf["n_updates"].isna().tolist() == [True, True, False]
+    assert log.last_seq() == 12
+
+
 def test_files_per_bucket_splits_hot_buckets_fast_path(spark, tmp_path):
     """files_per_bucket>1 must produce multiple files per bucket on the
     fast MOR path too (ADVICE r01: the salt was missing from the
@@ -261,7 +290,7 @@ def test_files_per_bucket_splits_hot_buckets_fast_path(spark, tmp_path):
     )
     merge_batch(
         table, spark.createDataFrame(pdf), run_id="r", batch_id=0,
-        files_per_bucket=4, collect_stats=False,
+        files_per_bucket=4,
     )
     files = table.snapshot().files
     assert any(len(fl) > 1 for fl in files.values()), files
