@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from couch_to_mongo_spark.functions import text as X
 from couch_to_mongo_spark.functions import vectors as V
 from couch_to_mongo_spark.functions.multimodal import attach_fake_payload, decode_media
-from couch_to_mongo_spark.operators.dedup import lww_dedup, salted_lww, with_rev_gen
+from couch_to_mongo_spark.operators.dedup import lww_dedup, with_rev_gen
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -120,19 +120,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) 
       FROM events)
 WHERE rn = 1
 """
-
-
-def q_salted_lww(spark, sf_dir):
-    """P1: explicit two-phase salted LWW — same result as q_lww_latest_state."""
-    ev = _t(spark, sf_dir, "events")
-    out = salted_lww(ev, ["user_id"], ["event_id"], n_salts=16, salt_col="event_id")
-    return out.select(
-        F.col("user_id"),
-        F.col("event_id").alias("last_event_id"),
-        F.col("event_type").alias("last_type"),
-        F.col("value").alias("last_value"),
-        _epoch("ts").alias("last_epoch"),
-    )
 
 
 def q_anti_join_new_keys(spark, sf_dir):
@@ -2019,7 +2006,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # bill a heavy query.
     return {
         "lww_latest_state": q_lww_latest_state,
-        "salted_lww": q_salted_lww,
         "anti_join_new_keys": q_anti_join_new_keys,
         "cdc_fold": q_cdc_fold,
         "engine_replay": q_engine_replay,
@@ -2084,7 +2070,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     return {
         "lww_latest_state": SQL_LWW,
-        "salted_lww": SQL_LWW,
         "anti_join_new_keys": SQL_ANTI,
         "checkpoint_top1": SQL_TOP1,
         "session_lifecycle": SQL_SESSION,

@@ -1,7 +1,5 @@
 from couch_to_mongo_spark.operators.dedup import (  # noqa: F401
     lww_dedup,
-    lww_dedup_window,
-    salted_lww,
     with_rev_gen,
 )
 from couch_to_mongo_spark.operators.components import (  # noqa: F401

@@ -6,7 +6,8 @@ batch (reference: ChangeFeedClient.java:136-150, 104-113). Our rendering:
 one row per ``(conv_id, turn_idx)`` ordered by ``(seq, rev generation,
 rev hash)`` descending.
 
-Four implementations, all deterministic and equivalent:
+Two implementations, deterministic and equivalent (tested against each
+other in tests/test_units.py):
 
 - :func:`lww_dedup` — ``max_by(struct(payload), struct(order))`` hash
   aggregation. **The read-side fold** (read_state, compaction, the
@@ -17,14 +18,6 @@ Four implementations, all deterministic and equivalent:
 - :func:`bucket_partitioned_lww` — bucket repartition, then a window LWW
   inside those partitions: **the merge's write-side kernel** (one shuffle
   shared with the bucketed write).
-- :func:`salted_lww` — explicit two-phase salted aggregation (north_rule's
-  "salted-hash repartition on conv_id"): phase 1 reduces per
-  ``(key, salt)``, phase 2 per key. Same result; the explicit form for
-  when partial aggregation is disabled or the reducer isn't algebraic.
-- :func:`lww_dedup_window` — ``row_number() over (partition by key order
-  by ...desc) = 1``. Readable, but shuffles every duplicate row to one
-  partition per key — kept for small-data parity tests and as the oracle
-  shape (DuckDB window).
 """
 
 from __future__ import annotations
@@ -73,47 +66,6 @@ def lww_dedup(
         *[F.col(c) if c in key_cols else F.col(f"_w.{c}").alias(c) for c in payload]
     )
 
-
-def salted_lww(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    n_salts: int = 32,
-    salt_col: str = "seq",
-) -> DataFrame:
-    """Explicit two-phase salted LWW reduction.
-
-    Phase 1: repartition on ``(key, salt)`` with ``salt = pmod(xxhash64(
-    salt_col), n_salts)`` and reduce; phase 2: reduce the ≤n_salts
-    survivors per key. Bounds any single reducer's input at
-    ``rows(key)/n_salts`` — the explicit skew defense the north_rule names.
-    """
-    payload = [c for c in df.columns]
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(n_salts)))
-    phase1 = (
-        salted.repartition(*[F.col(c) for c in key_cols], F.col("_salt"))
-        .groupBy(*key_cols, "_salt")
-        .agg(F.max_by(F.struct(*payload), _order_struct(order_cols)).alias("_w"))
-        .select(*key_cols, "_w")
-    )
-    phase2 = phase1.groupBy(*key_cols).agg(
-        F.max_by(F.col("_w"), F.struct(*[F.col(f"_w.{c}") for c in order_cols])).alias("_w")
-    )
-    return phase2.select(*[F.col(f"_w.{c}").alias(c) for c in payload])
-
-
-def lww_dedup_window(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-) -> DataFrame:
-    """Window-based LWW: row_number()==1 per key under descending order."""
-    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 def bucket_partitioned_lww(
     df: DataFrame,

@@ -10,9 +10,8 @@ from pyspark.sql import types as T
 
 from couch_to_mongo_spark.functions.normalize import normalize_text, normalize_text_py
 from couch_to_mongo_spark.operators.dedup import (
+    bucket_partitioned_lww,
     lww_dedup,
-    lww_dedup_window,
-    salted_lww,
     with_rev_gen,
 )
 from couch_to_mongo_spark.operators.schema_evolution import align_to_schema, evolve_schema
@@ -34,17 +33,20 @@ DUPS = [
 ]
 
 
-def test_three_dedup_kernels_agree(spark):
+def test_two_dedup_kernels_agree(spark):
     df = with_rev_gen(_changes(spark, DUPS))
     order = ["seq", "rev_gen", "_rev"]
     keys = ["conv_id", "turn_idx"]
     a = lww_dedup(df, keys, order).orderBy(*keys).collect()
-    b = lww_dedup_window(df, keys, order).orderBy(*keys).collect()
-    c = salted_lww(df, keys, order, n_salts=4).orderBy(*keys).collect()
+    b = (
+        bucket_partitioned_lww(df, keys, order, n_buckets=3)
+        .drop("_bucket")
+        .orderBy(*keys)
+        .collect()
+    )
     rows_a = [(r.conv_id, r.turn_idx, r.seq, r.text) for r in a]
     rows_b = [(r.conv_id, r.turn_idx, r.seq, r.text) for r in b]
-    rows_c = [(r.conv_id, r.turn_idx, r.seq, r.text) for r in c]
-    assert rows_a == rows_b == rows_c
+    assert rows_a == rows_b
     assert rows_a == [("a", 0, 5, "v2"), ("b", 1, 4, "w2"), ("c", 2, 6, "only")]
 
 
@@ -429,62 +431,6 @@ def test_stratified_sample_deterministic_and_monotone(spark):
     assert set(rates) == {"en", "de"}  # default fraction 0 drops the rest
     for k, f in frac.items():
         assert abs(rates[k] / totals[k] - f) < 0.1
-
-
-def test_regression_gate_min_across_priors(tmp_path, monkeypatch):
-    """The bench gate must (a) flag a genuine 2x slowdown against the
-    best-EVER prior (not just the latest — a storm-inflated round must not
-    ratchet the baseline), (b) loudly report unusable priors (the driver's
-    r4 tail truncated to parsed=null and the old gate silently returned
-    {}), and (c) exclude sf1 records whose fixture version differs
-    (regenerated tiers are different workloads)."""
-    import json as _json
-
-    import bench
-
-    monkeypatch.chdir(tmp_path)
-    # r1: fast (the true best); r2: storm-inflated; r3: truncated tail
-    (tmp_path / "BENCH_r01.json").write_text(
-        _json.dumps({"parsed": {"queries": {"q": 1.0}, "queries_sf1": {"v": 5.0},
-                                "sf1_fixture": 2}})
-    )
-    (tmp_path / "BENCH_r02.json").write_text(
-        _json.dumps({"parsed": {"queries": {"q": 4.0}, "queries_sf1": {"v": 1.0},
-                                "sf1_fixture": 1}})
-    )
-    (tmp_path / "BENCH_r03.json").write_text(_json.dumps({"parsed": None, "tail": "..."}))
-    (tmp_path / "BENCH_r04.json").write_text("{not json")
-
-    # 2.5 vs best-ever 1.0 -> flagged even though latest prior said 4.0
-    reg = bench.check_regressions({"q": 2.5})
-    assert reg["flagged"]["q"]["prior"] == 1.0
-    assert reg["flagged"]["q"]["ratio"] == 2.5
-    skipped = "\n".join(reg["skipped_priors"])
-    assert "BENCH_r03.json" in skipped and "parsed=null" in skipped
-    assert "BENCH_r04.json" in skipped  # JSON rot is loud, not silent
-
-    # within factor of best-ever -> no flag, but skips still surface
-    reg_ok = bench.check_regressions({"q": 1.2})
-    assert "flagged" not in reg_ok
-    assert reg_ok["skipped_priors"]
-
-    # sf1: r2's v=1.0 has fixture 1 != current 2 -> only r1's 5.0 counts
-    reg1 = bench.check_regressions({"v": 9.0}, key="queries_sf1", sf1_fixture=2)
-    assert reg1["flagged"]["v"]["prior"] == 5.0
-    assert any("fixture" in s for s in reg1["skipped_priors"])
-
-    # local full records participate too (and beat driver tails on MIN)
-    (tmp_path / "BENCH").mkdir()
-    (tmp_path / "BENCH" / "BENCH_local_001.json").write_text(
-        _json.dumps({"queries": {"q": 0.5}})
-    )
-    reg2 = bench.check_regressions({"q": 2.5})
-    assert reg2["flagged"]["q"]["prior"] == 0.5
-
-    # persistence: full JSON lands under BENCH/ with a fresh index
-    p = bench.persist_local_record({"queries": {"q": 2.5}})
-    assert p.endswith("BENCH_local_002.json")
-    assert _json.load(open(p))["queries"]["q"] == 2.5
 
 
 def test_token_budget_sample_attainment_and_monotonicity(spark):
