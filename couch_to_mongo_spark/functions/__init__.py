@@ -2,39 +2,8 @@ from couch_to_mongo_spark.functions.normalize import (  # noqa: F401
     normalize_text,
     normalize_text_py,
 )
-from couch_to_mongo_spark.functions.text import (  # noqa: F401
-    blocklist_filter,
-    curate_corpus,
-    dedup_groups,
-    exact_dedup,
-    lsh_dedup_groups,
-    mask_contaminated,
-    ngram_contamination,
-    pack_sequences,
-    ngram_jaccard_pairs,
-    quality_features,
-    repetition_features,
-    ngram_contamination_spans,
-    simhash_pairs,
-    stratified_sample,
-    token_budget_fractions,
-    token_budget_sample,
-    token_counts,
-)
 from couch_to_mongo_spark.functions.transcripts import (  # noqa: F401
+    pack_sequences,
     render_conversations,
     turn_boilerplate,
-)
-from couch_to_mongo_spark.functions.vectors import (  # noqa: F401
-    cosine_topk,
-    derive_n_planes,
-    embedding_dedup_groups_lsh,
-    ivf_assign,
-    ivf_assign_blas,
-    ivf_pq_topk,
-    kmeans_train,
-    kmeans_train_gemm,
-    neardup_pairs_lsh,
-    pq_encode,
-    pq_train,
 )

@@ -1,23 +1,26 @@
 """Conversation-level operators over the (conv_id, turn_idx) transcript
-state — the bridge from the CDC lakehouse to the training-data pipeline.
+state — the bridge from the CDC lakehouse to training documents, used by
+the corpus view (operators/corpus_view.py) and ``submit_main.py render``.
 
 The MERGE engine materializes one row per live (conv_id, turn_idx) turn
 (operators/merge.py read_state); a training run consumes CONVERSATIONS,
-not turns. These operators fold turn-state into per-conversation training
-documents and apply the turn-granularity curation steps that only make
-sense across conversations (C4's "line appearing in >= K documents"
-boilerplate rule, re-expressed at turn granularity).
+not turns. :func:`render_conversations` folds turn-state into one
+per-conversation document, :func:`turn_boilerplate` applies the one
+curation step that only makes sense across conversations (C4's "line
+appearing in >= K documents" boilerplate rule, re-expressed at turn
+granularity), and :func:`pack_sequences` cuts the rendered documents into
+fixed-length training sequences (``render --pack-seq-len``).
 
 All JVM-side Column expressions with exact DuckDB oracles
-(__spark_entry__ q_render_conversations / q_boilerplate_turns). The
-reference engine stops at per-document replication (couch-to-mongo
-Mongo.java:189 saveToMongo writes raw docs); conversation assembly is
-beyond-reference, per the training-data mandate.
+(__spark_entry__ q_render_conversations / q_boilerplate_turns /
+q_conversation_pack / q_pack_sequences). The reference engine stops at
+per-document replication (couch-to-mongo Mongo.java:189 saveToMongo
+writes raw docs); conversation assembly is beyond-reference.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -154,4 +157,118 @@ def turn_boilerplate(
             F.col("n_convs"),
             (F.col("n_convs") < F.lit(int(min_convs))).alias("keep"),
         )
+    )
+
+
+def hash15(col: Column) -> Column:
+    """Deterministic 60-bit integer hash, identical in Spark and DuckDB."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def _bpe_tokens_col(text_col: str) -> Column:
+    """The BPE-ish subword count: lowercase alphanumeric runs plus single
+    punctuation marks."""
+    return F.size(
+        F.regexp_extract_all(
+            F.lower(F.col(text_col)), F.lit(r"[a-z0-9]+|[^a-z0-9\s]"), 0
+        )
+    )
+
+
+#: derive_n_shards target: docs per packing shard. One shard = one window
+#: partition of the single packing exchange, so this bounds both per-task
+#: memory/sort size and the job's parallelism ceiling.
+PACK_DOCS_PER_SHARD = 250_000
+_PACK_SHARDS_MIN = 8
+
+
+def derive_n_shards(n_rows: int, docs_per_shard: int = PACK_DOCS_PER_SHARD) -> int:
+    """Corpus-sized packing parallelism: enough shards that each
+    window partition holds ~``docs_per_shard`` docs — proportional in the
+    corpus above the floor, so 10^10 docs get ~40k-way packing instead of
+    a fixed-8 bottleneck."""
+    import math
+
+    return max(_PACK_SHARDS_MIN, math.ceil(max(n_rows, 1) / docs_per_shard))
+
+
+def pack_sequences(
+    df: DataFrame,
+    seq_len: int = 2048,
+    n_shards: int | None = None,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    seed: int = 0,
+) -> DataFrame:
+    """Concat-then-chunk sequence packing — the step that turns a curated
+    corpus into fixed-length training sequences: documents are laid out in
+    a deterministic hash order and the concatenated token stream is cut
+    every ``seq_len`` tokens; a document crossing a cut emits one row per
+    sequence it touches. (The packing layout most pretraining stacks use —
+    GPT-style concat+chunk — rather than bin-packing whole docs, which is
+    inherently sequential.)
+
+    The hash order doubles as the training shuffle (content-independent
+    md5 of the id, :func:`hash15`), so the
+    layout is reproducible across runs/engines/partitionings. Sequences
+    are packed within ``n_shards`` independent shards (shard = hash mod
+    n_shards): each shard's window is one partition of a single exchange,
+    so packing 10^10 docs costs one shuffle with n_shards-bounded
+    parallelism. ``n_shards=None`` (default) sizes shards from the corpus
+    itself (:func:`derive_n_shards`, one count job — pass an explicit
+    value to skip it); sequence identity (shard, seq_id) stays
+    deterministic for a fixed (n_shards, seed), so pin n_shards wherever
+    cross-run layout stability matters (contract entries do).
+
+    Output: (id, shard, seq_id, start_in_seq, n_toks) — one row per
+    (document, sequence) span; ``sum(n_toks) over (shard, seq_id)`` =
+    seq_len for every sequence except each shard's last. Zero-token docs
+    (empty after normalization) are dropped."""
+    from pyspark.sql import Window
+
+    if n_shards is None:
+        n_shards = derive_n_shards(df.count())
+    h = F.pmod(
+        hash15(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(seed)))),
+        F.lit(1_000_000),
+    )
+    t = df.select(
+        F.col(id_col),
+        _bpe_tokens_col(text_col).cast("long").alias("_n"),
+        h.alias("_h"),
+    ).where(F.col("_n") > 0)
+    t = t.withColumn("shard", F.pmod(F.col("_h"), F.lit(n_shards)).cast("int"))
+    w = (
+        Window.partitionBy("shard")
+        .orderBy("_h", id_col)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    L = F.lit(int(seq_len)).cast("long")
+    # materialize the span bounds BEFORE the explode: expressions selected
+    # alongside a Generate re-evaluate per output element (CLAUDE.md rule)
+    spans = t.withColumn("_cum", F.sum("_n").over(w)).select(
+        F.col(id_col),
+        F.col("shard"),
+        (F.col("_cum") - F.col("_n")).alias("_gs"),
+        F.col("_cum").alias("_ge"),
+    )
+    e = spans.select(
+        F.col(id_col),
+        F.col("shard"),
+        F.col("_gs"),
+        F.col("_ge"),
+        F.explode(
+            F.sequence(
+                F.floor(F.col("_gs") / L), F.floor((F.col("_ge") - 1) / L)
+            )
+        ).alias("seq_id"),
+    )
+    seg_start = F.greatest(F.col("_gs"), F.col("seq_id") * L)
+    seg_end = F.least(F.col("_ge"), (F.col("seq_id") + 1) * L)
+    return e.select(
+        F.col(id_col),
+        F.col("shard"),
+        F.col("seq_id").cast("long"),
+        (seg_start - F.col("seq_id") * L).cast("long").alias("start_in_seq"),
+        (seg_end - seg_start).cast("long").alias("n_toks"),
     )

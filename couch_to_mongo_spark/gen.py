@@ -148,38 +148,6 @@ def write_change_files(
     return paths
 
 
-def make_clustered_embeddings(
-    n: int = 2000,
-    dim: int = 32,
-    n_clusters: int = 16,
-    sigma: float = 0.15,
-    seed: int = 17,
-) -> pd.DataFrame:
-    """Planted-Gaussian-cluster embeddings fixture (vec_id, cluster,
-    embedding). The driver's embeddings.parquet is structureless noise, on
-    which NO sublinear index can beat random recall (best cross-pair
-    cosine ~0.35) — this fixture has real neighbor structure, so ANN
-    recall@k separates a good quantizer from a bad one: a vector's true
-    top-k are overwhelmingly its cluster siblings, and a trained IVF list
-    ≈ a cluster. Deterministic in (n, dim, n_clusters, sigma, seed).
-
-    Rows are laid out cluster-round-robin so the `n_queries` lowest ids
-    (the recall harness's deterministic query set) span all clusters.
-    """
-    rng = np.random.default_rng(seed)
-    centers = rng.standard_normal((n_clusters, dim))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    cluster = np.arange(n, dtype=np.int64) % n_clusters
-    vecs = centers[cluster] + sigma * rng.standard_normal((n, dim))
-    return pd.DataFrame(
-        {
-            "vec_id": np.arange(n, dtype=np.int64),
-            "cluster": cluster,
-            "embedding": [row.astype(np.float32).tolist() for row in vecs],
-        }
-    )
-
-
 def generate_changes(
     out_dir: str,
     n_events: int = 10_000,

@@ -275,7 +275,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         out = {"out": args.out}
         if args.pack_seq_len is not None:
-            from couch_to_mongo_spark.functions.text import pack_sequences
+            from couch_to_mongo_spark.functions.transcripts import pack_sequences
 
             docs.write.mode("overwrite").parquet(args.out + "/docs")
             spans = pack_sequences(
