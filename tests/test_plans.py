@@ -17,38 +17,10 @@ from couch_to_mongo_spark.plans.inspect import (
     count_partial_final_aggs,
     formatted_plan,
     has_broadcast_hash_join,
-    has_top_k,
     pushed_filters,
-    read_schema_columns,
 )
 
 SF = "/root/testdata/sf0.01"
-
-
-def test_range_scan_pushdown_and_pruning(spark):
-    df = E.q_range_scan(spark, SF)
-    pf = " ".join(pushed_filters(df))
-    assert "user_id" in pf and "event_type" in pf, pf
-    cols = read_schema_columns(df)[0]
-    # 3-column projection must not read all 6 columns
-    assert set(cols) <= {"event_id", "user_id", "value", "event_type"}, cols
-
-
-def test_point_lookup_pushdown(spark):
-    df = E.q_point_lookup(spark, SF)
-    assert any("event_id" in f for f in pushed_filters(df))
-
-
-def test_broadcast_join_chosen(spark):
-    df = E.q_broadcast_enrich(spark, SF)
-    assert has_broadcast_hash_join(df)
-    # fact side shuffles once for the final agg at most
-    assert count_exchanges(df) <= 1
-
-
-def test_top1_is_take_ordered(spark):
-    assert has_top_k(E.q_checkpoint_top1(spark, SF))
-    assert has_top_k(E.q_q3_shipping(spark, SF))
 
 
 def test_lww_is_partial_aggregation_single_shuffle(spark):
@@ -57,27 +29,6 @@ def test_lww_is_partial_aggregation_single_shuffle(spark):
     df = E.q_lww_latest_state(spark, SF)
     assert count_exchanges(df) == 1, formatted_plan(df)
     assert count_partial_final_aggs(df) >= 2  # partial + final
-
-
-def test_q1_single_shuffle_partial_agg(spark):
-    df = E.q_q1_pricing(spark, SF)
-    assert count_exchanges(df) == 1
-    assert count_partial_final_aggs(df) >= 2
-    pf = " ".join(pushed_filters(df))
-    assert "l_shipdate" in pf
-
-
-def test_lineitem_scan_prunes_columns(spark):
-    df = E.q_q1_pricing(spark, SF)
-    cols = read_schema_columns(df)[0]
-    # Q1 needs 6 of lineitem's 16 columns
-    assert len(cols) <= 7, cols
-
-
-def test_anti_join_no_cartesian(spark):
-    plan = formatted_plan(E.q_anti_join_new_keys(spark, SF))
-    assert "LeftAnti" in plan or "left_anti" in plan.lower()
-    assert "Cartesian" not in plan
 
 
 def test_fast_merge_single_shuffle(spark):
