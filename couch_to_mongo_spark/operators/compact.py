@@ -17,8 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from couch_to_mongo_spark.operators.dedup import lww_dedup, with_rev_gen
-from couch_to_mongo_spark.operators.merge import DELETED_COL, REV_COL, SEQ_COL
+from couch_to_mongo_spark.operators.merge import DELETED_COL, fold_stored_rows
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
 
 
@@ -55,8 +54,7 @@ def compact(
 
     df = table.read_buckets(buckets)
     key_cols = [c for c in key_cols if c in df.columns]
-    df = with_rev_gen(df, rev_col=REV_COL)
-    df = lww_dedup(df, key_cols, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+    df = fold_stored_rows(df, key_cols)
     if purge_tombstones:
         df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
     df = df.withColumn(BUCKET_COL, bucket_expr(key_cols[0], snap.n_buckets))

@@ -31,6 +31,7 @@ from couch_to_mongo_spark.operators.merge import (
     MergeResult,
     merge_batch,
     read_state,
+    resolve_live_state,
     with_engine_schema,
 )
 from couch_to_mongo_spark.tableformat import LakeTable, bucket_expr
@@ -295,34 +296,3 @@ class RenderedCorpusView:
         return read_state(self.view).select(
             "conv_id", "n_turns", "n_chars", F.col("text").alias("doc")
         )
-
-
-def resolve_live_state(df: DataFrame) -> DataFrame:
-    """LWW fold + tombstone elimination over raw MOR rows — the shared
-    resolution kernel of :func:`read_state_of_buckets` and the refresh's
-    filter-below-the-fold path. Any per-conv pre-filter composes safely:
-    LWW is per (conv_id, turn_idx) key, so dropping whole conversations
-    before the fold cannot change any surviving key's winner."""
-    from couch_to_mongo_spark.operators.dedup import lww_dedup, with_rev_gen
-    from couch_to_mongo_spark.operators.merge import (
-        DELETED_COL,
-        ENGINE_COLS,
-        REV_COL,
-        SEQ_COL,
-    )
-
-    key_cols = [c for c in ("conv_id", "turn_idx") if c in df.columns]
-    if SEQ_COL in df.columns and key_cols:
-        df = with_rev_gen(df, rev_col=REV_COL)
-        df = lww_dedup(df, key_cols, [SEQ_COL, "rev_gen", REV_COL])
-        df = df.drop("rev_gen")
-    if DELETED_COL in df.columns:
-        df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-    return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
-
-
-def read_state_of_buckets(table: LakeTable, buckets: list[int]) -> DataFrame:
-    """LWW-resolved live state of just the given buckets — the
-    partition-pruned analogue of :func:`read_state` (same resolution,
-    O(requested buckets) metadata + scan)."""
-    return resolve_live_state(table.read_buckets(buckets))

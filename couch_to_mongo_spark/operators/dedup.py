@@ -10,11 +10,12 @@ Two implementations, deterministic and equivalent (tested against each
 other in tests/test_units.py):
 
 - :func:`lww_dedup` — ``max_by(struct(payload), struct(order))`` hash
-  aggregation. **The read-side fold** (read_state, compaction, the
-  change-feed pre-state). Spark's hash aggregate does map-side partial
-  aggregation, so a hot conversation (millions of updates to one key) is
-  combined per input partition *before* the shuffle — skew is defused for
-  free, O(distinct keys) shuffle volume.
+  aggregation. **The read-side fold** (``merge.fold_stored_rows``:
+  read_state, compaction, rescale, the change-feed pre-state). Spark's
+  hash aggregate does map-side partial aggregation, so a hot conversation
+  (millions of updates to one key) is combined per input partition
+  *before* the shuffle — skew is defused for free, O(distinct keys)
+  shuffle volume.
 - :func:`bucket_partitioned_lww` — bucket repartition, then a window LWW
   inside those partitions: **the merge's write-side kernel** (one shuffle
   shared with the bucketed write).

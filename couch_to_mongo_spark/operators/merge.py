@@ -72,6 +72,33 @@ ENGINE_COLS = (SEQ_COL, REV_COL, DELETED_COL)
 TRANSIENT_COLS = ("op", "seq", "rev_gen", "_src", "_salt", BUCKET_COL)
 
 
+def fold_stored_rows(
+    df: DataFrame, key_cols: Sequence[str] = ("conv_id", "turn_idx")
+) -> DataFrame:
+    """The stored-row LWW fold: one row per key, the winner by (_seq,
+    rev generation, _rev). Tombstone winners are KEPT — compaction,
+    rescale and the change-feed pre-state need them (an out-of-order
+    replay of an old update must still lose to the tombstone)."""
+    keys = [c for c in key_cols if c in df.columns]
+    df = with_rev_gen(df, rev_col=REV_COL)
+    return lww_dedup(df, keys, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+
+
+def resolve_live_state(
+    df: DataFrame, key_cols: Sequence[str] = ("conv_id", "turn_idx")
+) -> DataFrame:
+    """Merge-on-read resolution of raw stored rows to live state:
+    :func:`fold_stored_rows`, then tombstone winners and engine columns
+    dropped. Any per-conv pre-filter on ``df`` composes safely: LWW is
+    per (conv_id, turn_idx) key, so dropping whole conversations before
+    the fold cannot change any surviving key's winner."""
+    if SEQ_COL in df.columns and any(c in df.columns for c in key_cols):
+        df = fold_stored_rows(df, key_cols)
+    if DELETED_COL in df.columns:
+        df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+    return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
+
+
 def engine_fields() -> list[T.StructField]:
     return [
         T.StructField(SEQ_COL, T.LongType(), True),
@@ -267,11 +294,10 @@ def _emit_changes(
         *[os.path.join(table.path, f) for fl in delta.values() for f in fl]
     )
     # RESOLVED winners incl. tombstones (see classify_changes docstring)
-    pre = with_rev_gen(
+    pre = fold_stored_rows(
         align_to_schema(table.read_buckets(sorted(delta), version=base_version), evolved),
-        rev_col=REV_COL,
+        key_cols,
     )
-    pre = lww_dedup(pre, key_cols, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
     changes, cache = classify_changes(
         batch, pre, key_cols, DELETED_COL, [f.name for f in evolved.fields], run_id, batch_id
     )
@@ -297,23 +323,13 @@ def read_state(
     version: int | None = None,
     key_cols: Sequence[str] = ("conv_id", "turn_idx"),
 ) -> DataFrame:
-    """The logical (public) table state: live rows, payload columns only.
-
-    Merge-on-read resolution: LWW over (_seq, rev_gen, _rev) collapses the
-    multi-version delta rows; tombstone winners are then dropped. On a
-    compacted table the dedup is a no-op pass. A key filter on the result
+    """The logical (public) table state: live rows, payload columns only
+    (:func:`resolve_live_state` over every stored row). On a compacted
+    table the fold is a no-op pass. A key filter on the result
     (``read_state(t).where(conv_id == c)``) reaches the parquet scan: LWW
     is per key, and the fold emits the keys from its group keys, so
     Catalyst pushes the predicate below the aggregate."""
-    df = table.read(version)
-    key_cols = [c for c in key_cols if c in df.columns]
-    if SEQ_COL in df.columns and key_cols:
-        df = with_rev_gen(df, rev_col=REV_COL)
-        df = lww_dedup(df, key_cols, [SEQ_COL, "rev_gen", REV_COL])
-        df = df.drop("rev_gen")
-    if DELETED_COL in df.columns:
-        df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-    return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
+    return resolve_live_state(table.read(version), key_cols)
 
 
 def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, batch_id):

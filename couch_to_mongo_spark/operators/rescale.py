@@ -32,8 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from couch_to_mongo_spark.operators.dedup import lww_dedup, with_rev_gen
-from couch_to_mongo_spark.operators.merge import REV_COL, SEQ_COL, _footer_seq_stats
+from couch_to_mongo_spark.operators.merge import _footer_seq_stats, fold_stored_rows
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
 
 __all__ = ["rescale_buckets"]
@@ -52,8 +51,7 @@ def rescale_buckets(
     old_n = snap.n_buckets
     df = table.read(version=snap.version)
     keys = [c for c in key_cols if c in df.columns]
-    df = with_rev_gen(df, rev_col=REV_COL)
-    df = lww_dedup(df, keys, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+    df = fold_stored_rows(df, keys)
     df = df.withColumn(BUCKET_COL, bucket_expr(keys[0], new_n_buckets))
     df = df.repartition(new_n_buckets, F.col(BUCKET_COL))
     if sort_within_bucket:

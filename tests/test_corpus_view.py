@@ -125,7 +125,7 @@ def test_refresh_untouched_convs_not_reread(spark, tmp_path):
     one = _batch(spark, [("conv3", 1, "updated", "u")], 100)
     merge_batch(primary, one, run_id="r", batch_id=1)
 
-    from couch_to_mongo_spark.operators.corpus_view import read_state_of_buckets
+    from couch_to_mongo_spark.operators.merge import resolve_live_state
     from couch_to_mongo_spark.tableformat import bucket_expr
     from pyspark.sql import functions as F
 
@@ -136,7 +136,7 @@ def test_refresh_untouched_convs_not_reread(spark, tmp_path):
         .distinct()
         .collect()
     ]
-    pruned = read_state_of_buckets(primary, tb)
+    pruned = resolve_live_state(primary.read_buckets(tb))
     convs_in_pruned = {
         r["conv_id"] for r in pruned.select("conv_id").distinct().collect()
     }
