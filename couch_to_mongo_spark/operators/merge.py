@@ -79,9 +79,8 @@ def fold_stored_rows(
     rev generation, _rev). Tombstone winners are KEPT — compaction,
     rescale and the change-feed pre-state need them (an out-of-order
     replay of an old update must still lose to the tombstone)."""
-    keys = [c for c in key_cols if c in df.columns]
     df = with_rev_gen(df, rev_col=REV_COL)
-    return lww_dedup(df, keys, [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+    return lww_dedup(df, list(key_cols), [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
 
 
 def resolve_live_state(
@@ -92,8 +91,9 @@ def resolve_live_state(
     dropped. Any per-conv pre-filter on ``df`` composes safely: LWW is
     per (conv_id, turn_idx) key, so dropping whole conversations before
     the fold cannot change any surviving key's winner."""
-    if SEQ_COL in df.columns and any(c in df.columns for c in key_cols):
-        df = fold_stored_rows(df, key_cols)
+    keys = [c for c in key_cols if c in df.columns]
+    if SEQ_COL in df.columns and keys:
+        df = fold_stored_rows(df, keys)
     if DELETED_COL in df.columns:
         df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
     return df.drop(*[c for c in ENGINE_COLS if c in df.columns])

@@ -290,7 +290,6 @@ def test_bucket_salt_independent_of_bucket_hash(spark):
     split. The seeded salt gives >1 distinct salt per bucket."""
     from pyspark.sql import functions as F
 
-    from couch_to_mongo_spark.operators.dedup import bucket_partitioned_lww
 
     df = spark.range(2000).select(
         F.concat(F.lit("conv-"), F.col("id")).alias("conv_id"),
