@@ -245,7 +245,7 @@ def pack_sequences(
     )
     L = F.lit(int(seq_len)).cast("long")
     # materialize the span bounds BEFORE the explode: expressions selected
-    # alongside a Generate re-evaluate per output element (CLAUDE.md rule)
+    # alongside a Generate re-evaluate per output element
     spans = t.withColumn("_cum", F.sum("_n").over(w)).select(
         F.col(id_col),
         F.col("shard"),

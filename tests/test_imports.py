@@ -1,5 +1,5 @@
 """Every ``couch_to_mongo_spark`` import in the engine, the CLI, the
-driver contract and the benchmark resolves — module-level imports and the
+DuckDB engine checks and the benchmark resolves — module-level imports and the
 lazy ones inside functions and CLI branches alike, which no single run of
 the suite reaches all of. Pure ``ast`` + ``importlib``: no Spark session."""
 
