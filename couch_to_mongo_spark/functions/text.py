@@ -10,6 +10,10 @@ Operators (beyond the reference, per the training-data mandate):
 - exact dedup (hash-groupBy), n-gram shingles, MinHash signatures +
   LSH band buckets, SimHash, n-gram Jaccard candidate pairs
 - language-ID heuristic, quality scoring, token counting, fingerprinting
+
+Sequence packing (``pack_sequences``) and the shared ``hash15`` /
+BPE-count expressions live in :mod:`.transcripts`, next to the
+``submit_main.py render`` operators that use them.
 """
 
 from __future__ import annotations
@@ -17,14 +21,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from couch_to_mongo_spark.functions.transcripts import _bpe_tokens_col, hash15
+
 TOKEN_SPLIT_RE = r"\s+"
 NORM_STRIP_RE = r"[^a-z0-9 ]"
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
-
-
-def hash15(col: Column) -> Column:
-    """Deterministic 60-bit integer hash, identical in Spark and DuckDB."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def hash32(col: Column) -> Column:
@@ -126,44 +127,6 @@ def exploded_shingles(
     )
 
 
-def minhash_signature(col: Column, k: int = 8) -> list[Column]:
-    """k MinHash values (scalar-expression form, for toy inputs — see
-    :func:`minhash_signature_df` for why the explode shape is the real
-    path): min over shingles of the i-th affine permutation of hash32."""
-    sh = shingles(col)
-    return [
-        F.array_min(
-            F.transform(sh, lambda s: (F.lit(a) * hash32(s) + F.lit(b)) % F.lit(MINHASH_P))
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(minhash_perms(k))
-    ]
-
-
-def simhash16(col: Column) -> Column:
-    """16-bit SimHash over tokens: per bit, majority vote of token-hash bits.
-
-    Bit loop unrolled in Python (shift amounts must be literals); the 16
-    per-bit votes are independent `aggregate` expressions over the same
-    token array — all inside one codegen'd projection.
-    """
-    toks = tokens(col)
-
-    def vote(b: int) -> Column:
-        return F.aggregate(
-            toks,
-            F.lit(0).cast("long"),
-            lambda a, t: a
-            + F.when(
-                F.shiftright(hash15(t), b).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-            ).otherwise(F.lit(-1)),
-        )
-
-    total = F.lit(0).cast("long")
-    for b in range(16):
-        total = total + F.when(vote(b) > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return total
-
-
 def simhash_df(
     df: DataFrame,
     text_col: str = "text",
@@ -172,9 +135,9 @@ def simhash_df(
     n_bits: int = 16,
 ) -> DataFrame:
     """SimHash, relational shape: explode tokens → one conditional-sum per
-    bit in a single hash aggregation (primitive buffers, codegen'd) —
-    the scale path; :func:`simhash16` (scalar expression) evaluates the
-    per-bit array-aggregates interpretively. ``n_bits`` <= 60 (hash15's
+    bit in a single hash aggregation (primitive buffers, codegen'd); a
+    scalar-expression form would evaluate per-bit array-aggregates
+    interpretively. ``n_bits`` <= 60 (hash15's
     width); 16 matches the compact legacy oracle, 60 is the pairing width
     (see :func:`simhash_pairs` — narrow hashes make band buckets
     degenerate at corpus scale)."""
@@ -239,7 +202,7 @@ def minhash_signature_df(
     """MinHash signatures, relational shape: explode shingles → k hash
     columns → hash-aggregate mins per doc.
 
-    Preferred over :func:`minhash_signature` beyond toy inputs: nested
+    Preferred over a scalar-expression signature: nested
     higher-order-function expressions (k × transform over shingles, each
     rebuilding the shingle array) fall out of whole-stage codegen and
     evaluate interpretively (~200ms/row); the explode shape computes
@@ -468,9 +431,8 @@ def ngram_jaccard_pairs(
             # postings, O(docs) rows), repartition by pair, and
             # run-length count in the numpy kernel; the exact
             # round-half-up jaccard filter stays JVM-side. Measured
-            # 302 s -> 30 s on the same data, byte-identical output
-            # (scripts/probe_jaccard_variants.py PARITY OK). No broadcast
-            # hint on sizes: it is O(corpus) rows, so the planner/AQE
+            # 302 s -> 30 s on the same data, byte-identical output.
+            # No broadcast hint on sizes: it is O(corpus) rows, so the planner/AQE
             # must stay free to shuffle both sides at 10^10 docs (here it
             # auto-broadcasts the few-MB side).
             pa = sh.join(sizes, id_col)
@@ -631,15 +593,6 @@ def stratified_sample(
     return df.where(h < thr)
 
 
-def _bpe_tokens_col(text_col: str) -> Column:
-    """The BPE-ish subword count (token_counts' bpe_tokens expression)."""
-    return F.size(
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(r"[a-z0-9]+|[^a-z0-9\s]"), 0
-        )
-    )
-
-
 def token_budget_fractions(
     df: DataFrame,
     budgets: dict[str, int],
@@ -723,106 +676,6 @@ def token_budget_sample(
     c = t.withColumn("_cum", F.sum("n_tokens").over(w))
     return c.where((F.col("_cum") - F.col("n_tokens")) < budget).select(
         id_col, strata_col, "n_tokens"
-    )
-
-
-#: derive_n_shards target: docs per packing shard. One shard = one window
-#: partition of the single packing exchange, so this bounds both per-task
-#: memory/sort size and the job's parallelism ceiling.
-PACK_DOCS_PER_SHARD = 250_000
-_PACK_SHARDS_MIN = 8
-
-
-def derive_n_shards(n_rows: int, docs_per_shard: int = PACK_DOCS_PER_SHARD) -> int:
-    """Corpus-sized packing parallelism (the :func:`~couch_to_mongo_spark.
-    functions.vectors.derive_n_planes` pattern): enough shards that each
-    window partition holds ~``docs_per_shard`` docs — proportional in the
-    corpus above the floor, so 10^10 docs get ~40k-way packing instead of
-    a fixed-8 bottleneck."""
-    import math
-
-    return max(_PACK_SHARDS_MIN, math.ceil(max(n_rows, 1) / docs_per_shard))
-
-
-def pack_sequences(
-    df: DataFrame,
-    seq_len: int = 2048,
-    n_shards: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 0,
-) -> DataFrame:
-    """Concat-then-chunk sequence packing — the step that turns a curated
-    corpus into fixed-length training sequences: documents are laid out in
-    a deterministic hash order and the concatenated token stream is cut
-    every ``seq_len`` tokens; a document crossing a cut emits one row per
-    sequence it touches. (The packing layout most pretraining stacks use —
-    GPT-style concat+chunk — rather than bin-packing whole docs, which is
-    inherently sequential.)
-
-    The hash order doubles as the training shuffle (content-independent
-    md5 of the id, same family as :func:`stratified_sample`), so the
-    layout is reproducible across runs/engines/partitionings. Sequences
-    are packed within ``n_shards`` independent shards (shard = hash mod
-    n_shards): each shard's window is one partition of a single exchange,
-    so packing 10^10 docs costs one shuffle with n_shards-bounded
-    parallelism. ``n_shards=None`` (default) sizes shards from the corpus
-    itself (:func:`derive_n_shards`, one count job — pass an explicit
-    value to skip it); sequence identity (shard, seq_id) stays
-    deterministic for a fixed (n_shards, seed), so pin n_shards wherever
-    cross-run layout stability matters (contract entries do).
-
-    Output: (id, shard, seq_id, start_in_seq, n_toks) — one row per
-    (document, sequence) span; ``sum(n_toks) over (shard, seq_id)`` =
-    seq_len for every sequence except each shard's last. Zero-token docs
-    (empty after normalization) are dropped."""
-    from pyspark.sql import Window
-
-    if n_shards is None:
-        n_shards = derive_n_shards(df.count())
-    h = F.pmod(
-        hash15(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(seed)))),
-        F.lit(1_000_000),
-    )
-    t = df.select(
-        F.col(id_col),
-        _bpe_tokens_col(text_col).cast("long").alias("_n"),
-        h.alias("_h"),
-    ).where(F.col("_n") > 0)
-    t = t.withColumn("shard", F.pmod(F.col("_h"), F.lit(n_shards)).cast("int"))
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("_h", id_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    L = F.lit(int(seq_len)).cast("long")
-    # materialize the span bounds BEFORE the explode: expressions selected
-    # alongside a Generate re-evaluate per output element (CLAUDE.md rule)
-    spans = t.withColumn("_cum", F.sum("_n").over(w)).select(
-        F.col(id_col),
-        F.col("shard"),
-        (F.col("_cum") - F.col("_n")).alias("_gs"),
-        F.col("_cum").alias("_ge"),
-    )
-    e = spans.select(
-        F.col(id_col),
-        F.col("shard"),
-        F.col("_gs"),
-        F.col("_ge"),
-        F.explode(
-            F.sequence(
-                F.floor(F.col("_gs") / L), F.floor((F.col("_ge") - 1) / L)
-            )
-        ).alias("seq_id"),
-    )
-    seg_start = F.greatest(F.col("_gs"), F.col("seq_id") * L)
-    seg_end = F.least(F.col("_ge"), (F.col("seq_id") + 1) * L)
-    return e.select(
-        F.col(id_col),
-        F.col("shard"),
-        F.col("seq_id").cast("long"),
-        (seg_start - F.col("seq_id") * L).cast("long").alias("start_in_seq"),
-        (seg_end - seg_start).cast("long").alias("n_toks"),
     )
 
 

@@ -148,6 +148,99 @@ def write_change_files(
     return paths
 
 
+def make_clustered_embeddings(
+    n: int = 2000,
+    dim: int = 32,
+    n_clusters: int = 16,
+    sigma: float = 0.15,
+    seed: int = 17,
+) -> pd.DataFrame:
+    """Planted-Gaussian-cluster embeddings fixture (vec_id, cluster,
+    embedding). The driver's embeddings.parquet is structureless noise, on
+    which NO sublinear index can beat random recall (best cross-pair
+    cosine ~0.35) — this fixture has real neighbor structure, so ANN
+    recall@k separates a good quantizer from a bad one: a vector's true
+    top-k are overwhelmingly its cluster siblings, and a trained IVF list
+    ≈ a cluster. Deterministic in (n, dim, n_clusters, sigma, seed).
+
+    Rows are laid out cluster-round-robin so the `n_queries` lowest ids
+    (the recall harness's deterministic query set) span all clusters.
+    """
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((n_clusters, dim))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    cluster = np.arange(n, dtype=np.int64) % n_clusters
+    vecs = centers[cluster] + sigma * rng.standard_normal((n, dim))
+    return pd.DataFrame(
+        {
+            "vec_id": np.arange(n, dtype=np.int64),
+            "cluster": cluster,
+            "embedding": [row.astype(np.float32).tolist() for row in vecs],
+        }
+    )
+
+
+def gen_embeddings(
+    n_vecs: int,
+    dim: int = 64,
+    n_clusters: int = 10,
+    dup_frac: float = 0.03,
+    target_cos: float = 0.95,
+    cluster_strength: float = 3.0,
+    seed: int = 42,
+):
+    """Clustered embeddings with PLANTED near-duplicates — the vector-suite
+    fixture the driver's sf tiers lack (their embeddings are pure noise:
+    max cross-pair cosine ~0.51, so near-dup recall is unmeasurable).
+
+    Structure:
+    - label = cluster id; member = cluster_strength * unit_center + N(0,1)
+      noise per dim. cluster_strength=3.0 puts typical intra-cluster
+      cosine at ~ s^2/(s^2+dim) ~= 0.12 — ABOVE noise (kmeans/IVF can
+      learn the partition) but BELOW the 0.3 near-dup threshold, so dedup
+      pairs stay O(planted), not O(cluster^2);
+    - dup_frac of rows are near-dups of an earlier row (same cluster):
+      rotated toward an orthogonalized random direction to land at EXACTLY
+      ``target_cos`` cosine from the source — real positives for the
+      neardup/LSH/group pipelines, with a knowable ground truth.
+
+    Returns a pyarrow Table with the driver's embeddings schema
+    (vec_id int64, embedding list<float32>, label int32).
+    """
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    centers = rng.standard_normal((n_clusters, dim))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    labels = rng.integers(0, n_clusters, n_vecs).astype(np.int32)
+    vecs = cluster_strength * centers[labels] + rng.standard_normal((n_vecs, dim))
+    n_dups = int(n_vecs * dup_frac)
+    # dup targets: every 1/dup_frac-th row (deterministic spread), source a
+    # strictly earlier non-dup row so chains don't form
+    step = max(int(1 / dup_frac), 2)
+    dup_rows = [i for i in range(step, n_vecs, step)][:n_dups]
+    for i in dup_rows:
+        j = int(rng.integers(0, step))  # early non-dup row
+        v = vecs[j]
+        g = rng.standard_normal(dim)
+        g -= (g @ v) / (v @ v) * v
+        vecs[i] = np.linalg.norm(v) * (
+            target_cos * v / np.linalg.norm(v)
+            + np.sqrt(1 - target_cos**2) * g / np.linalg.norm(g)
+        )
+        labels[i] = labels[j]
+    return pa.table(
+        {
+            "vec_id": pa.array(np.arange(n_vecs, dtype=np.int64)),
+            "embedding": pa.array(
+                [row.astype(np.float32) for row in vecs],
+                type=pa.list_(pa.float32()),
+            ),
+            "label": pa.array(labels, type=pa.int32()),
+        }
+    )
+
+
 def generate_changes(
     out_dir: str,
     n_events: int = 10_000,

@@ -3,4 +3,5 @@ from couch_to_mongo_spark.plans.inspect import (  # noqa: F401
     formatted_plan,
     has_broadcast_hash_join,
     pushed_filters,
+    read_schema_columns,
 )

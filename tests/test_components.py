@@ -166,6 +166,35 @@ def test_simhash_pairs_complete_vs_bruteforce(spark):
     assert brute, "fixture produced no close simhash pairs"
 
 
+def test_hamming_pairs_complete_and_bounded(spark):
+    """Pigeonhole banding on a precomputed hash column: every pair within
+    max_hamming is found (planted 1/2/3-bit flips), nothing beyond it
+    (planted 4-bit flip spread across 4 bands) — completeness, not
+    best-effort recall."""
+    from couch_to_mongo_spark.functions.text import hamming_pairs
+
+    base = 0x0123456789ABCD  # 56-bit
+    rows = [
+        (0, base),
+        (1, base ^ (1 << 3)),                                  # hamming 1
+        (2, base ^ (1 << 15) ^ (1 << 40)),                     # hamming 2
+        (3, base ^ (1 << 1) ^ (1 << 20) ^ (1 << 50)),          # hamming 3
+        # 4 flips in 4 DIFFERENT 14-bit bands: no shared band, must be absent
+        (4, base ^ (1 << 2) ^ (1 << 16) ^ (1 << 30) ^ (1 << 44)),
+        (5, 0x7FAAAAAAAAAAAA),                                 # far away
+    ]
+    df = spark.createDataFrame(rows, "media_id long, dhash long")
+    got = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in hamming_pairs(
+            df, "dhash", id_col="media_id", max_hamming=3, bands=4, n_bits=56
+        ).collect()
+    }
+    assert got[(0, 1)] == 1 and got[(0, 2)] == 2 and got[(0, 3)] == 3
+    assert (0, 4) not in got  # beyond max_hamming
+    assert all(a != 5 and b != 5 for a, b in got)
+
+
 def test_repetition_features_rank_repetitive_docs(spark):
     """Semantic sanity: a doc that repeats one line/phrase scores higher on
     every repetition metric than a diverse doc."""

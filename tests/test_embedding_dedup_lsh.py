@@ -2,7 +2,7 @@
 
 The contract query's hash parity (test_entry_contract) proves the pipeline
 is deterministic cross-engine; these tests prove it is USEFUL — on a
-clustered fixture with planted near-duplicates (gen_sf.gen_embeddings),
+clustered fixture with planted near-duplicates (gen.gen_embeddings),
 the label-free LSH groups must recover >=0.9 of the exact label-blocked
 ground-truth pairs, and every emitted pair must be a true positive.
 """
@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from couch_to_mongo_spark.functions import vectors as V
-from couch_to_mongo_spark.gen_sf import gen_embeddings
+from couch_to_mongo_spark.gen import gen_embeddings
 
 
 N_VECS = 600

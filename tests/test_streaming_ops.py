@@ -1,7 +1,6 @@
 """Streaming operators beyond the CDC core: stateful progress
-(applyInPandasWithState) and event-time windowed aggregation with
-watermark. Streaming semantics — verified against batch ground truth
-(the SQL-oracle twin covers the batch expression tree separately)."""
+(applyInPandasWithState) verified against batch ground truth, and IVF
+candidate retrieval over the vector fixture."""
 
 from __future__ import annotations
 
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 from couch_to_mongo_spark.gen import generate_changes
 from couch_to_mongo_spark.sources.changes import infer_feed_schema, read_changes_stream
 from couch_to_mongo_spark.streaming.stateful import conversation_progress_stream
-from couch_to_mongo_spark.streaming.windows import windowed_event_stats
 
 
 def test_stateful_conversation_progress(spark, tmp_path):
@@ -143,80 +141,6 @@ def test_stateful_state_survives_restart(spark, tmp_path):
         assert r["n_events"] == truth[r["conv_id"]]
 
 
-def test_windowed_agg_stream_matches_batch_up_to_watermark(spark, tmp_path):
-    changes = str(tmp_path / "changes")
-    generate_changes(changes, n_events=3000, n_convs=20, seed=95, n_files=3)
-    schema = infer_feed_schema(changes)
-
-    batch_df = spark.read.schema(schema).parquet(changes + "/*.parquet")
-    # the generated feed spans ~50 minutes of event time (1s per seq), so
-    # 5-minute windows + a 2-minute watermark give ~10 windows, most closed
-    batch = windowed_event_stats(
-        batch_df.where(F.col("ts").isNotNull()), window="5 minutes", keys=[]
-    ).toPandas()
-
-    stream = read_changes_stream(spark, changes, schema, max_files_per_trigger=1)
-    q = (
-        windowed_event_stats(
-            stream.where(F.col("ts").isNotNull()),
-            window="5 minutes",
-            keys=[],
-            watermark="2 minutes",
-        )
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM win_counts").toPandas()
-
-    # append mode emits a window once the watermark passes it: the stream's
-    # output is a PREFIX of the batch result (trailing windows still open
-    # at end-of-stream are withheld) and every emitted window matches
-    assert 0 < len(got) <= len(batch)
-    merged = got.merge(batch, on="window_start", suffixes=("_s", "_b"))
-    assert len(merged) == len(got)
-    assert (merged["n_events_s"] == merged["n_events_b"]).all()
-    # and it withheld only the tail: emitted windows are the earliest ones
-    assert set(got["window_start"]) == set(
-        batch.sort_values("window_start")["window_start"].iloc[: len(got)]
-    )
-
-
-def test_stream_dedup_drops_redelivered_events(spark, tmp_path):
-    """At-least-once feed: the same file delivered twice (different paths)
-    must yield each seq once within the watermark horizon."""
-    from couch_to_mongo_spark.gen import make_changes_df, write_change_files
-    from couch_to_mongo_spark.streaming.dedup_stream import dedup_stream
-
-    changes = str(tmp_path / "changes")
-    pdf = make_changes_df(n_events=500, n_convs=8, seed=97)
-    write_change_files(changes, pdf, n_files=1, start_index=0)
-    # redelivery: identical rows, new file -> the file source re-reads them
-    write_change_files(changes, pdf, n_files=1, start_index=1)
-
-    stream = read_changes_stream(
-        spark, changes, infer_feed_schema(changes), max_files_per_trigger=1
-    )
-    q = (
-        dedup_stream(stream, keys=["seq"], watermark="1 hour")
-        .select("seq", "conv_id")
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.sql("SELECT seq, count(*) c FROM dedup_out GROUP BY seq").toPandas()
-    assert len(out) == 500
-    assert (out["c"] == 1).all()
-
-
 def test_ivf_candidates_contain_planted_source(spark):
     """IVF ANN: a query that IS an existing vector must surface that vector
     in its candidate list once enough lists are probed."""
@@ -234,43 +158,3 @@ def test_ivf_candidates_contain_planted_source(spark):
     # the planted source is in the SAME list as the query (identical vector
     # -> identical assignment), so nprobe=1 already recovers all of them
     assert hits == 10
-
-
-def test_session_window_stream_matches_batch(spark, tmp_path):
-    """session_window: streaming emissions (closed sessions) must agree with
-    the batch run of the same expression tree."""
-    from couch_to_mongo_spark.streaming.windows import session_window_stats
-
-    changes = str(tmp_path / "changes")
-    generate_changes(changes, n_events=2000, n_convs=6, seed=99, n_files=3)
-    schema = infer_feed_schema(changes)
-
-    batch_df = spark.read.schema(schema).parquet(changes + "/*.parquet")
-    batch = session_window_stats(
-        batch_df.where(F.col("ts").isNotNull()), gap="30 seconds"
-    ).toPandas()
-
-    stream = read_changes_stream(spark, changes, schema, max_files_per_trigger=1)
-    q = (
-        session_window_stats(
-            stream.where(F.col("ts").isNotNull()),
-            gap="30 seconds",
-            watermark="1 minute",
-        )
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM sess_out").toPandas()
-
-    assert 0 < len(got) <= len(batch)
-    merged = got.merge(
-        batch, on=["conv_id", "session_start"], suffixes=("_s", "_b")
-    )
-    assert len(merged) == len(got)
-    assert (merged["n_events_s"] == merged["n_events_b"]).all()
-    assert (merged["session_end_s"] == merged["session_end_b"]).all()

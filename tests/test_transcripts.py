@@ -189,3 +189,36 @@ def test_render_tool_tags(spark):
     # tool-only tagging
     out2 = render_conversations(df, tool_col="tool").collect()[0]
     assert out2["doc"] == "run it\n[bash]: ls -la\n[bash]: output"
+
+
+def test_conversation_dedup_groups_planted(spark):
+    """Conversation-granularity dedup: two conversations with identical
+    rendered content (different ids) group together with the min id as
+    keeper; a distinct conversation stays its own group."""
+    from couch_to_mongo_spark.functions.text import lsh_dedup_groups
+    from couch_to_mongo_spark.functions.transcripts import render_conversations
+    from pyspark.sql import functions as F
+
+    base = [
+        "the quick brown fox jumps over the lazy dog near the river bank today",
+        "pack my box with five dozen liquor jugs before the long winter night",
+        "how vexingly quick daft zebras jump over the fence in the bright morning",
+    ]
+    rows = []
+    for conv in ("conv-a", "conv-b"):  # identical content, different ids
+        rows += [(conv, t, base[t]) for t in range(3)]
+    zalt = [
+        "completely unrelated discussion about database snapshot retention policies",
+        "merge semantics and fencing guarantee exactly once application of batches",
+        "columnar storage formats keep statistics per file for scan pruning purposes",
+    ]
+    rows += [("conv-z", t, zalt[t]) for t in range(3)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    rendered = render_conversations(df)
+    groups = lsh_dedup_groups(
+        rendered, text_col="doc", id_col="conv_id",
+        k=8, bands=4, n=3, threshold=0.5, max_bucket_size=50,
+    )
+    got = {r["conv_id"]: r["group_id"] for r in groups.collect()}
+    assert got["conv-a"] == "conv-a" and got["conv-b"] == "conv-a"
+    assert got["conv-z"] == "conv-z"

@@ -283,6 +283,21 @@ def test_files_per_bucket_splits_hot_buckets_fast_path(spark, tmp_path):
     assert any(len(fl) > 1 for fl in files.values()), files
 
 
+def test_ann_multiprobe_recall_floor(spark):
+    """Multi-probe LSH recovers planted near-duplicates (cosine 0.95):
+    recall@1 >= 0.9 at probes=2, monotone in probes (VERDICT r01 next-#9).
+    Top-k-among-noise recall is intrinsically low on this fixture (best
+    cross-pair cosine ~0.35) — documented in planted_neardup_recall."""
+    from couch_to_mongo_spark.functions.vectors import planted_neardup_recall
+
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    r0 = planted_neardup_recall(emb, n_queries=40, probes=0)
+    r1 = planted_neardup_recall(emb, n_queries=40, probes=1)
+    r2 = planted_neardup_recall(emb, n_queries=40, probes=2)
+    assert r0 <= r1 <= r2
+    assert r2 >= 0.9
+
+
 def test_bucket_salt_independent_of_bucket_hash(spark):
     """files_per_bucket salt must split rows WITHIN a bucket: with the salt
     derived from the same unseeded hash as the bucket, pmod(h, 4) is
@@ -290,6 +305,7 @@ def test_bucket_salt_independent_of_bucket_hash(spark):
     split. The seeded salt gives >1 distinct salt per bucket."""
     from pyspark.sql import functions as F
 
+    from couch_to_mongo_spark.operators.dedup import bucket_partitioned_lww
 
     df = spark.range(2000).select(
         F.concat(F.lit("conv-"), F.col("id")).alias("conv_id"),
@@ -369,6 +385,82 @@ def test_footer_stats_parallel_path_matches_serial(spark, tmp_table_path):
     assert par[0] == 3000
 
 
+def test_stratified_sample_deterministic_and_monotone(spark):
+    """Data-mixing sampler: same kept set across partitionings; raising a
+    stratum's fraction strictly grows (never replaces) the kept set; rates
+    land near targets."""
+    from pyspark.sql import functions as F
+
+    from couch_to_mongo_spark.functions.text import stratified_sample
+
+    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    frac = {"en": 0.5, "de": 0.2}
+    a = stratified_sample(docs, frac, seed=3).select("doc_id")
+    b = stratified_sample(docs.repartition(13), frac, seed=3).select("doc_id")
+    ids_a = {r[0] for r in a.collect()}
+    assert ids_a == {r[0] for r in b.collect()}
+
+    bigger = stratified_sample(docs, {"en": 0.8, "de": 0.2}, seed=3).select("doc_id")
+    ids_big = {r[0] for r in bigger.collect()}
+    assert ids_a <= ids_big and len(ids_big) > len(ids_a)
+
+    rates = {
+        r["lang"]: r["n"]
+        for r in stratified_sample(docs, frac, seed=3)
+        .groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    totals = {
+        r["lang"]: r["n"]
+        for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert set(rates) == {"en", "de"}  # default fraction 0 drops the rest
+    for k, f in frac.items():
+        assert abs(rates[k] / totals[k] - f) < 0.1
+
+
+def test_token_budget_sample_attainment_and_monotonicity(spark):
+    """The window-prefix sampler must land within ONE document of each
+    stratum's token budget (and within 1% for budgets >> doc size), be a
+    strict superset under budget increases (prefix property), and agree
+    with the fraction solver's expected-yield arithmetic."""
+    from couch_to_mongo_spark.functions.text import (
+        stratified_sample,
+        token_budget_fractions,
+        token_budget_sample,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    budgets = {"en": 8000, "de": 3000}
+    out = token_budget_sample(docs, budgets, seed=7).toPandas()
+    max_doc = out["n_tokens"].max()
+    for lang, b in budgets.items():
+        got = int(out[out["lang"] == lang]["n_tokens"].sum())
+        # >= budget (the crossing doc is kept whole), over by < one doc
+        assert b <= got < b + max_doc, (lang, got, b)
+        assert got - b <= 0.01 * b or got - b <= max_doc
+    # monotone: doubling one budget keeps every previously-kept doc
+    out2 = token_budget_sample(docs, {"en": 16000, "de": 3000}, seed=7).toPandas()
+    assert set(out["doc_id"]) <= set(out2["doc_id"])
+    # unlisted strata are dropped entirely
+    assert set(out["lang"]) == set(budgets)
+
+    # fraction solver: budget/total capped at 1, and the derived
+    # stratified_sample keeps ~budget tokens in expectation
+    fr = token_budget_fractions(docs, {"en": 8000, "de": 10**9})
+    assert fr["de"] == 1.0 and 0 < fr["en"] < 1
+    kept = stratified_sample(docs, fr, strata_col="lang")
+    from couch_to_mongo_spark.functions.text import _bpe_tokens_col
+    import pyspark.sql.functions as F
+
+    got_en = (
+        kept.where(F.col("lang") == "en")
+        .agg(F.sum(_bpe_tokens_col("text")))
+        .collect()[0][0]
+    )
+    # hash-threshold yield has sampling noise; fixture is small so allow 20%
+    assert abs(got_en - 8000) < 0.2 * 8000, got_en
+
+
 def test_pack_sequences_invariants(spark):
     """Packing must tile exactly: per (shard, seq_id) the spans sum to
     seq_len (except each shard's final sequence), start offsets are
@@ -432,3 +524,64 @@ def test_pack_sequences_derives_shards(spark):
     assert set(out["shard"].unique()) <= set(range(8))
     total = docs.select(F.sum(_bpe_tokens_col("text"))).collect()[0][0]
     assert int(out["n_toks"].sum()) == int(total)
+
+
+def test_mask_contaminated_semantics(spark):
+    """Masked docs carry the sentinel exactly n_masked times; clean docs
+    rebuild to their normalized token stream unchanged."""
+    from couch_to_mongo_spark.functions.text import mask_contaminated, norm_text
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    bench = docs.where(F.col("doc_id") < 10)
+    corpus = docs.where(F.col("doc_id") >= 10)
+    out = mask_contaminated(corpus, bench, n=3, min_common=2)
+    joined = out.join(
+        corpus.select("doc_id", norm_text(F.col("text")).alias("_norm")), "doc_id"
+    ).toPandas()
+    dirty = joined[joined["n_masked"] > 0]
+    assert len(dirty) > 0
+    for _, r in joined.iterrows():
+        assert r["masked_text"].split().count("<extra_id_0>") == r["n_masked"]
+        if r["n_masked"] == 0:
+            assert r["masked_text"] == r["_norm"]
+
+
+def test_mask_pii_semantics(spark):
+    """Typed sentinels, per-class counts, class-ordered masking (email
+    digits must not double-count as numbers), clean text untouched."""
+    from couch_to_mongo_spark.functions.text import mask_pii
+
+    rows = [
+        (1, "write to alice.smith+x@mail.example.org or 10.1.2.3 ref 123456789 ok"),
+        (2, "no pii here just words and the number 1234 stays"),
+        (3, "two mails a@b.io c@d.co and 99.99.99.99"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: r.asDict() for r in mask_pii(df).collect()}
+    assert out[1]["masked_text"] == "write to <email> or <ip> ref <number> ok"
+    assert (out[1]["n_email"], out[1]["n_ip"], out[1]["n_number"], out[1]["n_pii"]) == (1, 1, 1, 3)
+    assert out[2]["masked_text"] == rows[1][1] and out[2]["n_pii"] == 0
+    assert out[3]["n_email"] == 2 and out[3]["n_ip"] == 1 and out[3]["n_number"] == 0
+
+
+def test_unigram_logprob_score(spark):
+    """Hand-checked toy corpus: vocab cutoff keeps the top-V by (count,
+    token), OOV tokens hit the ln(1/total) floor, per-doc averages agree
+    with the closed-form values."""
+    import math
+
+    from couch_to_mongo_spark.functions.text import unigram_logprob_score
+
+    # corpus: 'aa' x4, 'bb' x3, 'cc' x1  -> total 8
+    rows = [(1, "aa aa bb"), (2, "aa bb cc"), (3, "aa bb")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {r["doc_id"]: r.asDict()
+           for r in unigram_logprob_score(df, vocab_size=2).collect()}
+    lp_a = round(math.log(4 / 8), 6)
+    lp_b = round(math.log(3 / 8), 6)
+    floor = round(math.log(1 / 8), 6)  # 'cc' is beyond the top-2 vocab
+    assert out[1]["n_oov"] == 0
+    assert out[1]["avg_logprob"] == round((2 * lp_a + lp_b) / 3, 4)
+    assert out[2]["n_oov"] == 1
+    assert out[2]["avg_logprob"] == round((lp_a + lp_b + floor) / 3, 4)
+    assert out[3]["n_tokens"] == 2 and out[3]["n_oov"] == 0
