@@ -11,9 +11,10 @@ instead of a hand-built TreeMap of key ranges. Session lifecycle
 plus the atomic snapshot commit itself: a killed bootstrap leaves version 0
 untouched (no partial state), so resume == rerun.
 
-Bootstrap rows are stamped ``_seq = seq_floor`` (default -1) and
+Bootstrap rows are stamped ``_seq = BOOTSTRAP_SEQ`` (-1) and
 ``_rev = '0-bootstrap'`` so every real CDC event (seq >= 0, rev_gen >= 1)
-wins LWW against the bootstrap copy.
+wins LWW against the bootstrap copy. The copy is written one file per
+bucket, like every other whole-bucket writer.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ from couch_to_mongo_spark.functions.normalize import normalize_text
 from couch_to_mongo_spark.operators.dedup import lww_dedup
 from couch_to_mongo_spark.operators.merge import (
     DELETED_COL,
+    KEY_COLS,
     REV_COL,
     SEQ_COL,
     MergeResult,
@@ -36,21 +38,21 @@ from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
 
 import os
 
+# below every real change-feed seq (>= 0)
+BOOTSTRAP_SEQ = -1
+
 
 def bulk_bootstrap(
     spark: SparkSession,
     table_path: str,
     source_df: DataFrame,
-    key_cols: list[str] | None = None,
     n_buckets: int = 16,
     run_id: str = "bootstrap",
-    order_cols: list[str] | None = None,
     normalize: bool = True,
-    seq_floor: int = -1,
-    files_per_bucket: int = 1,
 ) -> tuple[LakeTable, MergeResult]:
-    """Copy a full source snapshot into a fresh table (one commit)."""
-    key_cols = key_cols or ["conv_id", "turn_idx"]
+    """Copy a full source snapshot into a fresh table (one commit).
+    Overlapping source rows of one key resolve to the latest ``ts`` when
+    the source has one."""
     payload_schema = source_df.schema
     table = LakeTable.create(
         spark, table_path, with_engine_schema(payload_schema), n_buckets=n_buckets
@@ -63,29 +65,16 @@ def bulk_bootstrap(
         df = df.withColumn("text", normalize_text(F.col("text")))
     # defensive dedup: source snapshots can overlap at range boundaries
     # (the reference's boundary-overlap dedup, Couch.java:320-341 / P4)
-    if order_cols is None:
-        order_cols = [c for c in ("ts",) if c in df.columns] or key_cols[:1]
-    df = lww_dedup(df, key_cols, order_cols)
+    order_cols = ["ts"] if "ts" in df.columns else [KEY_COLS[0]]
+    df = lww_dedup(df, list(KEY_COLS), order_cols)
     df = (
-        df.withColumn(SEQ_COL, F.lit(seq_floor).cast("long"))
+        df.withColumn(SEQ_COL, F.lit(BOOTSTRAP_SEQ).cast("long"))
         .withColumn(REV_COL, F.lit("0-bootstrap"))
         .withColumn(DELETED_COL, F.lit(False))
     )
     df = align_to_schema(df, table.snapshot().schema)
-    df = df.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
-    n_parts = n_buckets * max(files_per_bucket, 1)
-    if files_per_bucket > 1:
-        # Salt hash seeded independently of the bucket hash (extra literal
-        # arg): pmod(h, n_buckets) and pmod(h, files_per_bucket) of the SAME
-        # h are congruent whenever files_per_bucket divides n_buckets, which
-        # leaves hot buckets unsplit (matches dedup.py bucket_partitioned_lww).
-        df = df.repartition(
-            n_parts,
-            F.col(BUCKET_COL),
-            F.pmod(F.xxhash64(F.col(key_cols[0]), F.lit(1)), F.lit(files_per_bucket)),
-        )
-    else:
-        df = df.repartition(n_parts, F.col(BUCKET_COL))
+    df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets))
+    df = df.repartition(n_buckets, F.col(BUCKET_COL))
 
     new_files = table.write_bucketed(df, snapshot_hint="s00000001", n_buckets=n_buckets)
     from couch_to_mongo_spark.operators.merge import _footer_seq_stats
@@ -96,8 +85,8 @@ def bulk_bootstrap(
         skipped=False,
         n_inserts=n_rows,
         rows_applied=n_rows,
-        seq_min=seq_floor,
-        seq_max=seq_floor,
+        seq_min=BOOTSTRAP_SEQ,
+        seq_max=BOOTSTRAP_SEQ,
         touched_buckets=len(new_files),
     )
     snap = table.commit(
@@ -112,8 +101,8 @@ def bulk_bootstrap(
     LineageLog(os.path.join(table_path, "_lineage")).append(
         run_id,
         0,
-        seq_min=seq_floor,
-        seq_max=seq_floor,
+        seq_min=BOOTSTRAP_SEQ,
+        seq_max=BOOTSTRAP_SEQ,
         rows_applied=n_rows,
         n_inserts=n_rows,
         snapshot_id=snap.snapshot_id,

@@ -1,4 +1,5 @@
-"""Compaction: fold merge-on-read delta files back to one file per bucket.
+"""Compaction: fold merge-on-read delta files back to one key-sorted file
+per bucket.
 
 The merge-on-read write path (operators/merge.py) appends O(batch) delta
 files per micro-batch; compaction amortizes the table rewrite over many
@@ -17,57 +18,48 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from couch_to_mongo_spark.operators.merge import DELETED_COL, fold_stored_rows
+from couch_to_mongo_spark.operators.merge import DELETED_COL, KEY_COLS, fold_stored_rows
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
 
 
 def compact(
     table: LakeTable,
     max_files_per_bucket: int = 8,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     purge_tombstones: bool = False,
-    buckets: list[int] | None = None,
-    sort_within_bucket: bool = True,
 ) -> dict:
     """Rewrite every bucket holding more than ``max_files_per_bucket``
     files to a single LWW-resolved file. Returns {bucket: n_files_before}.
 
-    ``sort_within_bucket`` (default on) key-orders each rewritten file via
-    ``sortWithinPartitions`` — a NARROW op on the partitions the rewrite
-    already owns, so it adds zero shuffles. Payoff at scale: parquet
-    row-group min/max stats on (conv_id, turn_idx) become tight instead of
-    whole-file-wide, so point lookups and key-range scans skip row groups
-    inside the pruned bucket (the scan-time twin of the bucket pruning the
-    table already does), and runs of equal conv_id compress better. MOR
-    delta files stay write-order (append latency first); compaction is
-    where the table earns its read layout — the same split Iceberg makes
-    with its sort-order spec applying to rewrites.
+    Each rewritten file is key-ordered via ``sortWithinPartitions`` — a
+    NARROW op on the partitions the rewrite already owns, so it adds zero
+    shuffles. Payoff at scale: parquet row-group min/max stats on
+    (conv_id, turn_idx) become tight instead of whole-file-wide, so point
+    lookups and key-range scans skip row groups inside the pruned bucket
+    (the scan-time twin of the bucket pruning the table already does), and
+    runs of equal conv_id compress better. MOR delta files stay write-order
+    (append latency first); compaction is where the table earns its read
+    layout — the same split Iceberg makes with its sort-order spec
+    applying to rewrites.
     """
     snap = table.snapshot()
-    if buckets is None:
-        buckets = [
-            int(b) for b, fl in snap.files.items() if len(fl) > max_files_per_bucket
-        ]
+    buckets = [int(b) for b, fl in snap.files.items() if len(fl) > max_files_per_bucket]
     if not buckets:
         return {}
     before = {b: len(snap.files.get(str(b), [])) for b in buckets}
 
-    df = table.read_buckets(buckets)
-    key_cols = [c for c in key_cols if c in df.columns]
-    df = fold_stored_rows(df, key_cols)
+    df = fold_stored_rows(table.read_buckets(buckets))
     if purge_tombstones:
         df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-    df = df.withColumn(BUCKET_COL, bucket_expr(key_cols[0], snap.n_buckets))
+    df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], snap.n_buckets))
     df = df.repartition(len(buckets), F.col(BUCKET_COL))
-    if sort_within_bucket:
-        # narrow (per-partition) sort. BUCKET_COL leads the sort key: the
-        # dynamic-partition writer REQUIRES ordering on the partition
-        # column, and if our outputOrdering doesn't provide it Spark adds
-        # its own SortExec on _bucket — which is NOT stable under spill,
-        # so a big compaction would silently lose the key order this
-        # feature exists for. Leading with _bucket satisfies the writer's
-        # required ordering structurally (no extra sort inserted).
-        df = df.sortWithinPartitions(BUCKET_COL, *key_cols)
+    # narrow (per-partition) sort. BUCKET_COL leads the sort key: the
+    # dynamic-partition writer REQUIRES ordering on the partition column,
+    # and if our outputOrdering doesn't provide it Spark adds its own
+    # SortExec on _bucket — which is NOT stable under spill, so a big
+    # compaction would silently lose the key order. Leading with _bucket
+    # satisfies the writer's required ordering structurally (no extra
+    # sort inserted).
+    df = df.sortWithinPartitions(BUCKET_COL, *KEY_COLS)
 
     new_files = table.write_bucketed(
         df, snapshot_hint=f"c{snap.version + 1:08d}", n_buckets=snap.n_buckets

@@ -49,10 +49,10 @@ VIEW_SCHEMA = T.StructType(
 
 class RenderedCorpusView:
     """Maintains ``view`` (a LakeTable of one rendered doc per
-    conversation) from a primary transcript table, one CDC batch at a
-    time. ``render_opts`` pass through to
+    conversation, rendered by
     :func:`~couch_to_mongo_spark.functions.transcripts.render_conversations`
-    (role_col / sep / max_turns / keep)."""
+    with its defaults) from a primary transcript table, one CDC batch at a
+    time."""
 
     def __init__(
         self,
@@ -60,14 +60,12 @@ class RenderedCorpusView:
         primary: LakeTable,
         view_path: str,
         n_buckets: int = 16,
-        **render_opts,
     ):
         self.spark = spark
         self.primary = primary
         self.view = LakeTable.create(
             spark, view_path, with_engine_schema(VIEW_SCHEMA), n_buckets=n_buckets
         )
-        self.render_opts = render_opts
 
     # -- incremental refresh ------------------------------------------
 
@@ -77,7 +75,6 @@ class RenderedCorpusView:
         seq: int,
         run_id: str = "corpus_view",
         batch_id: int = 0,
-        broadcast_convs: bool = True,
     ) -> MergeResult:
         """Re-render exactly the conversations in ``changed_convs`` (any
         DataFrame with a conv_id column; deduped here) as of the
@@ -87,29 +84,19 @@ class RenderedCorpusView:
 
         Conversations that end up with NO live turns (fully tombstoned)
         get a delete row — the view never serves a stale doc for a dead
-        conversation.
-
-        ``broadcast_convs`` forces the semi-join's build side broadcast —
-        right for the normal micro-batch regime (changed convs ≪ corpus).
-        Set False for giant catch-up batches whose distinct-conv set
-        won't fit an executor; the semi-join then shuffles both sides."""
+        conversation."""
         return merge_batch(
             self.view,
-            self.plan_refresh(changed_convs, seq, broadcast_convs),
+            self.plan_refresh(changed_convs, seq),
             run_id=run_id,
             batch_id=batch_id,
         )
 
-    #: above this many changed convs the broadcast path stops inlining the
-    #: conv set as a pushed-down IN literal and semi-joins instead
+    #: above this many changed convs the refresh stops inlining the conv set
+    #: as a pushed-down IN literal and broadcast-semi-joins instead
     PUSHDOWN_MAX_CONVS = 10_000
 
-    def plan_refresh(
-        self,
-        changed_convs: DataFrame,
-        seq: int,
-        broadcast_convs: bool = True,
-    ) -> DataFrame:
+    def plan_refresh(self, changed_convs: DataFrame, seq: int) -> DataFrame:
         """The refresh batch as a DataFrame (upserts + tombstones), before
         the MERGE — separated so tests can plan-assert the bucket-pruned,
         conv-filtered, single-render-shuffle shape.
@@ -119,46 +106,26 @@ class RenderedCorpusView:
         for untouched convs in the touched buckets is pure waste — at 32
         buckets a 50-conv micro-batch used to fold ~27/32 of the table's
         rows through the window. For a micro-batch-sized set
-        (broadcast_convs and <= PUSHDOWN_MAX_CONVS) the conv ids inline
-        as a pushed-down IN literal, so the parquet scan row-group-skips
-        on the conv-sorted compacted files; bigger sets semi-join against
-        the raw bucket read instead. Measured: 5k-event tail refresh
-        2.4s -> see BENCH cdc_view_incremental."""
+        (<= PUSHDOWN_MAX_CONVS) the conv ids inline as a pushed-down IN
+        literal, so the parquet scan row-group-skips on the conv-sorted
+        compacted files; bigger sets broadcast-semi-join against the raw
+        bucket read instead. Measured: 5k-event tail refresh 2.4s -> see
+        BENCH cdc_view_incremental."""
         convs = changed_convs.select("conv_id").distinct()
-        if not broadcast_convs:
-            # the conv set feeds THREE consumers (bucket-id collect, semi-
-            # join build, delete anti-join probe) and exchange reuse dies
-            # across differently-pruned branches — broadcast dedups the
-            # derivation implicitly, but a giant non-broadcast catch-up set
-            # would re-shuffle the distinct three times. Materialize once.
-            convs = convs.localCheckpoint(eager=True)
         # bounded driver collect: touched conv ids -> touched bucket ids
-        # (plus, for the broadcast regime, the conv ids themselves — the
-        # same O(touched) contract merge itself makes; broadcast_convs
-        # already asserts the set is executor-memory-sized).
+        # plus the conv ids themselves — the same O(touched) contract
+        # merge itself makes, and the set the broadcast must hold anyway.
         n_b = self.primary.snapshot(materialize=False).n_buckets
-        if broadcast_convs:
-            pairs = convs.select(
-                "conv_id", bucket_expr("conv_id", n_b).alias("b")
-            ).collect()
-            touched = sorted({r["b"] for r in pairs})
-            conv_ids = [r["conv_id"] for r in pairs]
-        else:
-            touched = [
-                r["b"]
-                for r in convs.select(
-                    bucket_expr("conv_id", n_b).alias("b")
-                ).distinct().collect()
-            ]
-            conv_ids = None
+        pairs = convs.select("conv_id", bucket_expr("conv_id", n_b).alias("b")).collect()
+        touched = sorted({r["b"] for r in pairs})
+        conv_ids = [r["conv_id"] for r in pairs]
         raw = self.primary.read_buckets(touched)
-        if conv_ids is not None and len(conv_ids) <= self.PUSHDOWN_MAX_CONVS:
+        if len(conv_ids) <= self.PUSHDOWN_MAX_CONVS:
             raw = raw.where(F.col("conv_id").isin(conv_ids))
         else:
-            build = F.broadcast(convs) if broadcast_convs else convs
-            raw = raw.join(build, "conv_id", "left_semi")
+            raw = raw.join(F.broadcast(convs), "conv_id", "left_semi")
         live = resolve_live_state(raw)
-        rendered = render_conversations(live, **self.render_opts)
+        rendered = render_conversations(live)
         upserts = rendered.select(
             "conv_id",
             F.lit(0).cast("int").alias("turn_idx"),
@@ -182,12 +149,7 @@ class RenderedCorpusView:
         )
         return upserts.unionByName(deletes)
 
-    def catch_up(
-        self,
-        run_id: str = "corpus_view",
-        batch_id: int | None = None,
-        broadcast_convs: bool = True,
-    ) -> MergeResult | None:
+    def catch_up(self, run_id: str = "corpus_view") -> MergeResult | None:
         """Deferred-maintenance refresh: bring the view up to the primary's
         CURRENT snapshot without per-batch conv sets. The changed-conv set
         is derived from the primary table itself — files whose per-file
@@ -202,12 +164,11 @@ class RenderedCorpusView:
         The view's high-water mark is recovered from its own manifests
         (every refresh stamps rows with the primary's max seq), so
         catch-up needs no driver-side state — the crash-safe property the
-        deferred mode rests on. ``batch_id=None`` (default) fences the
-        commit at the primary's seq high-water: monotonic across
-        catch-ups, recoverable after a crash (unlike a driver counter),
-        and never colliding with a per-batch refresh fence as long as
-        catch-ups run under their own run_id (CdcPipeline uses
-        ``<run_id>:catchup``).
+        deferred mode rests on. The commit is fenced at the primary's seq
+        high-water: monotonic across catch-ups, recoverable after a crash
+        (unlike a driver counter), and never colliding with a per-batch
+        refresh fence as long as catch-ups run under their own run_id
+        (CdcPipeline uses ``<run_id>:catchup``).
 
         Late-row coverage (r7 correctness fix, ADVICE r6 medium): a late
         out-of-order event whose seq is <= the view's hwm can still win
@@ -255,8 +216,7 @@ class RenderedCorpusView:
             changed,
             seq=primary_hwm,
             run_id=run_id,
-            batch_id=int(primary_hwm) if batch_id is None else batch_id,
-            broadcast_convs=broadcast_convs,
+            batch_id=int(primary_hwm),
         )
 
     def _earliest_version_at_hwm(self, hwm: int) -> int | None:

@@ -18,7 +18,10 @@ other in tests/test_units.py):
   shuffle volume.
 - :func:`bucket_partitioned_lww` — bucket repartition, then a window LWW
   inside those partitions: **the merge's write-side kernel** (one shuffle
-  shared with the bucketed write).
+  shared with the bucketed write, one file per touched bucket). A hot
+  conversation's updates all hash to one bucket; the window folds each of
+  its keys to one row before the write, so the batch's write is
+  O(distinct keys), not O(events).
 """
 
 from __future__ import annotations
@@ -73,45 +76,24 @@ def bucket_partitioned_lww(
     key_cols: list[str],
     order_cols: list[str],
     n_buckets: int,
-    files_per_bucket: int = 1,
-    bucket_key: str | None = None,
 ) -> DataFrame:
-    """Single-shuffle LWW for the MOR fast path: repartition by
-    ``(bucket[, salt])`` FIRST, then dedup with a window whose partitionBy
-    is a superset of the partition keys — Catalyst plans the window with
-    NO further exchange (Sort + WindowGroupLimit prune losers in place),
-    and a bucket-partitioned write downstream streams straight out of the
-    same partitions. Exactly one full-payload shuffle end to end
-    (plan-asserted: tests/test_plans.py::test_fast_merge_single_shuffle).
+    """Single-shuffle LWW for the merge: repartition by ``bucket(key_cols[0])``
+    FIRST, then dedup with a window whose partitionBy is a superset of the
+    partition key — Catalyst plans the window with NO further exchange
+    (Sort + WindowGroupLimit prune losers in place), and a
+    bucket-partitioned write downstream streams straight out of the same
+    partitions, one file per touched bucket. Exactly one full-payload
+    shuffle end to end (plan-asserted:
+    tests/test_plans.py::test_fast_merge_single_shuffle).
 
-    ``files_per_bucket > 1`` adds a key-derived salt column to the
-    partitioning (a real column, not a literal — literals break Catalyst's
-    partitioning-subset detection) so hot buckets split across writers
-    while each key's rows stay co-located. The salt hash is seeded
-    independently of the bucket hash (extra literal column in xxhash64):
-    ``pmod(h, n_buckets)`` and ``pmod(h, files_per_bucket)`` of the SAME h
-    are congruent whenever files_per_bucket divides n_buckets, which would
-    make the salt constant within a bucket and leave hot buckets unsplit.
-
-    Returns the deduped frame WITH the transient ``_bucket`` (and
-    ``_salt``) columns still attached.
+    Returns the deduped frame WITH the transient ``_bucket`` column still
+    attached.
     """
     from couch_to_mongo_spark.tableformat import BUCKET_COL, bucket_expr
 
-    bucket_key = bucket_key or key_cols[0]
-    n_parts = n_buckets * max(files_per_bucket, 1)
-    b = df.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
-    part_cols = [BUCKET_COL]
-    if files_per_bucket > 1:
-        b = b.withColumn(
-            "_salt",
-            F.pmod(
-                F.xxhash64(F.col(bucket_key), F.lit(1)), F.lit(files_per_bucket)
-            ).cast("int"),
-        )
-        part_cols.append("_salt")
-    b = b.repartition(n_parts, *[F.col(c) for c in part_cols])
-    w = Window.partitionBy(*part_cols, *key_cols).orderBy(
+    b = df.withColumn(BUCKET_COL, bucket_expr(key_cols[0], n_buckets))
+    b = b.repartition(n_buckets, F.col(BUCKET_COL))
+    w = Window.partitionBy(BUCKET_COL, *key_cols).orderBy(
         *[F.col(c).desc() for c in order_cols]
     )
     return (

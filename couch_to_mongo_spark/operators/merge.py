@@ -47,7 +47,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import asdict, dataclass, fields
-from typing import Any, Sequence
+from typing import Any
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -63,37 +63,34 @@ from couch_to_mongo_spark.operators.poison import POISON_COL
 from couch_to_mongo_spark.operators.schema_evolution import align_to_schema, evolve_schema
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
 
+# the merge key: every table is keyed and bucketed by it
+KEY_COLS = ("conv_id", "turn_idx")
 # engine-managed columns stored in the table alongside the payload
 SEQ_COL = "_seq"
 REV_COL = "_rev"
 DELETED_COL = "_deleted"
 ENGINE_COLS = (SEQ_COL, REV_COL, DELETED_COL)
 # transient columns never persisted
-TRANSIENT_COLS = ("op", "seq", "rev_gen", "_src", "_salt", BUCKET_COL)
+TRANSIENT_COLS = ("op", "seq", "rev_gen", BUCKET_COL)
 
 
-def fold_stored_rows(
-    df: DataFrame, key_cols: Sequence[str] = ("conv_id", "turn_idx")
-) -> DataFrame:
+def fold_stored_rows(df: DataFrame) -> DataFrame:
     """The stored-row LWW fold: one row per key, the winner by (_seq,
     rev generation, _rev). Tombstone winners are KEPT — compaction,
     rescale and the change-feed pre-state need them (an out-of-order
     replay of an old update must still lose to the tombstone)."""
     df = with_rev_gen(df, rev_col=REV_COL)
-    return lww_dedup(df, list(key_cols), [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+    return lww_dedup(df, list(KEY_COLS), [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
 
 
-def resolve_live_state(
-    df: DataFrame, key_cols: Sequence[str] = ("conv_id", "turn_idx")
-) -> DataFrame:
+def resolve_live_state(df: DataFrame) -> DataFrame:
     """Merge-on-read resolution of raw stored rows to live state:
     :func:`fold_stored_rows`, then tombstone winners and engine columns
     dropped. Any per-conv pre-filter on ``df`` composes safely: LWW is
     per (conv_id, turn_idx) key, so dropping whole conversations before
     the fold cannot change any surviving key's winner."""
-    keys = [c for c in key_cols if c in df.columns]
-    if SEQ_COL in df.columns and keys:
-        df = fold_stored_rows(df, keys)
+    if SEQ_COL in df.columns:
+        df = fold_stored_rows(df)
     if DELETED_COL in df.columns:
         df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
     return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
@@ -136,18 +133,14 @@ def merge_batch(
     batch_df: DataFrame,
     run_id: str,
     batch_id: int,
-    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-    op_col: str = "op",
-    seq_col: str = "seq",
-    rev_col: str = "_rev",
-    files_per_bucket: int = 1,
     transform_after_dedup=None,
     dead_letter=None,
     cdf=None,
 ) -> MergeResult:
     """Apply one change batch to the table, exactly-once under replay.
 
-    ``batch_df`` columns: key_cols + op + seq + _rev + payload columns.
+    ``batch_df`` columns: conv_id + turn_idx + op + seq + _rev (optional)
+    + payload columns.
 
     Appends the LWW-deduped batch (tombstones included) as per-bucket
     delta files — write cost O(batch), never O(table); readers resolve
@@ -177,34 +170,31 @@ def merge_batch(
     # metadata-only load: merge needs version/schema/n_buckets here
     snap = table.snapshot(materialize=False)
     n_buckets = snap.n_buckets
-    key_cols = list(key_cols)
 
     # the source seq range rides along the write as observed metrics
     src_range = Observation()
     b = batch_df.observe(
-        src_range, F.min(seq_col).alias("seq_min"), F.max(seq_col).alias("seq_max")
+        src_range, F.min("seq").alias("seq_min"), F.max("seq").alias("seq_max")
     )
-    if rev_col not in b.columns:
-        b = b.withColumn(rev_col, F.lit(None).cast("string"))
-    b = with_rev_gen(b, rev_col=rev_col)
+    if REV_COL not in b.columns:
+        b = b.withColumn(REV_COL, F.lit(None).cast("string"))
+    b = with_rev_gen(b, rev_col=REV_COL)
     # Single-shuffle apply. The ONE exchange is the bucket repartition, done
     # FIRST; everything downstream reuses it: the partition keys are a
     # subset of the dedup window's partitionBy, so Catalyst plans the LWW
     # as Sort+WindowGroupLimit+Window with NO further exchange, and the
     # bucket-partitioned write streams straight out of the same partitions
-    # (one file per bucket x salt). The payload crosses the wire once.
+    # (one file per touched bucket). The payload crosses the wire once.
     b = bucket_partitioned_lww(
-        b, key_cols, [seq_col, "rev_gen", rev_col], n_buckets, files_per_bucket
+        b, list(KEY_COLS), ["seq", "rev_gen", REV_COL], n_buckets
     )
     b, n_poison, poison_cache = _transform_and_quarantine(
         b, transform_after_dedup, dead_letter, run_id, batch_id
     )
     try:
-        b = b.withColumn(DELETED_COL, F.col(op_col) == F.lit("d")).withColumnRenamed(
-            seq_col, SEQ_COL
+        b = b.withColumn(DELETED_COL, F.col("op") == F.lit("d")).withColumnRenamed(
+            "seq", SEQ_COL
         )
-        if rev_col != REV_COL:
-            b = b.withColumnRenamed(rev_col, REV_COL)
         payload_fields = [
             f
             for f in b.schema.fields
@@ -213,11 +203,11 @@ def merge_batch(
         evolved = evolve_schema(
             snap.schema, with_engine_schema(T.StructType(payload_fields))
         )
-        # align drops the physical bucket/salt columns; the ROWS stay in
-        # their bucket partitions (projections preserve partitioning), so
-        # the partitionBy write still emits one file per bucket x salt
+        # align drops the physical bucket column; the ROWS stay in their
+        # bucket partitions (projections preserve partitioning), so the
+        # partitionBy write still emits one file per bucket
         new_rows = align_to_schema(b, evolved).withColumn(
-            BUCKET_COL, bucket_expr(key_cols[0], n_buckets)
+            BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets)
         )
         delta = table.write_bucketed(
             new_rows, snapshot_hint=f"s{snap.version + 1:08d}", n_buckets=n_buckets
@@ -238,7 +228,7 @@ def merge_batch(
         result.seq_min, result.seq_max = src["seq_min"], src["seq_max"]
     if cdf is not None:
         result.n_inserts, result.n_updates, result.n_deletes = _emit_changes(
-            table, cdf, delta, snap.version, evolved, key_cols, run_id, batch_id
+            table, cdf, delta, snap.version, evolved, run_id, batch_id
         )
     # append commit: rebases automatically under concurrent writers
     new_snap = table.commit(
@@ -273,7 +263,6 @@ def _emit_changes(
     delta: dict[int, list[str]],
     base_version: int,
     evolved: T.StructType,
-    key_cols: list[str],
     run_id: str,
     batch_id: int,
 ) -> tuple[int, int, int]:
@@ -295,11 +284,10 @@ def _emit_changes(
     )
     # RESOLVED winners incl. tombstones (see classify_changes docstring)
     pre = fold_stored_rows(
-        align_to_schema(table.read_buckets(sorted(delta), version=base_version), evolved),
-        key_cols,
+        align_to_schema(table.read_buckets(sorted(delta), version=base_version), evolved)
     )
     changes, cache = classify_changes(
-        batch, pre, key_cols, DELETED_COL, [f.name for f in evolved.fields], run_id, batch_id
+        batch, pre, list(KEY_COLS), DELETED_COL, [f.name for f in evolved.fields], run_id, batch_id
     )
     counts = Observation()
     kind = F.col(CHANGE_TYPE_COL)
@@ -318,18 +306,14 @@ def _emit_changes(
     return c["insert"], c["update_postimage"], c["delete"]
 
 
-def read_state(
-    table: LakeTable,
-    version: int | None = None,
-    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-) -> DataFrame:
+def read_state(table: LakeTable, version: int | None = None) -> DataFrame:
     """The logical (public) table state: live rows, payload columns only
     (:func:`resolve_live_state` over every stored row). On a compacted
     table the fold is a no-op pass. A key filter on the result
     (``read_state(t).where(conv_id == c)``) reaches the parquet scan: LWW
     is per key, and the fold emits the keys from its group keys, so
     Catalyst pushes the predicate below the aggregate."""
-    return resolve_live_state(table.read(version), key_cols)
+    return resolve_live_state(table.read(version))
 
 
 def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, batch_id):

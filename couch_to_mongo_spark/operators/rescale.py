@@ -19,7 +19,8 @@ atomic strict-replace commit:
 
 The rewrite itself folds multi-version MOR deltas with the same LWW kernel
 compaction uses (tombstones kept — out-of-order replays must still lose to
-them), so the rescaled table starts compact. Cost is one table-sized
+them), so the rescaled table starts compact: one key-sorted file per
+bucket, the layout compaction produces. Cost is one table-sized
 shuffle — O(data), amortized over the months the new layout serves; at
 100 TB you run it as a dedicated job, not inside the ingest loop.
 
@@ -32,7 +33,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from couch_to_mongo_spark.operators.merge import _footer_seq_stats, fold_stored_rows
+from couch_to_mongo_spark.operators.merge import (
+    KEY_COLS,
+    _footer_seq_stats,
+    fold_stored_rows,
+)
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
 
 __all__ = ["rescale_buckets"]
@@ -41,24 +46,20 @@ __all__ = ["rescale_buckets"]
 def rescale_buckets(
     table: LakeTable,
     new_n_buckets: int,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    sort_within_bucket: bool = True,
 ) -> dict:
-    """Rewrite the whole table into ``new_n_buckets`` hash buckets in one
-    atomic strict-replace commit. Returns {"old_n_buckets", "new_n_buckets",
-    "rows"}. Raises CommitConflict if anything commits concurrently."""
+    """Rewrite the whole table into ``new_n_buckets`` hash buckets, each
+    one key-sorted file, in one atomic strict-replace commit. Returns
+    {"old_n_buckets", "new_n_buckets", "rows"}. Raises CommitConflict if
+    anything commits concurrently."""
     snap = table.snapshot()
     old_n = snap.n_buckets
-    df = table.read(version=snap.version)
-    keys = [c for c in key_cols if c in df.columns]
-    df = fold_stored_rows(df, keys)
-    df = df.withColumn(BUCKET_COL, bucket_expr(keys[0], new_n_buckets))
+    df = fold_stored_rows(table.read(version=snap.version))
+    df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], new_n_buckets))
     df = df.repartition(new_n_buckets, F.col(BUCKET_COL))
-    if sort_within_bucket:
-        # _bucket leads: satisfies the partitioned writer's required
-        # ordering so no (spill-unstable) extra SortExec is inserted —
-        # see operators/compact.py
-        df = df.sortWithinPartitions(BUCKET_COL, *keys)
+    # _bucket leads: satisfies the partitioned writer's required ordering
+    # so no (spill-unstable) extra SortExec is inserted — see
+    # operators/compact.py
+    df = df.sortWithinPartitions(BUCKET_COL, *KEY_COLS)
 
     new_files = table.write_bucketed(
         df, snapshot_hint=f"r{snap.version + 1:08d}", n_buckets=new_n_buckets

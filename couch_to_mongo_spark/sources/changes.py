@@ -150,20 +150,6 @@ def feed_schema_drift(
     return sorted(new_cols), sorted(widened), sorted(incompatible)
 
 
-def file_schema_extra_columns(path: str, known: T.StructType) -> list[str]:
-    """Columns present in a change file but missing from `known` — kept for
-    back-compat; :func:`feed_schema_drift` also detects type widening."""
-    return feed_schema_drift([path], known)[0]
-
-
-def read_changes_batch(
-    spark: SparkSession, changes_dir: str, schema: T.StructType | None = None
-) -> DataFrame:
-    if schema is None:
-        schema = infer_feed_schema(changes_dir)
-    return spark.read.schema(schema).parquet(os.path.join(changes_dir, "*.parquet"))
-
-
 def read_changes_stream(
     spark: SparkSession,
     changes_dir: str,

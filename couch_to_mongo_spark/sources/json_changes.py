@@ -65,21 +65,6 @@ def read_json_changes_batch(
     return parse_json_changes(raw, schema)
 
 
-def read_json_changes_stream(
-    spark: SparkSession,
-    changes_dir: str,
-    schema: T.StructType = CHANGE_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming variant: returns the RAW lines stream; call
-    :func:`parse_json_changes` inside foreachBatch so the dead-letter
-    append shares the batch's exactly-once scope."""
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return reader.load(changes_dir)
-
-
 class DeadLetterLog:
     """Append-only quarantine table (one tiny parquet per batch)."""
 
@@ -163,7 +148,7 @@ class DeadLetterLog:
         drop = [
             c
             for c in ("_poison_reason", "reason", "raw", "run_id", "batch_id",
-                      "rev_gen", "_src", "_salt", "_bucket")
+                      "rev_gen", "_bucket")
             if c in df.columns
         ]
         df = df.drop(*drop)

@@ -23,7 +23,9 @@ Schema evolution mid-stream follows the lake-standard restart-on-drift
 model: the stream runs with the currently-known feed schema; when a batch's
 input files carry unseen columns, the query aborts *before* any commit,
 the outer loop re-infers the schema and restarts from the same checkpoint —
-the batch replays with the wider schema and MERGE evolves the table.
+the batch replays with the wider schema and MERGE evolves the table. The
+catch-up (``run_available``) and the continuous tail (``tail``, also the
+CLI's) run under that one loop.
 """
 
 from __future__ import annotations
@@ -88,16 +90,13 @@ class CdcPipeline:
         checkpoint_dir: str,
         n_buckets: int = 16,
         max_files_per_trigger: int | None = None,
-        normalize: bool = True,
         since_seq: int | None = None,
-        files_per_bucket: int = 1,
         compact_threshold: int = 8,
         compact_async: bool = True,
         quarantine_poison: bool = False,
         transform_kernel=None,
         emit_cdf: bool = False,
         maintain_view: str | None = None,
-        view_render_opts: dict | None = None,
         view_refresh_every: int = 1,
         retention_keep_last: int | None = None,
         retention_every: int = 50,
@@ -108,9 +107,7 @@ class CdcPipeline:
         self.checkpoint_dir = checkpoint_dir
         self.n_buckets = n_buckets
         self.max_files_per_trigger = max_files_per_trigger
-        self.normalize = normalize
         self.since_seq = since_seq
-        self.files_per_bucket = files_per_bucket
         self.compact_threshold = compact_threshold
         self.compact_async = compact_async
         self.compactions = 0
@@ -179,11 +176,7 @@ class CdcPipeline:
             )
 
             self.view = RenderedCorpusView(
-                spark,
-                self.table,
-                maintain_view,
-                n_buckets=n_buckets,
-                **(view_render_opts or {}),
+                spark, self.table, maintain_view, n_buckets=n_buckets
             )
         self.lineage = LineageLog(os.path.join(table_path, "_lineage"))
         self.feed_schema: T.StructType | None = None
@@ -226,12 +219,9 @@ class CdcPipeline:
             from couch_to_mongo_spark.functions.normalize import normalize_kernel
             from couch_to_mongo_spark.operators.poison import isolate_poison
 
-            kernel = self.transform_kernel or (
-                normalize_kernel if self.normalize else None
-            )
-            if kernel is not None:
-                transform = lambda df: isolate_poison(df, kernel)
-        elif self.normalize and "text" in batch_df.columns:
+            kernel = self.transform_kernel or normalize_kernel
+            transform = lambda df: isolate_poison(df, kernel)
+        elif "text" in batch_df.columns:
             transform = lambda df: df.withColumn("text", normalize_text(F.col("text")))
 
         res = merge_batch(
@@ -239,7 +229,6 @@ class CdcPipeline:
             batch_df,
             run_id=self.run_id,
             batch_id=batch_id,
-            files_per_bucket=self.files_per_bucket,
             transform_after_dedup=transform,
             dead_letter=self.dead_letter,
             cdf=self.cdf,
@@ -255,6 +244,11 @@ class CdcPipeline:
         self.batches_applied += 1
         self._refresh_view(batch_df, batch_id, res)
         self._maybe_compact()
+        self._append_lineage(batch_id, res, n_poison=res.n_poison)
+
+    def _append_lineage(self, batch_id: int, res, **partition_stats) -> None:
+        """The batch's lineage row from its merge result; ``partition_stats``
+        join the result's touched-bucket count."""
         self.lineage.append(
             self.run_id,
             batch_id,
@@ -265,7 +259,7 @@ class CdcPipeline:
             n_updates=res.n_updates,
             n_deletes=res.n_deletes,
             snapshot_id=res.snapshot_id,
-            partition_stats={"touched_buckets": res.touched_buckets, "n_poison": res.n_poison},
+            partition_stats={"touched_buckets": res.touched_buckets, **partition_stats},
         )
 
     def _refresh_view(self, batch_df: DataFrame, batch_id: int, res) -> None:
@@ -405,24 +399,45 @@ class CdcPipeline:
     def _backfill_lineage(self, batch_id: int, res) -> None:
         if res.snapshot_id is None or self.lineage.has(self.run_id, batch_id):
             return
-        self.lineage.append(
-            self.run_id,
-            batch_id,
-            seq_min=res.seq_min,
-            seq_max=res.seq_max,
-            rows_applied=res.rows_applied,
-            n_inserts=res.n_inserts,
-            n_updates=res.n_updates,
-            n_deletes=res.n_deletes,
-            snapshot_id=res.snapshot_id,
-            partition_stats={"touched_buckets": res.touched_buckets, "backfilled": 1},
-        )
+        self._append_lineage(batch_id, res, backfilled=1)
 
     # ---------------- drivers ----------------
 
     def run_available(self, max_restarts: int = 10) -> "CdcPipeline":
         """Replay everything currently in the feed (trigger availableNow),
         restarting on schema drift with the evolved schema."""
+        return self._supervised_stream({"availableNow": True}, max_restarts)
+
+    def tail(
+        self,
+        processing_time: str = "5 seconds",
+        max_restarts: int = 10,
+        until: "callable | None" = None,
+        poll_seconds: float = 0.5,
+    ) -> "CdcPipeline":
+        """Continuous tail — the reference's forever-poll loop
+        (ChangeFeedClient.java:61-71) as a processingTime trigger, under the
+        same restart-on-drift supervision as :meth:`run_available`.
+        ``until(pipeline)`` (optional) stops the tail cleanly when it
+        returns True (tests / bounded runs); without it the call blocks
+        forever like the reference's poll loop."""
+        return self._supervised_stream(
+            {"processingTime": processing_time}, max_restarts, until, poll_seconds
+        )
+
+    def _supervised_stream(
+        self,
+        trigger: dict,
+        max_restarts: int,
+        until: "callable | None" = None,
+        poll_seconds: float = 0.5,
+    ) -> "CdcPipeline":
+        """Run the feed stream under ``trigger`` until it terminates (or
+        ``until`` says stop), then drain maintenance. A batch that hit
+        schema drift aborted before its commit: re-infer the (wider) feed
+        schema and restart from the same checkpoint, which replays it."""
+        import time
+
         for _ in range(max_restarts):
             self.feed_schema = infer_feed_schema(self.changes_dir)
             self.drift_error = None
@@ -435,57 +450,9 @@ class CdcPipeline:
             q = (
                 stream.writeStream.foreachBatch(self.process_batch)
                 .option("checkpointLocation", self.checkpoint_dir)
-                .trigger(availableNow=True)
+                .trigger(**trigger)
                 .start()
             )
-            try:
-                q.awaitTermination()
-                self.finish_maintenance()
-                return self
-            except Exception:
-                if self.drift_error is not None:
-                    continue  # restart with re-inferred (wider) schema
-                raise
-        raise RuntimeError("too many schema-drift restarts")
-
-    def start_continuous(self, processing_time: str = "5 seconds"):
-        """Long-running tail — the reference's forever-poll loop
-        (ChangeFeedClient.java:61-71) as a processingTime trigger.
-
-        NOTE: a raw handle has no drift supervision — mid-tail feed
-        evolution terminates the query. Use :meth:`tail` for the
-        restart-on-drift loop."""
-        self.feed_schema = infer_feed_schema(self.changes_dir)
-        self.drift_error = None
-        stream = read_changes_stream(
-            self.spark,
-            self.changes_dir,
-            self.feed_schema,
-            max_files_per_trigger=self.max_files_per_trigger,
-        )
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-
-    def tail(
-        self,
-        processing_time: str = "5 seconds",
-        max_restarts: int = 10,
-        until: "callable | None" = None,
-        poll_seconds: float = 0.5,
-    ) -> "CdcPipeline":
-        """Supervised continuous tail: restart on schema drift with the
-        re-inferred (wider) schema — the same loop run_available uses, for
-        the long-running trigger. ``until(pipeline)`` (optional) stops the
-        tail cleanly when it returns True (tests / bounded runs); without
-        it the call blocks forever like the reference's poll loop."""
-        import time
-
-        for _ in range(max_restarts):
-            q = self.start_continuous(processing_time=processing_time)
             try:
                 if until is None:
                     q.awaitTermination()

@@ -47,6 +47,10 @@ from pyspark.sql import types as T
 
 _SNAP_RE = re.compile(r"^v(\d{8})\.json$")
 BUCKET_COL = "_bucket"
+# commit rebase budget: retries after a CommitConflict, and the base of the
+# jittered exponential backoff between them (seconds)
+COMMIT_MAX_RETRIES = 10
+COMMIT_BACKOFF_BASE_S = 0.02
 
 
 def bucket_expr(key_col: str, n_buckets: int):
@@ -428,7 +432,6 @@ class LakeTable:
     def read(
         self,
         version: int | None = None,
-        with_bucket: bool = False,
         min_seq: int | None = None,
         as_of: float | None = None,
         min_seq_rows: bool = True,
@@ -466,9 +469,6 @@ class LakeTable:
             df = self.spark.read.schema(snap.schema).parquet(*files)
         if min_seq is not None and min_seq_rows and "_seq" in df.columns:
             df = df.where(F.col("_seq") >= F.lit(min_seq))
-        if with_bucket:
-            key = snap.lineage.get("bucket_key") or self.bucket_key()
-            df = df.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
         return df
 
     @staticmethod
@@ -555,9 +555,6 @@ class LakeTable:
             return self.spark.createDataFrame([], snap.schema)
         return self.spark.read.schema(snap.schema).parquet(*files)
 
-    def bucket_key(self) -> str:
-        return "conv_id"
-
     # ---------------- write / commit ----------------
 
     def commit(
@@ -571,9 +568,7 @@ class LakeTable:
         append: bool = False,
         replaced_files: set[str] | None = None,
         base_version: int | None = None,
-        max_retries: int = 10,
         new_file_stats: dict[str, list] | None = None,
-        backoff_base: float = 0.02,
         new_n_buckets: int | None = None,
     ) -> Snapshot:
         """Publish a new snapshot with optimistic-concurrency rebase.
@@ -602,7 +597,7 @@ class LakeTable:
             )
         base = self.snapshot(base_version) if base_version is not None else self.snapshot()
         touched = set(touched_buckets)
-        for attempt in range(max_retries + 1):
+        for attempt in range(COMMIT_MAX_RETRIES + 1):
             prev = self.snapshot()
             files = {b: list(fl) for b, fl in prev.files.items() if int(b) not in touched}
             for b in touched:
@@ -673,7 +668,7 @@ class LakeTable:
                 self._write_snapshot(snap)
                 return snap
             except CommitConflict:
-                if attempt == max_retries:
+                if attempt == COMMIT_MAX_RETRIES:
                     raise
                 # Jittered exponential backoff before the rebase re-read: N
                 # writers colliding on one version otherwise busy-spin
@@ -681,7 +676,7 @@ class LakeTable:
                 # bounded retry budgets, Mongo.java:51-52).
                 import random
 
-                time.sleep(random.uniform(0, backoff_base * (2**attempt)))
+                time.sleep(random.uniform(0, COMMIT_BACKOFF_BASE_S * (2**attempt)))
         raise CommitConflict("unreachable")  # pragma: no cover
 
     # ---------------- maintenance ----------------
@@ -689,7 +684,6 @@ class LakeTable:
     def expire_snapshots(
         self,
         keep_last: int = 2,
-        prune_metadata: bool = True,
         manifest_grace_seconds: float = 300.0,
     ) -> dict[str, int]:
         """Delete data files referenced only by snapshots older than the
@@ -726,27 +720,24 @@ class LakeTable:
                     os.unlink(p)
                     deleted += 1
                 live.add(f)  # only attempt once
-        pruned = 0
+        for v in expired_versions:
+            os.unlink(self._snap_path(v))
         manifests_deleted = 0
-        if prune_metadata:
-            for v in expired_versions:
-                os.unlink(self._snap_path(v))
-                pruned += 1
-            if os.path.isdir(self.manifest_dir):
-                now = time.time()
-                for name in os.listdir(self.manifest_dir):
-                    if name in live_manifests or not name.endswith(".json"):
-                        continue
-                    p = os.path.join(self.manifest_dir, name)
-                    if now - os.path.getmtime(p) < manifest_grace_seconds:
-                        continue
-                    os.unlink(p)
-                    _MANIFEST_CACHE.pop(p, None)
-                    manifests_deleted += 1
+        if os.path.isdir(self.manifest_dir):
+            now = time.time()
+            for name in os.listdir(self.manifest_dir):
+                if name in live_manifests or not name.endswith(".json"):
+                    continue
+                p = os.path.join(self.manifest_dir, name)
+                if now - os.path.getmtime(p) < manifest_grace_seconds:
+                    continue
+                os.unlink(p)
+                _MANIFEST_CACHE.pop(p, None)
+                manifests_deleted += 1
         return {
             "files_deleted": deleted,
             "snapshots_expired": len(expired_versions),
-            "versions_pruned": pruned,
+            "versions_pruned": len(expired_versions),
             "manifests_deleted": manifests_deleted,
         }
 

@@ -214,8 +214,7 @@ def main(argv: list[str] | None = None) -> int:
                 )
             )
         else:
-            q = pipe.start_continuous(processing_time=args.trigger)
-            q.awaitTermination()
+            pipe.tail(processing_time=args.trigger)
     elif args.cmd == "view-catchup":
         from couch_to_mongo_spark.operators.corpus_view import RenderedCorpusView
         from couch_to_mongo_spark.tableformat import LakeTable

@@ -194,3 +194,25 @@ def test_view_catchup_cli(spark, tmp_path, capsys):
         for r in render_conversations(read_state(t2)).collect()
     }
     assert got2 == want2
+
+
+def test_tail_cli_runs_the_supervised_tail(spark, tmp_path, monkeypatch):
+    """`tail` runs CdcPipeline.tail, the restart-on-drift loop, so feed
+    drift in the middle of a tail restarts the stream instead of ending
+    the query; no unsupervised stream handle is started."""
+    calls = []
+    monkeypatch.setattr(
+        CdcPipeline, "tail", lambda self, **kw: calls.append(kw) or self
+    )
+
+    def raw_handle(self, *a, **k):
+        raise AssertionError("tail started an unsupervised stream handle")
+
+    monkeypatch.setattr(CdcPipeline, "start_continuous", raw_handle, raising=False)
+    rc = submit_main.main([
+        "tail", "--table", str(tmp_path / "table"), "--changes",
+        str(tmp_path / "changes"), "--checkpoint", str(tmp_path / "ckpt"),
+        "--n-buckets", "4", "--trigger", "1 second",
+    ])
+    assert rc == 0
+    assert calls == [{"processing_time": "1 second"}]

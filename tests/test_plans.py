@@ -110,14 +110,12 @@ def test_fast_merge_single_shuffle(spark):
         F.lit(1).alias("rev_gen"),
         F.md5(F.col("id").cast("string")).alias("_rev"),
     )
-    for fpb in (1, 4):
-        out = bucket_partitioned_lww(
-            df, ["conv_id", "turn_idx"], ["seq", "rev_gen", "_rev"],
-            n_buckets=16, files_per_bucket=fpb,
-        )
-        plan = formatted_plan(out)
-        assert count_exchanges(out) == 1, plan
-        assert "WindowGroupLimit" in plan, plan
+    out = bucket_partitioned_lww(
+        df, ["conv_id", "turn_idx"], ["seq", "rev_gen", "_rev"], n_buckets=16
+    )
+    plan = formatted_plan(out)
+    assert count_exchanges(out) == 1, plan
+    assert "WindowGroupLimit" in plan, plan
 
 
 def test_merge_starts_no_job_besides_its_write(spark, tmp_path):
@@ -322,10 +320,3 @@ def test_corpus_view_refresh_plan_shape(spark, tmp_path):
     counts = [int(m) for m in _re.findall(r"number of files: (\d+)", plan)]
     if counts:  # formatted plans include per-scan file counts
         assert max(counts) < total_files, (counts, total_files, plan)
-
-    # non-broadcast (giant catch-up) refresh: the changed-conv set feeds
-    # three consumers, so it must be materialized ONCE (localCheckpoint ->
-    # the plan reads an ExistingRDD scan, not three re-derivations of the
-    # distinct over the batch source)
-    plan_nb = formatted_plan(view.plan_refresh(one, seq=100, broadcast_convs=False))
-    assert "ExistingRDD" in plan_nb, plan_nb

@@ -47,7 +47,7 @@ def test_expire_snapshots_bounds_history(spark, table_with_history):
     table, pdf, _ = table_with_history
     # compaction rewrites buckets -> the MOR delta files become referenced
     # only by pre-compaction snapshots
-    compact(table, max_files_per_bucket=0, buckets=[int(b) for b in table.snapshot().files])
+    compact(table, max_files_per_bucket=0)
     old_delta_files = [
         os.path.join(table.path, f) for f in table.snapshot(3).all_files()
     ]

@@ -125,7 +125,7 @@ def test_bootstrap_bulk_copy(spark, tmp_path):
     )
     src = spark.createDataFrame(snap_pdf)
     table, res = bulk_bootstrap(
-        spark, str(tmp_path / "t"), src, n_buckets=8, order_cols=["ts"], normalize=True
+        spark, str(tmp_path / "t"), src, n_buckets=8, normalize=True
     )
     assert res.rows_applied == len(snap_pdf)
     # reference count-parity check (Couch.java:94 / Mongo.java:269-301)
@@ -134,7 +134,7 @@ def test_bootstrap_bulk_copy(spark, tmp_path):
     _, res2 = bulk_bootstrap(spark, str(tmp_path / "t"), src, n_buckets=8)
     assert res2.skipped
 
-    # CDC events (seq >= 0) beat bootstrap rows (seq_floor = -1)
+    # CDC events (seq >= 0) beat bootstrap rows (BOOTSTRAP_SEQ = -1)
     upd = make_changes_df(n_events=50, n_convs=30, seed=43)
     batch = spark.createDataFrame(upd[upd.op != "i"])
     merge_batch(table, batch, run_id="cdc", batch_id=0)
@@ -177,8 +177,8 @@ def test_compaction_folds_files_and_preserves_state(spark, tmp_path):
         expected_state(pdf),
     )
 
-    # sort_within_bucket (default): every compacted file is key-ordered, so
-    # parquet row-group min/max on the key stays tight for scan-time skipping
+    # every compacted file is key-ordered, so parquet row-group min/max on
+    # the key stays tight for scan-time skipping
     import os as _os
 
     import pandas as _pd
@@ -190,8 +190,7 @@ def test_compaction_folds_files_and_preserves_state(spark, tmp_path):
             assert keys == sorted(keys), f"compacted file {rel} not key-sorted"
 
     # tombstone purge drops deleted rows physically
-    compact(table, max_files_per_bucket=0, purge_tombstones=True,
-            buckets=[int(b) for b in table.snapshot().files])
+    compact(table, max_files_per_bucket=0, purge_tombstones=True)
     raw = table.read().toPandas()
     assert raw["_deleted"].sum() == 0
     assert_state_parity(
@@ -262,27 +261,6 @@ def test_lineage_reads_with_null_first_row(spark, tmp_path):
     assert log.last_seq() == 12
 
 
-def test_files_per_bucket_splits_hot_buckets_fast_path(spark, tmp_path):
-    """files_per_bucket>1 must produce multiple files per bucket on the
-    fast MOR path too (ADVICE r01: the salt was missing from the
-    repartition keys, collapsing each bucket to one file)."""
-    from couch_to_mongo_spark.gen import make_changes_df
-    from couch_to_mongo_spark.operators.merge import merge_batch, with_engine_schema
-    from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
-    from couch_to_mongo_spark.tableformat import LakeTable
-
-    pdf = make_changes_df(n_events=2000, n_convs=20, seed=61, hot_frac=0.5)
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=2
-    )
-    merge_batch(
-        table, spark.createDataFrame(pdf), run_id="r", batch_id=0,
-        files_per_bucket=4,
-    )
-    files = table.snapshot().files
-    assert any(len(fl) > 1 for fl in files.values()), files
-
-
 def test_ann_multiprobe_recall_floor(spark):
     """Multi-probe LSH recovers planted near-duplicates (cosine 0.95):
     recall@1 >= 0.9 at probes=2, monotone in probes (VERDICT r01 next-#9).
@@ -296,60 +274,6 @@ def test_ann_multiprobe_recall_floor(spark):
     r2 = planted_neardup_recall(emb, n_queries=40, probes=2)
     assert r0 <= r1 <= r2
     assert r2 >= 0.9
-
-
-def test_bucket_salt_independent_of_bucket_hash(spark):
-    """files_per_bucket salt must split rows WITHIN a bucket: with the salt
-    derived from the same unseeded hash as the bucket, pmod(h, 4) is
-    constant inside each pmod(h, 16) class (4 | 16), so hot buckets never
-    split. The seeded salt gives >1 distinct salt per bucket."""
-    from pyspark.sql import functions as F
-
-    from couch_to_mongo_spark.operators.dedup import bucket_partitioned_lww
-
-    df = spark.range(2000).select(
-        F.concat(F.lit("conv-"), F.col("id")).alias("conv_id"),
-        (F.col("id") % 5).cast("int").alias("turn_idx"),
-        F.col("id").alias("seq"),
-    )
-    out = bucket_partitioned_lww(
-        df, ["conv_id", "turn_idx"], ["seq"], n_buckets=16, files_per_bucket=4
-    )
-    per_bucket = (
-        out.groupBy("_bucket").agg(F.countDistinct("_salt").alias("ns")).collect()
-    )
-    assert len(per_bucket) == 16
-    assert all(r["ns"] > 1 for r in per_bucket)
-
-
-def test_bootstrap_salt_splits_files_per_bucket(spark, tmp_table_path):
-    """bulk_bootstrap(files_per_bucket=4) must write >1 file per bucket.
-    With the salt derived from the same unseeded hash as the bucket
-    (4 | 16 ⇒ salt constant per bucket) every bucket silently collapses to
-    one file; the seeded salt actually splits."""
-    from pyspark.sql import functions as F
-
-    from couch_to_mongo_spark.bootstrap import bulk_bootstrap
-
-    src = spark.range(4000).select(
-        F.concat(F.lit("conv-"), F.col("id")).alias("conv_id"),
-        (F.col("id") % 5).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.concat(F.lit("text-"), F.col("id")).alias("text"),
-    )
-    table, result = bulk_bootstrap(
-        spark,
-        tmp_table_path,
-        src,
-        n_buckets=16,
-        files_per_bucket=4,
-        normalize=False,
-    )
-    snap = table.snapshot()
-    files_per_bucket = [len(v) for v in snap.files.values()]
-    assert len(files_per_bucket) == 16
-    assert all(n > 1 for n in files_per_bucket), files_per_bucket
-    assert result.rows_applied == 4000
 
 
 def test_footer_stats_parallel_path_matches_serial(spark, tmp_table_path):
@@ -367,10 +291,7 @@ def test_footer_stats_parallel_path_matches_serial(spark, tmp_table_path):
         F.lit("user").alias("role"),
         F.lit("t").alias("text"),
     )
-    table, _ = bulk_bootstrap(
-        spark, tmp_table_path, src, n_buckets=16, files_per_bucket=4,
-        normalize=False,
-    )
+    table, _ = bulk_bootstrap(spark, tmp_table_path, src, n_buckets=64, normalize=False)
     new_files = table.snapshot().files
     n_files = sum(len(v) for v in new_files.values())
     assert n_files > M._FOOTER_PARALLEL_THRESHOLD  # 64 files: pool path
