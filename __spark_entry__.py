@@ -1416,170 +1416,6 @@ FROM d GROUP BY vec_id
 """
 
 
-def q_ivf_assign(spark, sf_dir):
-    """IVF coarse quantizer (functions/vectors.py ivf_assign): every vector
-    assigned to its nearest of 8 deterministic centroids — the inverted-list
-    partition key of the IVF ANN scale path."""
-    out = V.ivf_assign(_t(spark, sf_dir, "embeddings"), n_centroids=8)
-    return out.withColumn("centroid_id", F.col("centroid_id").cast("long"))
-
-
-SQL_IVF_ASSIGN = """
-WITH c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings ORDER BY vec_id LIMIT 8),
-d AS (SELECT e.vec_id, c.cid,
-        ROUND(sqrt(sum((e.embedding[i.i]::DOUBLE - c.ce[i.i]::DOUBLE)
-                     * (e.embedding[i.i]::DOUBLE - c.ce[i.i]::DOUBLE))), 5) AS dist
-      FROM embeddings e CROSS JOIN c CROSS JOIN range(1, 65) i(i)
-      GROUP BY e.vec_id, c.cid),
-r AS (SELECT vec_id, cid, dist,
-        row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-      FROM d)
-SELECT vec_id, CAST(cid AS BIGINT) AS centroid_id, dist FROM r WHERE rn = 1
-"""
-
-
-def q_ivf_train_assign(spark, sf_dir):
-    """TRAINED IVF quantizer (functions/vectors.py kmeans_train +
-    ivf_assign): 3 deterministic Lloyd iterations (lowest-8-ids init,
-    per-iteration 6dp rounding) refine the centroids, then every vector is
-    assigned zero-shuffle. The oracle replays the identical iterations as
-    chained DuckDB CTEs — the training itself is hash-checked cross-engine,
-    not just the plan skeleton."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = V.kmeans_train(emb, k=8, n_iters=3)
-    out = V.ivf_assign(emb, centroids=cents)
-    return out.withColumn("centroid_id", F.col("centroid_id").cast("long"))
-
-
-def _ivf_train_sql(k: int = 8, n_iters: int = 3, dim: int = 64) -> str:
-    """Generate the DuckDB twin of kmeans_train + ivf_assign: c0 = rounded
-    lowest-k-ids init; each iteration = unrounded-argmin assignment (a/b)
-    then per-(cluster, dim) mean rounded to 6dp (m), empty clusters keep
-    their previous centroid (COALESCE); final assignment argmins the
-    ROUNDED 5dp distances with centroid-order tie-break, exactly like
-    ivf_assign's array_position(min)."""
-    parts = [f"""c0 AS (
-  SELECT c.rk - 1 AS ci, c.vec_id AS cid, p.i - 1 AS pos,
-         ROUND(c.embedding[p.i]::DOUBLE, 6) AS w
-  FROM (SELECT vec_id, embedding, row_number() OVER (ORDER BY vec_id) AS rk
-        FROM embeddings ORDER BY vec_id LIMIT {k}) c
-  CROSS JOIN range(1, {dim + 1}) p(i))"""]
-    for it in range(1, n_iters + 1):
-        parts.append(f"""a{it} AS (
-  SELECT e.vec_id, c.ci,
-         sum((e.embedding[c.pos + 1]::DOUBLE - c.w)
-           * (e.embedding[c.pos + 1]::DOUBLE - c.w)) AS d2
-  FROM embeddings e CROSS JOIN c{it - 1} c
-  GROUP BY e.vec_id, c.ci),
-b{it} AS (
-  SELECT vec_id, ci,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d2, ci) AS rn
-  FROM a{it}),
-m{it} AS (
-  SELECT b.ci, p.i - 1 AS pos, ROUND(avg(e.embedding[p.i]::DOUBLE), 6) AS w
-  FROM b{it} b JOIN embeddings e USING (vec_id)
-  CROSS JOIN range(1, {dim + 1}) p(i)
-  WHERE b.rn = 1
-  GROUP BY b.ci, p.i),
-c{it} AS (
-  SELECT prev.ci, prev.cid, prev.pos, COALESCE(m.w, prev.w) AS w
-  FROM c{it - 1} prev
-  LEFT JOIN m{it} m ON m.ci = prev.ci AND m.pos = prev.pos)""")
-    parts.append(f"""af AS (
-  SELECT e.vec_id, c.ci, c.cid,
-         sum((e.embedding[c.pos + 1]::DOUBLE - c.w)
-           * (e.embedding[c.pos + 1]::DOUBLE - c.w)) AS d2
-  FROM embeddings e CROSS JOIN c{n_iters} c
-  GROUP BY e.vec_id, c.ci, c.cid),
-rf AS (
-  SELECT vec_id, cid, ROUND(sqrt(d2), 5) AS dist,
-         row_number() OVER (
-           PARTITION BY vec_id ORDER BY ROUND(sqrt(d2), 5), ci) AS rn
-  FROM af)""")
-    return (
-        "WITH " + ",\n".join(parts)
-        + "\nSELECT vec_id, CAST(cid AS BIGINT) AS centroid_id, dist "
-          "FROM rf WHERE rn = 1"
-    )
-
-
-SQL_IVF_TRAIN = _ivf_train_sql()
-
-
-def q_pq_train_encode(spark, sf_dir):
-    """Product quantization (functions/vectors.py pq_train + pq_encode):
-    4 subspaces x 16 dims, ksub=8 sub-centroids each trained with the same
-    deterministic Lloyd loop, every vector encoded to 4 sub-centroid
-    indices in one zero-shuffle codegen projection. The oracle replays all
-    4 independent Lloyd chains + the rounded-argmin encode in DuckDB —
-    codebook training AND code assignment are hash-checked cross-engine."""
-    emb = _t(spark, sf_dir, "embeddings")
-    books = V.pq_train(emb, m=4, ksub=8, n_iters=2)
-    return V.pq_encode(emb, books)
-
-
-def _pq_train_sql(m: int = 4, ksub: int = 8, n_iters: int = 2, dim: int = 64) -> str:
-    """DuckDB twin of pq_train + pq_encode: m independent Lloyd chains
-    (each the _ivf_train_sql recurrence restricted to its subspace slice),
-    then one row per vector with the m 0-based sub-centroid codes
-    (rounded-5dp argmin, lowest-index tie-break — array_position(min)
-    semantics)."""
-    d = dim // m
-    parts = []
-    for j in range(m):
-        off = j * d
-        parts.append(f"""s{j}c0 AS (
-  SELECT c.rk - 1 AS ci, p.i - 1 AS pos,
-         ROUND(c.embedding[p.i + {off}]::DOUBLE, 6) AS w
-  FROM (SELECT vec_id, embedding, row_number() OVER (ORDER BY vec_id) AS rk
-        FROM embeddings ORDER BY vec_id LIMIT {ksub}) c
-  CROSS JOIN range(1, {d + 1}) p(i))""")
-        for it in range(1, n_iters + 1):
-            parts.append(f"""s{j}a{it} AS (
-  SELECT e.vec_id, c.ci,
-         sum((e.embedding[c.pos + 1 + {off}]::DOUBLE - c.w)
-           * (e.embedding[c.pos + 1 + {off}]::DOUBLE - c.w)) AS d2
-  FROM embeddings e CROSS JOIN s{j}c{it - 1} c
-  GROUP BY e.vec_id, c.ci),
-s{j}b{it} AS (
-  SELECT vec_id, ci,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d2, ci) AS rn
-  FROM s{j}a{it}),
-s{j}m{it} AS (
-  SELECT b.ci, p.i - 1 AS pos,
-         ROUND(avg(e.embedding[p.i + {off}]::DOUBLE), 6) AS w
-  FROM s{j}b{it} b JOIN embeddings e USING (vec_id)
-  CROSS JOIN range(1, {d + 1}) p(i)
-  WHERE b.rn = 1
-  GROUP BY b.ci, p.i),
-s{j}c{it} AS (
-  SELECT prev.ci, prev.pos, COALESCE(mm.w, prev.w) AS w
-  FROM s{j}c{it - 1} prev
-  LEFT JOIN s{j}m{it} mm ON mm.ci = prev.ci AND mm.pos = prev.pos)""")
-        parts.append(f"""s{j}f AS (
-  SELECT e.vec_id, c.ci,
-         ROUND(sqrt(sum((e.embedding[c.pos + 1 + {off}]::DOUBLE - c.w)
-                      * (e.embedding[c.pos + 1 + {off}]::DOUBLE - c.w))), 5) AS dist
-  FROM embeddings e CROSS JOIN s{j}c{n_iters} c
-  GROUP BY e.vec_id, c.ci),
-s{j}r AS (
-  SELECT vec_id, ci,
-         row_number() OVER (PARTITION BY vec_id ORDER BY dist, ci) AS rn
-  FROM s{j}f)""")
-    joins = " ".join(
-        f"JOIN s{j}r s{j} ON s{j}.vec_id = e.vec_id AND s{j}.rn = 1"
-        for j in range(m)
-    )
-    cols = ", ".join(f"CAST(s{j}.ci AS INTEGER) AS c{j}" for j in range(m))
-    return (
-        "WITH " + ",\n".join(parts)
-        + f"\nSELECT e.vec_id, {cols} FROM embeddings e {joins}"
-    )
-
-
-SQL_PQ_TRAIN = _pq_train_sql()
-
-
 def q_mask_pii(spark, sf_dir):
     """PII scrubbing (functions/text.py mask_pii): emails / dotted-quad
     IPs / long digit runs -> typed sentinels + per-class hit counts, a
@@ -1802,9 +1638,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_view_replay": q_corpus_view_replay,
         "mask_pii": q_mask_pii,
         "unigram_logprob": q_unigram_logprob,
-        "ivf_assign": q_ivf_assign,
-        "ivf_train_assign": q_ivf_train_assign,
-        "pq_train_encode": q_pq_train_encode,
         "render_conversations": q_render_conversations,
         "boilerplate_turns": q_boilerplate_turns,
         "conversation_pack": q_conversation_pack,
@@ -1901,9 +1734,6 @@ def oracle_sql() -> dict[str, str]:
         "embedding_dedup_groups": SQL_EMB_DEDUP_GROUPS,
         "embedding_dedup_groups_lsh": SQL_EMB_DEDUP_GROUPS_LSH,
         "lsh_ann_buckets": SQL_LSH_ANN,
-        "ivf_assign": SQL_IVF_ASSIGN,
-        "ivf_train_assign": SQL_IVF_TRAIN,
-        "pq_train_encode": SQL_PQ_TRAIN,
         "mask_pii": SQL_MASK_PII,
         "unigram_logprob": SQL_UNIGRAM,
         # round 2: the full engine path is oracle-checked too — final MOR

@@ -76,11 +76,8 @@ def bulk_bootstrap(
     df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets))
     df = df.repartition(n_buckets, F.col(BUCKET_COL))
 
-    new_files = table.write_bucketed(df, snapshot_hint="s00000001", n_buckets=n_buckets)
-    from couch_to_mongo_spark.operators.merge import _footer_seq_stats
-
-    n_rows, _, _, per_file = _footer_seq_stats(table, new_files)
-    n_rows = int(n_rows)
+    new_files = table.write_bucketed(df, snapshot_hint="s00000001")
+    n_rows, per_file = table.file_stats(new_files)
     result = MergeResult(
         skipped=False,
         n_inserts=n_rows,

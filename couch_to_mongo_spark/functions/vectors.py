@@ -1,8 +1,11 @@
 """Vector similarity operators over embedding columns (array<float>).
 
-JVM-side built-ins (``zip_with``/``aggregate``) — no Python in the hot
-path. Brute-force cosine top-k is the correctness baseline; the LSH-bucket
-variant is the 100 TB scale path (candidates per bucket, never all-pairs).
+Per-row scoring stays JVM-side (``zip_with``/``aggregate``). Brute-force
+cosine top-k is the correctness baseline; label-blocked near-dup pairs
+come as an expression join and a per-block BLAS gram kernel with exact
+parity; random-hyperplane LSH with multi-probe gives the candidate path
+(ANN candidates, planted near-dup recall, near-dup pairs and dedup groups),
+which scores candidates per bucket, never all-pairs.
 """
 
 from __future__ import annotations
@@ -294,47 +297,6 @@ def ann_candidates(
         .select("qid", id_col)
         .distinct()
     )
-
-
-def ann_recall_at_k(
-    df: DataFrame,
-    k: int = 10,
-    n_queries: int = 20,
-    n_planes: int = 8,
-    dim: int = 64,
-    probes: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> float:
-    """Candidate-set recall@k of the LSH/multi-probe path vs brute-force
-    cosine ground truth, averaged over the `n_queries` lowest ids
-    (deterministic). This is the number that justifies the scale path:
-    recall ~1.0 means searching the probed buckets instead of the full
-    table loses (almost) nothing."""
-    from pyspark.sql import Window
-
-    ids = [r[0] for r in df.select(id_col).orderBy(id_col).limit(n_queries).collect()]
-    q = df.where(F.col(id_col).isin(ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    )
-    # ground truth: exact top-k per query (broadcast the tiny query side)
-    j = df.select(F.col(id_col), F.col(vec_col)).crossJoin(F.broadcast(q)).where(
-        F.col(id_col) != F.col("qid")
-    )
-    scored = j.select(
-        "qid",
-        F.col(id_col),
-        cosine(F.col(vec_col).cast("array<double>"), F.col("qv").cast("array<double>")).alias("cs"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cs").desc(), F.col(id_col))
-    truth = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", id_col)
-    )
-    cand = ann_candidates(df, q, n_planes, dim, probes, vec_col, id_col)
-    hits = truth.join(cand, ["qid", id_col]).count()
-    return hits / (len(ids) * k)
 
 
 def planted_neardup_recall(
@@ -654,781 +616,3 @@ def embedding_dedup_groups_lsh(
     )
     comp = connected_components(pairs, src="id_a", dst="id_b")
     return attach_components(df, comp, id_col=id_col, out_col="group_id")
-
-
-# ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the centroid-partition complement to LSH
-# ---------------------------------------------------------------------------
-
-
-def _l2sq(v: Column, lits: list[float]) -> Column:
-    return F.aggregate(
-        F.zip_with(
-            v,
-            F.array(*[F.lit(float(x)) for x in lits]),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-
-
-def kmeans_train(
-    df: DataFrame,
-    k: int = 8,
-    n_iters: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_frac: float | None = None,
-    round_to: int = 6,
-    join_threshold: int | None = None,
-) -> list[tuple[int, list[float]]]:
-    """Deterministic Lloyd k-means over the embedding column, as DataFrame
-    ops — the centroid refinement `ivf_assign` consumes.
-
-    - init: the k lowest-id vectors (deterministic, no RNG);
-    - each iteration: one distributed pass — nearest-centroid assignment
-      (same codegen'd distance expression as `ivf_assign`) is the GROUPING
-      key of a hash aggregation with one `avg(element_at(_v, i))` per
-      dimension, so the k×dim means come back in k rows with the distance
-      expression evaluated once per input row. (A posexplode formulation
-      collapses that expression into the Generate and re-evaluates it per
-      exploded element — measured 64x slower: 33 s -> 0.7 s per training
-      at 2000×64.) Only k×dim aggregated means hit the driver;
-    - centroids are rounded to `round_to` decimals each iteration so the
-      result is reproducible across partitionings up to aggregation-order
-      float noise below the rounding grain;
-    - ``sample_frac`` trains on a seeded sample — at 10^10 rows Lloyd on
-      a 10^-4 sample converges to the same coarse quantizer for a fraction
-      of the cost; assignment still runs over everything.
-
-    Returns [(centroid_id, vector)] with centroid_id = init vector's id,
-    kept stable across iterations (empty clusters keep their previous
-    position).
-
-    Large k (> ``join_threshold``, default the ivf_assign crossover): each
-    iteration's assignment runs as the broadcast-join plan instead of k
-    inlined distance subexpressions — per-row winner via map-side
-    ``min(struct(dist, pos))`` under ``groupBy(id)``, then the per-cluster
-    means as a second aggregation. Two shuffles per iteration instead of
-    one, but no expression grows with k, so 10^4-list coarse quantizers
-    are trainable. Assignment semantics identical to the literal plan
-    (unrounded distances, first-minimum tie-break; parity-tested at k=8).
-    """
-    base = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
-    if sample_frac is not None:
-        base = base.sample(fraction=sample_frac, seed=11)
-    base = base.persist()
-    try:
-        init = base.orderBy(id_col).limit(k).collect()
-        ids = [int(r[0]) for r in init]
-        cents = [[round(float(x), round_to) for x in r[1]] for r in init]
-        dim = len(cents[0])
-        mean_aggs = [
-            F.avg(F.element_at(F.col("_v"), i + 1)).alias(f"m{i}")
-            for i in range(dim)
-        ]
-        spark = df.sparkSession
-        if join_threshold is None:
-            join_threshold = IVF_JOIN_THRESHOLD
-        use_join = k > join_threshold
-        for _ in range(n_iters):
-            if use_join:
-                cdf = spark.createDataFrame(
-                    [(pos, c) for pos, c in enumerate(cents)],
-                    "_pos int, _cvec array<double>",
-                )
-                d = F.aggregate(
-                    F.zip_with(
-                        F.col("_v"), F.col("_cvec"), lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x,
-                )
-                assigned = (
-                    base.crossJoin(F.broadcast(cdf))
-                    .select(
-                        F.col(id_col),
-                        F.col("_v"),
-                        F.struct(d.alias("d"), F.col("_pos").alias("p")).alias("_w"),
-                    )
-                    .groupBy(id_col)
-                    .agg(F.min("_w").alias("_w"), F.first("_v").alias("_v"))
-                )
-                rows = assigned.groupBy(
-                    F.col("_w.p").alias("_c")
-                ).agg(*mean_aggs).collect()
-            else:
-                darr = F.array(*[_l2sq(F.col("_v"), c) for c in cents])
-                best = (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-                rows = base.groupBy(best.alias("_c")).agg(*mean_aggs).collect()
-            new = [list(c) for c in cents]
-            for r in rows:
-                ci = int(r["_c"])
-                new[ci] = [round(float(r[f"m{i}"]), round_to) for i in range(dim)]
-            cents = new
-        return list(zip(ids, cents))
-    finally:
-        base.unpersist()
-
-
-#: above this many partial doubles (partitions x k x dim), the GEMM
-#: trainer folds partials executor-side (groupBy + per-dim sums) instead
-#: of collecting them raw — ~400 MB of driver heap at the default
-GEMM_TREE_FOLD_THRESHOLD = 50_000_000
-
-
-def kmeans_train_gemm(
-    df: DataFrame,
-    k: int = 256,
-    n_iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_frac: float | None = None,
-    round_to: int = 6,
-    fold: str = "auto",
-) -> list[tuple[int, list[float]]]:
-    """Lloyd training for VERY large k (10^4-10^5 IVF lists), GEMM
-    formulation: each iteration is ONE ``mapInPandas`` pass — per Arrow
-    batch, assignment via ``V @ C.T`` (one matrix multiply, no per-row
-    fold expressions) and per-cluster partial (count, sum) accumulation in
-    numpy; the driver folds O(partitions x clusters-present) partial rows
-    into the new means. Zero shuffles per iteration; the network carries
-    k x dim partial sums, never the data.
-
-    Contract matches :func:`kmeans_train` (lowest-k-id init, per-iteration
-    ``round_to`` rounding, empty clusters keep their previous centroid);
-    parity with the relational paths is asserted on the clustered fixture
-    up to aggregation-order noise below the rounding grain. For the
-    handful-of-centroids regime, prefer :func:`kmeans_train` — its
-    assignment is the same codegen'd expression the oracle replays.
-
-    Partial fold (``fold``): ``"driver"`` collects the O(partitions x
-    clusters-present) partial rows and folds in numpy — cheapest while
-    they fit (no extra Spark job structure); ``"tree"`` folds them
-    EXECUTOR-side first (``groupBy(_c)`` with per-dim ``sum`` aggregates
-    — the kmeans element_at-per-dim AGG shape, map-side combined), so the
-    driver only ever receives k x (dim+1) values regardless of partition
-    count — the 10^5-list regime where raw partials are ~500 MB.
-    ``"auto"`` (default) switches to tree above
-    :data:`GEMM_TREE_FOLD_THRESHOLD` partial doubles. Both folds round
-    identically per iteration; float summation order differs below the
-    rounding grain only (parity test asserts equal centroids)."""
-    import numpy as np
-
-    base = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
-    if sample_frac is not None:
-        base = base.sample(fraction=sample_frac, seed=11)
-    base = base.persist()
-    try:
-        init = base.orderBy(id_col).limit(k).collect()
-        # fewer rows than k: train with what exists (the relational
-        # kmeans_train handles short init the same way); tot_n/tot_s below
-        # are sized to the actual centroid count, not the requested k
-        k = len(init)
-        ids = [int(r[0]) for r in init]
-        cents = np.array(
-            [[round(float(x), round_to) for x in r[1]] for r in init]
-        )
-        dim = cents.shape[1]
-
-        def make_gen(bc):
-            # the centroid matrix ships as a SparkContext.broadcast (one
-            # torrent transfer per iteration, cached per executor), NOT a
-            # closure capture — at the operator's 10^5-list regime a
-            # captured k x dim float64 array is a ~50 MB pickled task
-            # payload re-shipped per stage. Only the handle is captured.
-            def gen(batches):
-                import pandas as pd
-
-                C = np.asarray(bc.value)
-                cnorm2 = (C * C).sum(axis=1)
-                for pdf in batches:
-                    V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                    d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + cnorm2[None, :]
-                    best = d2.argmin(axis=1)
-                    present = np.unique(best)
-                    sums = np.zeros((len(present), C.shape[1]))
-                    counts = np.zeros(len(present), dtype=np.int64)
-                    for row_i, ci in enumerate(present):
-                        m = best == ci
-                        counts[row_i] = int(m.sum())
-                        sums[row_i] = V[m].sum(axis=0)
-                    yield pd.DataFrame(
-                        {
-                            "_c": present.astype(np.int32),
-                            "_n": counts,
-                            "_s": list(sums),
-                        }
-                    )
-
-            return gen
-
-        if fold not in ("auto", "driver", "tree"):
-            raise ValueError(f"fold={fold!r} not in ('auto', 'driver', 'tree')")
-        use_tree = fold == "tree" or (
-            fold == "auto"
-            and base.rdd.getNumPartitions() * k * dim > GEMM_TREE_FOLD_THRESHOLD
-        )
-        sc = df.sparkSession.sparkContext
-        for _ in range(n_iters):
-            bc = sc.broadcast(cents)
-            part_df = base.mapInPandas(
-                make_gen(bc), "_c int, _n bigint, _s array<double>"
-            )
-            tot_n = np.zeros(k, dtype=np.int64)
-            tot_s = np.zeros((k, dim))
-            if use_tree:
-                folded = part_df.groupBy("_c").agg(
-                    F.sum("_n").alias("_n"),
-                    *[
-                        F.sum(F.element_at("_s", i + 1)).alias(f"s{i}")
-                        for i in range(dim)
-                    ],
-                ).collect()
-                for r in folded:
-                    tot_n[r["_c"]] = r["_n"]
-                    tot_s[r["_c"]] = [r[f"s{i}"] for i in range(dim)]
-            else:
-                for r in part_df.collect():
-                    tot_n[r["_c"]] += r["_n"]
-                    tot_s[r["_c"]] += np.asarray(r["_s"])
-            bc.unpersist()  # the iteration's jobs have all run (collect above)
-            new = cents.copy()
-            nz = tot_n > 0
-            new[nz] = np.round(tot_s[nz] / tot_n[nz, None], round_to)
-            cents = new
-        return [(i, [float(x) for x in c]) for i, c in zip(ids, cents)]
-    finally:
-        base.unpersist()
-
-
-# above this centroid count, ivf_assign switches from inlined expression
-# literals to a broadcast-join plan: k codegen'd distance subexpressions
-# are fine for k <= ~10^2, but real IVF wants 10^4-10^5 lists and the
-# expression tree (and codegen method size) grows linearly with k
-IVF_JOIN_THRESHOLD = 64
-# above this count, composed paths (ivf_pq_topk) route assignment through
-# the ivf_assign_blas GEMM kernel: the join plan pays k interpreted HOF
-# fold evaluations per row (~us each), the GEMM one multiply per batch
-IVF_BLAS_THRESHOLD = 1000
-
-
-def ivf_assign(
-    df: DataFrame,
-    n_centroids: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_to: int = 5,
-    centroids: list[tuple[int, list[float]]] | None = None,
-    join_threshold: int = IVF_JOIN_THRESHOLD,
-) -> DataFrame:
-    """IVF coarse quantizer: assign every vector to its nearest centroid.
-
-    ``centroids`` (from :func:`kmeans_train`) supplies a trained quantizer;
-    default centroids are the `n_centroids` lowest-id vectors —
-    deterministic, so the assignment is an exact DuckDB oracle (k-means
-    refinement moves the centroids but not the plan shape).
-
-    Two physical plans, selected by ``join_threshold`` (crossover measured
-    and documented in tests/test_ivf_trained.py):
-
-    - **k <= join_threshold — literal plan**: the centroid array is inlined
-      as expression literals; one codegen'd pass computes k distances per
-      row, ``array_position`` of the min — no shuffle at all. Cheapest
-      while the expression tree stays small.
-    - **k > join_threshold — broadcast-join plan**: centroids become a
-      (pos, cid, cvec) DataFrame, broadcast; each row meets each centroid
-      in a broadcast nested-loop join and the winner is taken by
-      ``min(struct(dist, pos, cid))`` under a ``groupBy(id)`` whose
-      map-side partial aggregation collapses the k copies per row BEFORE
-      any exchange — shuffle stays O(rows), compute O(rows*k*dim), and no
-      expression grows with k, so 10^4-10^5 lists are plannable.
-
-    The two plans are BIT-IDENTICAL: distances round to ``round_to``
-    before the argmin in both, and ties break to the lowest list position
-    (``array_position`` takes the first minimum; the struct-min compares
-    (dist, pos)). Parity is test-asserted at k=8.
-
-    Precondition: ``id_col`` must be unique. The join plan's
-    ``groupBy(id)`` emits one row per DISTINCT id, while the literal plan
-    emits one row per input row — duplicate ids silently collapse in the
-    former (``kmeans_train``'s join path shares the same contract).
-
-    At 100 TB the assignment is the partition key: each IVF list is a
-    bucket, queries probe `nprobe` lists instead of scanning the table.
-
-    Output: (id, centroid_id, dist) where dist is the L2 distance to the
-    assigned centroid (rounded for cross-engine parity).
-    """
-    cents = centroids if centroids is not None else (
-        df.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
-    )
-    v = F.col(vec_col).cast("array<double>")
-    if len(cents) > join_threshold:
-        spark = df.sparkSession
-        cdf = spark.createDataFrame(
-            [(pos, int(c[0]), [float(x) for x in c[1]]) for pos, c in enumerate(cents)],
-            "_pos int, _cid bigint, _cvec array<double>",
-        )
-        d = F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(v, F.col("_cvec"), lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            round_to,
-        )
-        scored = df.crossJoin(F.broadcast(cdf)).select(
-            F.col(id_col),
-            F.struct(
-                d.alias("d"), F.col("_pos").alias("p"), F.col("_cid").alias("c")
-            ).alias("_w"),
-        )
-        w = scored.groupBy(id_col).agg(F.min("_w").alias("_w"))
-        return w.select(
-            F.col(id_col),
-            F.col("_w.c").alias("centroid_id"),
-            F.col("_w.d").alias("dist"),
-        )
-    dists = [
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.array(*[F.lit(float(x)) for x in c[1]]),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            round_to,
-        )
-        for c in cents
-    ]
-    darr = F.array(*dists)
-    best = F.array_position(darr, F.array_min(darr)).cast("int")
-    return df.select(
-        F.col(id_col),
-        F.lit([int(c[0]) for c in cents]).getItem(best - 1).alias("centroid_id"),
-        F.element_at(darr, best).alias("dist"),
-    )
-
-
-def ivf_assign_blas(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_to: int = 5,
-) -> DataFrame:
-    """BLAS formulation of :func:`ivf_assign` for DENSE large-k assignment:
-    per Arrow batch, distances come from one ``V @ C.T`` matrix multiply
-    (plus the norm expansion) instead of k per-row fold expressions or k
-    joined rows. Same contract and same winner as the other two plans
-    (rounded distance, first-minimum = lowest centroid position;
-    parity-tested at k=8 and k=512).
-
-    Crossover guidance: literal plan to ~64 centroids, broadcast-join to
-    ~10^3 (HOF fold per joined row, ~us each), BLAS beyond — at 10^4
-    lists the join plan pays 10^4 interpreted fold evaluations per row
-    while this kernel pays one GEMM per batch. Zero shuffle either way."""
-    import numpy as np
-
-    C = np.array([[float(x) for x in c[1]] for c in centroids], dtype=np.float64)
-    cids = np.array([int(c[0]) for c in centroids], dtype=np.int64)
-    cnorm2 = (C * C).sum(axis=1)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = np.maximum(
-                (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + cnorm2[None, :],
-                0.0,
-            )
-            d = np.round(np.sqrt(d2), round_to)
-            best = d.argmin(axis=1)  # first occurrence = lowest position
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "centroid_id": cids[best],
-                    "dist": d[np.arange(len(best)), best],
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, f"{id_col} bigint, centroid_id bigint, dist double"
-    )
-
-
-def ivf_candidates(
-    df: DataFrame,
-    queries: DataFrame,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids: list[tuple[int, list[float]]] | None = None,
-) -> DataFrame:
-    """(qid, vec_id) ANN candidates via IVF: each query probes its `nprobe`
-    nearest centroid lists. Query side is tiny (broadcast); the base-side
-    IVF assignment is the bucketed big side — at scale it is materialized
-    once and reused across queries. Pass ``centroids`` from
-    :func:`kmeans_train` for a trained quantizer."""
-    base = ivf_assign(df, n_centroids, vec_col, id_col, centroids=centroids)
-    # per-query nprobe nearest centroids: compute all centroid distances
-    # for the query rows only (tiny), rank, keep nprobe
-    from pyspark.sql import Window
-
-    cents = centroids if centroids is not None else (
-        df.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
-    )
-    qv = F.col("qv").cast("array<double>")
-    rows = []
-    for c in cents:
-        d = F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    qv,
-                    F.array(*[F.lit(float(x)) for x in c[1]]),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x,
-            )
-        )
-        rows.append(F.struct(F.lit(int(c[0])).alias("centroid_id"), d.alias("d")))
-    probed = (
-        queries.select("qid", F.explode(F.array(*rows)).alias("c"))
-        .select("qid", F.col("c.centroid_id"), F.col("c.d"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.col("d"), F.col("centroid_id"))
-            ),
-        )
-        .where(F.col("rn") <= nprobe)
-        .select("qid", "centroid_id")
-    )
-    return (
-        base.join(F.broadcast(probed), "centroid_id")
-        .where(F.col(id_col) != F.col("qid"))
-        .select("qid", id_col)
-        .distinct()
-    )
-
-
-def ivf_recall_at_k(
-    df: DataFrame,
-    k: int = 10,
-    n_queries: int = 20,
-    n_centroids: int = 8,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids: list[tuple[int, list[float]]] | None = None,
-) -> float:
-    """Candidate-set recall@k of the IVF path vs brute-force cosine ground
-    truth, averaged over the `n_queries` lowest ids — the IVF twin of
-    :func:`ann_recall_at_k`, for measuring a trained quantizer
-    (`kmeans_train`) on clustered data."""
-    from pyspark.sql import Window
-
-    ids = [r[0] for r in df.select(id_col).orderBy(id_col).limit(n_queries).collect()]
-    q = df.where(F.col(id_col).isin(ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    )
-    j = df.select(F.col(id_col), F.col(vec_col)).crossJoin(F.broadcast(q)).where(
-        F.col(id_col) != F.col("qid")
-    )
-    scored = j.select(
-        "qid",
-        F.col(id_col),
-        cosine(
-            F.col(vec_col).cast("array<double>"), F.col("qv").cast("array<double>")
-        ).alias("cs"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cs").desc(), F.col(id_col))
-    truth = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("qid", id_col)
-    )
-    cand = ivf_candidates(
-        df, q, n_centroids, nprobe, vec_col, id_col, centroids=centroids
-    )
-    hits = truth.join(cand, ["qid", id_col]).count()
-    return hits / (len(ids) * k)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ's compression half)
-# ---------------------------------------------------------------------------
-
-def pq_train(
-    df: DataFrame,
-    m: int = 4,
-    ksub: int = 8,
-    n_iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_frac: float | None = None,
-) -> list[list[tuple[int, list[float]]]]:
-    """Train a product quantizer: split the vector into ``m`` contiguous
-    subspaces and run the deterministic Lloyd loop (:func:`kmeans_train`)
-    independently in each — the codebooks an ADC scan consumes.
-
-    Why PQ at 100 TB: a 64-dim float64 embedding is 512 bytes; ``m`` codes
-    of ``ksub``<=256 centroids are ``m`` bytes (64x smaller at m=8). The
-    candidate scan then reads codes, not vectors — the difference between
-    an in-memory index and re-scanning the parquet.
-
-    Subspaces train sequentially (m small driver loops, each a few
-    aggregation jobs); at 10^10 rows pass ``sample_frac`` so training reads
-    a seeded sample while encoding still runs over everything. Returns m
-    codebooks, each ``[(init_vec_id, centroid)]`` in stable index order —
-    the list POSITION is the code value.
-    """
-    first = df.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    if not first:
-        raise ValueError("cannot train PQ on an empty dataframe")
-    dim = int(first[0]["d"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d = dim // m
-    books = []
-    for j in range(m):
-        sub = df.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col).cast("array<double>"), j * d + 1, d).alias("_sub"),
-        )
-        books.append(
-            kmeans_train(
-                sub, k=ksub, n_iters=n_iters, vec_col="_sub", id_col=id_col,
-                sample_frac=sample_frac,
-            )
-        )
-    return books
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[tuple[int, list[float]]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_to: int = 5,
-) -> DataFrame:
-    """Encode every vector to its m nearest-sub-centroid indices — one
-    codegen'd projection, NO shuffle (the PQ twin of :func:`ivf_assign`'s
-    plan shape): per subspace, ksub rounded L2 distances as an array
-    literal-join, ``array_position(min)`` with first-occurrence (= lowest
-    code) tie-break. Output: (id, c0..c{m-1}) int codes.
-
-    Distances are rounded to ``round_to`` before the argmin so the
-    assignment is exactly reproducible cross-engine (the DuckDB oracle
-    ranks by the same rounded distance).
-
-    Expression-size note: the inlined codebook costs dim*ksub product
-    terms total (m codebooks x ksub centroids x dim/m dims) — bounded by
-    ksub<=256, i.e. ~16k terms at dim=64, still codegen-safe; PQ never
-    needs the 10^4+ fan-out that forces ivf_assign's broadcast-join path
-    (that is what the IVF coarse level is for)."""
-    m = len(codebooks)
-    d = len(codebooks[0][0][1])
-    v = F.col(vec_col).cast("array<double>")
-    out = [F.col(id_col)]
-    for j, book in enumerate(codebooks):
-        sub = F.slice(v, j * d + 1, d)
-        darr = F.array(
-            *[F.round(F.sqrt(_l2sq(sub, c)), round_to) for _, c in book]
-        )
-        code = (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-        out.append(code.alias(f"c{j}"))
-    return df.select(*out)
-
-
-def pq_adc_topk(
-    codes: DataFrame,
-    query_vec: list[float],
-    codebooks: list[list[tuple[int, list[float]]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    refine_with: DataFrame | None = None,
-    refine_factor: int = 4,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: the query stays exact, each
-    subspace contributes a ksub-entry lookup table (query-slice vs
-    sub-centroids, computed ONCE on the driver — m*ksub floats), and the
-    scan is ``sum_j lut_j[code_j]`` per row — m array lookups, no vector
-    math, over the m-byte codes. Plan: codegen projection +
-    TakeOrderedAndProject; the only data motion is the top-k itself.
-
-    ``refine_with`` (the exact-vector table) enables the standard ADC →
-    exact re-rank: ADC shortlists ``refine_factor * k`` ids (quantization
-    cannot rank points that share codes — e.g. tight cluster-mates), then
-    ONLY those rows' exact vectors are fetched (a k·refine_factor-row join,
-    not a table scan) and re-ranked by true L2. This is FAISS's refine
-    stage as DataFrame ops; the exact table is read with id pushdown, so
-    the cost stays O(shortlist).
-
-    Output: (id, adc_dist) ascending — adc_dist is the EXACT distance when
-    refining."""
-    m = len(codebooks)
-    d = len(codebooks[0][0][1])
-    dist = None
-    for j, book in enumerate(codebooks):
-        qs = [float(x) for x in query_vec[j * d : (j + 1) * d]]
-        lut = [
-            sum((qx - cx) * (qx - cx) for qx, cx in zip(qs, c)) for _, c in book
-        ]
-        term = F.array(*[F.lit(x) for x in lut]).getItem(F.col(f"c{j}"))
-        dist = term if dist is None else dist + term
-    shortlist_k = k if refine_with is None else max(k * refine_factor, k)
-    adc = (
-        codes.select(F.col(id_col), dist.alias("adc_dist"))
-        .orderBy(F.col("adc_dist"), F.col(id_col))
-        .limit(shortlist_k)
-    )
-    if refine_with is None:
-        return adc
-    qlits = [float(x) for x in query_vec]
-    exact = refine_with.select(
-        F.col(id_col),
-        F.sqrt(_l2sq(F.col(vec_col).cast("array<double>"), qlits)).alias("_ed"),
-    )
-    return (
-        adc.select(id_col)
-        .join(exact, id_col)
-        .select(F.col(id_col), F.col("_ed").alias("adc_dist"))
-        .orderBy(F.col("adc_dist"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def pq_recall_at_k(
-    df: DataFrame,
-    k: int = 10,
-    n_queries: int = 10,
-    m: int = 4,
-    ksub: int = 8,
-    n_iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    refine: bool = False,
-) -> float:
-    """Recall@k of the PQ-ADC scan vs exact L2 ground truth over the
-    `n_queries` lowest ids — measures what the compression costs. With
-    ``refine``, the ADC shortlist is exact-re-ranked first (the production
-    configuration); without, raw code-space ranking (the floor)."""
-    books = pq_train(df, m=m, ksub=ksub, n_iters=n_iters,
-                     vec_col=vec_col, id_col=id_col)
-    codes = pq_encode(df, books, vec_col=vec_col, id_col=id_col).persist()
-    qrows = (
-        df.select(id_col, vec_col).orderBy(id_col).limit(n_queries).collect()
-    )
-    try:
-        hits = 0
-        for qid, qv in qrows:
-            qv = [float(x) for x in qv]
-            exact = (
-                df.select(
-                    F.col(id_col),
-                    F.sqrt(_l2sq(F.col(vec_col).cast("array<double>"), qv)).alias("dd"),
-                )
-                .where(F.col(id_col) != qid)
-                .orderBy("dd", id_col)
-                .limit(k)
-                .collect()
-            )
-            truth = {r[0] for r in exact}
-            approx = pq_adc_topk(
-                codes.where(F.col(id_col) != qid), qv, books, k=k, id_col=id_col,
-                refine_with=df.where(F.col(id_col) != qid) if refine else None,
-                vec_col=vec_col,
-            ).collect()
-            hits += len(truth & {r[0] for r in approx})
-        return hits / (n_queries * k)
-    finally:
-        codes.unpersist()
-
-
-def ivf_pq_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    n_centroids: int = 8,
-    m: int = 4,
-    ksub: int = 8,
-    centroids: list[tuple[int, list[float]]] | None = None,
-    codebooks: list[list[tuple[int, list[float]]]] | None = None,
-    refine: bool = True,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    blas_threshold: int | None = None,
-) -> DataFrame:
-    """The full ANN index stack composed: IVF routing x PQ compression x
-    exact refine — FAISS's IVFPQ(+refine) as DataFrame ops.
-
-    1. route: the query's ``nprobe`` nearest coarse centroids are picked on
-       the driver (centroids are a tiny local list); only vectors assigned
-       to those lists survive — at scale the assignment is the partition
-       key, so this is partition pruning, not a filter scan;
-    2. score: ADC over the survivors' m-byte PQ codes (per-subspace lookup
-       tables, no vector math) — the scan reads codes, not vectors;
-    3. refine: the ADC shortlist's EXACT vectors are fetched (O(shortlist)
-       id-pushdown join) and re-ranked by true L2.
-
-    ``centroids`` / ``codebooks`` accept pre-trained quantizers
-    (:func:`kmeans_train` / :func:`pq_train`); defaults train inline —
-    fine for tests, wasteful per-query in production (train once, reuse).
-    The routing assignment follows the full crossover matrix: literal /
-    broadcast-join via :func:`ivf_assign` below ``blas_threshold``
-    (default :data:`IVF_BLAS_THRESHOLD`) centroids, the
-    :func:`ivf_assign_blas` GEMM kernel above it (10^4-list coarse
-    quantizers pay k interpreted fold evaluations per row in the join
-    plan, one matrix multiply per Arrow batch here; same winner — three-
-    way parity is test-locked). Output: (id, adc_dist ascending; exact
-    distance when refining)."""
-    if centroids is None:
-        centroids = kmeans_train(
-            df, k=n_centroids, n_iters=2, vec_col=vec_col, id_col=id_col
-        )
-    if codebooks is None:
-        codebooks = pq_train(df, m=m, ksub=ksub, vec_col=vec_col, id_col=id_col)
-
-    q = [float(x) for x in query_vec]
-    by_dist = sorted(
-        centroids,
-        key=lambda c: (sum((a - b) * (a - b) for a, b in zip(q, c[1])), c[0]),
-    )
-    probed = [int(c[0]) for c in by_dist[:nprobe]]
-
-    if blas_threshold is None:
-        blas_threshold = IVF_BLAS_THRESHOLD
-    if len(centroids) > blas_threshold:
-        assign = ivf_assign_blas(
-            df, centroids=centroids, vec_col=vec_col, id_col=id_col
-        )
-    else:
-        assign = ivf_assign(df, vec_col=vec_col, id_col=id_col, centroids=centroids)
-    survivors = df.join(
-        assign.where(F.col("centroid_id").isin(probed)).select(id_col), id_col
-    )
-    codes = pq_encode(survivors, codebooks, vec_col=vec_col, id_col=id_col)
-    return pq_adc_topk(
-        codes,
-        q,
-        codebooks,
-        k=k,
-        id_col=id_col,
-        refine_with=survivors if refine else None,
-        vec_col=vec_col,
-    )

@@ -61,15 +61,11 @@ def compact(
     # sort inserted).
     df = df.sortWithinPartitions(BUCKET_COL, *KEY_COLS)
 
-    new_files = table.write_bucketed(
-        df, snapshot_hint=f"c{snap.version + 1:08d}", n_buckets=snap.n_buckets
-    )
+    new_files = table.write_bucketed(df, snapshot_hint=f"c{snap.version + 1:08d}")
     # rewrite-files commit: replace exactly the files we folded; delta files
     # appended by a concurrent merge since `snap` survive the rewrite (the
     # commit rebases on CommitConflict) — Iceberg's RewriteFiles semantics.
-    from couch_to_mongo_spark.operators.merge import _footer_seq_stats
-
-    _, _, _, per_file = _footer_seq_stats(table, new_files)
+    _, per_file = table.file_stats(new_files)
     replaced = {f for b in buckets for f in snap.files.get(str(b), [])}
     table.commit(
         new_files,

@@ -61,12 +61,11 @@ from couch_to_mongo_spark.operators.dedup import (
 )
 from couch_to_mongo_spark.operators.poison import POISON_COL
 from couch_to_mongo_spark.operators.schema_evolution import align_to_schema, evolve_schema
-from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
+from couch_to_mongo_spark.tableformat import BUCKET_COL, SEQ_COL, LakeTable, bucket_expr
 
 # the merge key: every table is keyed and bucketed by it
 KEY_COLS = ("conv_id", "turn_idx")
 # engine-managed columns stored in the table alongside the payload
-SEQ_COL = "_seq"
 REV_COL = "_rev"
 DELETED_COL = "_deleted"
 ENGINE_COLS = (SEQ_COL, REV_COL, DELETED_COL)
@@ -209,14 +208,12 @@ def merge_batch(
         new_rows = align_to_schema(b, evolved).withColumn(
             BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets)
         )
-        delta = table.write_bucketed(
-            new_rows, snapshot_hint=f"s{snap.version + 1:08d}", n_buckets=n_buckets
-        )
+        delta = table.write_bucketed(new_rows, snapshot_hint=f"s{snap.version + 1:08d}")
     finally:
         if poison_cache is not None:
             poison_cache.unpersist()
     touched = sorted(delta.keys())
-    rows, _, _, per_file = _footer_seq_stats(table, delta)
+    rows, per_file = table.file_stats(delta)
     result = MergeResult(
         skipped=False, rows_applied=rows, touched_buckets=len(touched), n_poison=n_poison
     )
@@ -248,7 +245,7 @@ def _fenced_result(table: LakeTable, run_id: str, batch_id: int) -> MergeResult:
     if sid is None:
         return MergeResult(skipped=True)
     try:
-        lin = table.snapshot_by_id(sid).lineage
+        lin = table.snapshot(sid).lineage
     except FileNotFoundError:  # expired by snapshot retention
         return MergeResult(skipped=True, snapshot_id=sid)
     names = {f.name for f in fields(MergeResult)} - {"skipped", "snapshot_id"}
@@ -339,58 +336,3 @@ def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, bat
         n_poison = dead_letter.append(poison, run_id, batch_id)
         b = poison_cache.where(F.col(POISON_COL).isNull()).drop(POISON_COL)
     return b, n_poison, poison_cache
-
-
-def _one_footer(path: str) -> tuple[int, int | None, int | None]:
-    """(rows, seq_min, seq_max) of one parquet file from its footer."""
-    import pyarrow.parquet as _pq
-
-    md = _pq.read_metadata(path)
-    fmn, fmx = None, None
-    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    if SEQ_COL in idx:
-        ci = idx[SEQ_COL]
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            if st is not None and st.has_min_max:
-                fmn = st.min if fmn is None else min(fmn, st.min)
-                fmx = st.max if fmx is None else max(fmx, st.max)
-    return md.num_rows, fmn, fmx
-
-
-# below this many files the thread-pool overhead beats the serial loop
-_FOOTER_PARALLEL_THRESHOLD = 32
-
-
-def _footer_seq_stats(table, new_files):
-    """rows + min/max(_seq) of the freshly written delta files, read from
-    parquet footers (metadata-only I/O). Also returns the per-file stats
-    dict {relpath: [rows, seq_min, seq_max]} persisted into the snapshot
-    for seq-range scan pruning (LakeTable.read(min_seq=...)).
-
-    Per-micro-batch MERGE touches O(touched buckets) files — a serial loop
-    is fine. Whole-table writers (bulk_bootstrap, rescale_buckets) hand in
-    every file of the table, so above a threshold the footer reads fan out
-    to a thread pool (pyarrow releases the GIL on I/O): a 10^5-file table
-    must not pay 10^5 serial opens in its commit path."""
-    import os as _os
-
-    rel = [f for fl in new_files.values() for f in fl]
-    paths = [_os.path.join(table.path, f) for f in rel]
-    if len(paths) > _FOOTER_PARALLEL_THRESHOLD:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, len(paths))) as pool:
-            stats = list(pool.map(_one_footer, paths))
-    else:
-        stats = [_one_footer(p) for p in paths]
-
-    rows, mn, mx = 0, None, None
-    per_file: dict[str, list] = {}
-    for f, (n, fmn, fmx) in zip(rel, stats):
-        rows += n
-        per_file[f] = [n, fmn, fmx]
-        if fmn is not None:
-            mn = fmn if mn is None else min(mn, fmn)
-            mx = fmx if mx is None else max(mx, fmx)
-    return rows, mn, mx, per_file

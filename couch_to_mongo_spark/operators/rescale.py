@@ -33,11 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from couch_to_mongo_spark.operators.merge import (
-    KEY_COLS,
-    _footer_seq_stats,
-    fold_stored_rows,
-)
+from couch_to_mongo_spark.operators.merge import KEY_COLS, fold_stored_rows
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
 
 __all__ = ["rescale_buckets"]
@@ -61,10 +57,8 @@ def rescale_buckets(
     # operators/compact.py
     df = df.sortWithinPartitions(BUCKET_COL, *KEY_COLS)
 
-    new_files = table.write_bucketed(
-        df, snapshot_hint=f"r{snap.version + 1:08d}", n_buckets=new_n_buckets
-    )
-    rows, _, _, per_file = _footer_seq_stats(table, new_files)
+    new_files = table.write_bucketed(df, snapshot_hint=f"r{snap.version + 1:08d}")
+    rows, per_file = table.file_stats(new_files)
     lineage = {
         "op": "rescale",
         "old_n_buckets": old_n,

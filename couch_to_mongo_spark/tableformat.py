@@ -47,6 +47,8 @@ from pyspark.sql import types as T
 
 _SNAP_RE = re.compile(r"^v(\d{8})\.json$")
 BUCKET_COL = "_bucket"
+# the engine's sequence column: per-file bounds on it drive scan pruning
+SEQ_COL = "_seq"
 # commit rebase budget: retries after a CommitConflict, and the base of the
 # jittered exponential backoff between them (seconds)
 COMMIT_MAX_RETRIES = 10
@@ -172,6 +174,9 @@ _MANIFEST_CACHE_LOCK = threading.Lock()
 # above this many buckets, a cold materialized snapshot load reads the
 # per-bucket manifests through a thread pool instead of a serial loop
 _MANIFEST_PARALLEL_THRESHOLD = 64
+# below this many files the footer-stats pass reads serially: the
+# thread-pool overhead beats the loop
+_FOOTER_PARALLEL_THRESHOLD = 32
 
 
 def _cache_put(p: str, entry: tuple[list[str], dict[str, list]]) -> None:
@@ -181,6 +186,23 @@ def _cache_put(p: str, entry: tuple[list[str], dict[str, list]]) -> None:
         while len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
             _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
         _MANIFEST_CACHE[p] = entry
+
+
+def _one_footer(path: str) -> list:
+    """[rows, seq_min, seq_max] of one parquet file from its footer."""
+    import pyarrow.parquet as _pq
+
+    md = _pq.read_metadata(path)
+    fmn, fmx = None, None
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    if SEQ_COL in idx:
+        ci = idx[SEQ_COL]
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(ci).statistics
+            if st is not None and st.has_min_max:
+                fmn = st.min if fmn is None else min(fmn, st.min)
+                fmx = st.max if fmx is None else max(fmx, st.max)
+    return [md.num_rows, fmn, fmx]
 
 
 class LakeTable:
@@ -398,10 +420,6 @@ class LakeTable:
             return fence[1]
         return None
 
-    def snapshot_by_id(self, snapshot_id: int) -> Snapshot:
-        """Resolve a snapshot by its id (ids == versions by construction)."""
-        return self.snapshot(snapshot_id)
-
     # ---------------- read ----------------
 
     def version_as_of(self, ts: float) -> int:
@@ -467,8 +485,8 @@ class LakeTable:
             # the Spark-native analogue of the reference tolerating docs
             # with/without Header/Analytics (SURVEY.md §1.2).
             df = self.spark.read.schema(snap.schema).parquet(*files)
-        if min_seq is not None and min_seq_rows and "_seq" in df.columns:
-            df = df.where(F.col("_seq") >= F.lit(min_seq))
+        if min_seq is not None and min_seq_rows and SEQ_COL in df.columns:
+            df = df.where(F.col(SEQ_COL) >= F.lit(min_seq))
         return df
 
     @staticmethod
@@ -769,9 +787,7 @@ class LakeTable:
             deleted.append(entry)
         return sorted(deleted)
 
-    def write_bucketed(
-        self, df: DataFrame, snapshot_hint: str, n_buckets: int, bucket_col: str = BUCKET_COL
-    ) -> dict[int, list[str]]:
+    def write_bucketed(self, df: DataFrame, snapshot_hint: str) -> dict[int, list[str]]:
         """Write df as per-bucket parquet under data/<snapshot_hint>-<uuid>/
         and return {bucket: [relative paths]}.
 
@@ -786,13 +802,13 @@ class LakeTable:
         but never committed) are reclaimed by :meth:`gc_orphans`.
         """
         out = os.path.join(self.data_dir, f"{snapshot_hint}-{uuid.uuid4().hex[:8]}")
-        (df.write.mode("errorifexists").partitionBy(bucket_col).parquet(out))
+        (df.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(out))
         # Rename `_bucket=N` -> `bN` so later multi-file reads never trigger
         # Spark's partition-column inference (which would append _bucket to
         # the schema and poison schema-equality checks).
         result: dict[int, list[str]] = {}
         for entry in os.listdir(out):
-            if not entry.startswith(f"{bucket_col}="):
+            if not entry.startswith(f"{BUCKET_COL}="):
                 continue
             b = int(entry.split("=", 1)[1])
             bdir = os.path.join(out, f"b{b}")
@@ -804,3 +820,25 @@ class LakeTable:
             ]
             result[b] = sorted(rels)
         return result
+
+    def file_stats(self, new_files: dict[int, list[str]]) -> tuple[int, dict[str, list]]:
+        """(total rows, {relpath: [rows, seq_min, seq_max]}) of freshly
+        written files, read from parquet footers (metadata-only I/O). The
+        per-file dict is what :meth:`commit` persists as ``new_file_stats``
+        for seq-range scan pruning (:meth:`read` with ``min_seq``).
+
+        Per-micro-batch MERGE touches O(touched buckets) files — a serial
+        loop is fine. Whole-table writers (bulk_bootstrap, rescale_buckets)
+        hand in every file of the table, so above a threshold the footer
+        reads fan out to a thread pool (pyarrow releases the GIL on I/O): a
+        10^5-file table must not pay 10^5 serial opens in its commit path."""
+        rel = [f for fl in new_files.values() for f in fl]
+        paths = [os.path.join(self.path, f) for f in rel]
+        if len(paths) > _FOOTER_PARALLEL_THRESHOLD:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(32, len(paths))) as pool:
+                stats = list(pool.map(_one_footer, paths))
+        else:
+            stats = [_one_footer(p) for p in paths]
+        return sum(st[0] for st in stats), dict(zip(rel, stats))

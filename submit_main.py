@@ -47,49 +47,35 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--run-id", default="bootstrap")
 
-    p = sub.add_parser("replay", help="CDC catch-up (availableNow)")
-    p.add_argument("--table", required=True)
-    p.add_argument("--changes", required=True)
-    p.add_argument("--checkpoint", required=True)
-    p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--max-files-per-trigger", type=int, default=None)
-    p.add_argument("--since-seq", type=int, default=None)
-    p.add_argument("--emit-cdf", action="store_true",
-                   help="write the row-level change feed per batch")
-    p.add_argument("--maintain-view", default=None, metavar="PATH",
-                   help="keep a rendered-conversation corpus table fresh "
-                        "at PATH (O(touched convs) refresh per batch)")
-    p.add_argument("--view-refresh-every", type=int, default=1, metavar="K",
-                   help="defer view maintenance: catch up every K batches "
-                        "+ at end of run instead of per batch (crash-safe; "
-                        "changed convs derived from the primary's _seq "
-                        "bounds)")
-    p.add_argument("--retention-keep-last", type=int, default=None,
-                   help="expire snapshots beyond the last N on the "
-                        "maintenance loop (bounds the version log on long "
-                        "streams; time travel valid within the window)")
-    p.add_argument("--retention-every", type=int, default=50,
-                   help="run snapshot expiry every N applied batches")
+    # the flags `replay` and `tail` share: one CdcPipeline configuration
+    stream = argparse.ArgumentParser(add_help=False)
+    stream.add_argument("--table", required=True)
+    stream.add_argument("--changes", required=True)
+    stream.add_argument("--checkpoint", required=True)
+    stream.add_argument("--n-buckets", type=int, default=64)
+    stream.add_argument("--max-files-per-trigger", type=int, default=None)
+    stream.add_argument("--emit-cdf", action="store_true",
+                        help="write the row-level change feed per batch")
+    stream.add_argument("--maintain-view", default=None, metavar="PATH",
+                        help="keep a rendered-conversation corpus table fresh "
+                             "at PATH (O(touched convs) refresh per batch)")
+    stream.add_argument("--view-refresh-every", type=int, default=1, metavar="K",
+                        help="defer view maintenance: catch up every K batches "
+                             "+ at end of run instead of per batch (crash-safe; "
+                             "changed convs derived from the primary's _seq "
+                             "bounds)")
+    stream.add_argument("--retention-keep-last", type=int, default=None,
+                        help="expire snapshots beyond the last N on the "
+                             "maintenance loop (bounds the version log on long "
+                             "streams; time travel valid within the window)")
+    stream.add_argument("--retention-every", type=int, default=50,
+                        help="run snapshot expiry every N applied batches")
 
-    p = sub.add_parser("tail", help="continuous CDC tail")
-    p.add_argument("--table", required=True)
-    p.add_argument("--changes", required=True)
-    p.add_argument("--checkpoint", required=True)
-    p.add_argument("--n-buckets", type=int, default=64)
+    p = sub.add_parser("replay", parents=[stream], help="CDC catch-up (availableNow)")
+    p.add_argument("--since-seq", type=int, default=None)
+
+    p = sub.add_parser("tail", parents=[stream], help="continuous CDC tail")
     p.add_argument("--trigger", default="5 seconds")
-    p.add_argument("--max-files-per-trigger", type=int, default=None)
-    p.add_argument("--emit-cdf", action="store_true",
-                   help="write the row-level change feed per batch")
-    p.add_argument("--maintain-view", default=None, metavar="PATH",
-                   help="keep a rendered-conversation corpus table fresh "
-                        "at PATH (O(touched convs) refresh per batch)")
-    p.add_argument("--view-refresh-every", type=int, default=1, metavar="K",
-                   help="defer view maintenance to every K batches")
-    p.add_argument("--retention-keep-last", type=int, default=None,
-                   help="expire snapshots beyond the last N on the "
-                        "maintenance loop")
-    p.add_argument("--retention-every", type=int, default=50,
-                   help="run snapshot expiry every N applied batches")
 
     p = sub.add_parser(
         "view-catchup",

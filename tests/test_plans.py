@@ -89,13 +89,6 @@ def test_jaccard_joins_on_hashed_shingle(spark):
     assert "conv(substring(md5" in plan.replace(" ", "").lower() or "conv" in plan.lower(), plan
 
 
-def test_ivf_assign_no_shuffle(spark):
-    """Centroid assignment is a pure map: broadcast literals + one pass,
-    zero exchanges."""
-    df = E.q_ivf_assign(spark, SF)
-    assert count_exchanges(df) == 0, formatted_plan(df)
-
-
 def test_fast_merge_single_shuffle(spark):
     """The MOR fast path's whole apply (bucket partition -> LWW dedup) must
     cost exactly ONE exchange, with the window planned as
@@ -218,19 +211,6 @@ def test_curate_corpus_no_cartesian_single_scan_branches(spark):
     assert "CartesianProduct" not in plan, plan
     assert "Window" in plan, plan  # keeper election: min(id) over _fp
     assert count_partial_final_aggs(df) >= 2  # repetition/LSH map-side combine
-
-
-def test_ivf_assign_large_k_is_broadcast_join(spark):
-    """k>threshold must plan as broadcast join + partial-agg argmin, not a
-    k-wide expression (codegen blowup) and not a shuffle of k copies."""
-    from couch_to_mongo_spark.functions import vectors as V
-
-    emb = spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
-    cents = [(i, [float(i), 0.0] + [0.0] * 62) for i in range(100)]
-    df = V.ivf_assign(emb, centroids=cents)
-    plan = formatted_plan(df)
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert count_partial_final_aggs(df) >= 2, plan  # map-side min before exchange
 
 
 def test_decontaminate_broadcasts_benchmark_side(spark):

@@ -1,6 +1,5 @@
 """Streaming operators beyond the CDC core: stateful progress
-(applyInPandasWithState) verified against batch ground truth, and IVF
-candidate retrieval over the vector fixture."""
+(applyInPandasWithState) verified against batch ground truth."""
 
 from __future__ import annotations
 
@@ -139,22 +138,3 @@ def test_stateful_state_survives_restart(spark, tmp_path):
     # their counts must INCLUDE the first run's events (state resumed)
     for _, r in out.iterrows():
         assert r["n_events"] == truth[r["conv_id"]]
-
-
-def test_ivf_candidates_contain_planted_source(spark):
-    """IVF ANN: a query that IS an existing vector must surface that vector
-    in its candidate list once enough lists are probed."""
-    import numpy as np
-    from couch_to_mongo_spark.functions import vectors as V
-
-    rng = np.random.default_rng(11)
-    rows = [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(300)]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    qs = spark.createDataFrame(
-        [(-r[0] - 1, r[1]) for r in rows[:10]], "qid: long, qv: array<double>"
-    )
-    cand = V.ivf_candidates(df, qs, n_centroids=8, nprobe=1)
-    hits = cand.where(F.col("vec_id") == -F.col("qid") - 1).count()
-    # the planted source is in the SAME list as the query (identical vector
-    # -> identical assignment), so nprobe=1 already recovers all of them
-    assert hits == 10

@@ -282,7 +282,7 @@ def test_footer_stats_parallel_path_matches_serial(spark, tmp_table_path):
     serial driver opens); results must be identical to the serial loop."""
     from pyspark.sql import functions as F
 
-    import couch_to_mongo_spark.operators.merge as M
+    import couch_to_mongo_spark.tableformat as TF
     from couch_to_mongo_spark.bootstrap import bulk_bootstrap
 
     src = spark.range(3000).select(
@@ -294,14 +294,14 @@ def test_footer_stats_parallel_path_matches_serial(spark, tmp_table_path):
     table, _ = bulk_bootstrap(spark, tmp_table_path, src, n_buckets=64, normalize=False)
     new_files = table.snapshot().files
     n_files = sum(len(v) for v in new_files.values())
-    assert n_files > M._FOOTER_PARALLEL_THRESHOLD  # 64 files: pool path
-    par = M._footer_seq_stats(table, new_files)
-    old = M._FOOTER_PARALLEL_THRESHOLD
+    assert n_files > TF._FOOTER_PARALLEL_THRESHOLD  # 64 files: pool path
+    par = table.file_stats(new_files)
+    old = TF._FOOTER_PARALLEL_THRESHOLD
     try:
-        M._FOOTER_PARALLEL_THRESHOLD = 10**9  # force serial
-        ser = M._footer_seq_stats(table, new_files)
+        TF._FOOTER_PARALLEL_THRESHOLD = 10**9  # force serial
+        ser = table.file_stats(new_files)
     finally:
-        M._FOOTER_PARALLEL_THRESHOLD = old
+        TF._FOOTER_PARALLEL_THRESHOLD = old
     assert par == ser
     assert par[0] == 3000
 
