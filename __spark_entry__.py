@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from couch_to_mongo_spark.functions import text as X
-from couch_to_mongo_spark.functions import vectors as V
 from couch_to_mongo_spark.functions.transcripts import pack_sequences
 from couch_to_mongo_spark.operators.dedup import lww_dedup, with_rev_gen
 
@@ -622,7 +621,7 @@ ORDER BY revenue DESC, l_orderkey LIMIT 10
 
 
 # ---------------------------------------------------------------------------
-# training-data operators: dedup family / text analysis / vectors
+# training-data operators: dedup family / text analysis
 # ---------------------------------------------------------------------------
 
 def q_dedup_exact(spark, sf_dir):
@@ -1245,177 +1244,6 @@ FROM documents
 """
 
 
-def q_cosine_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
-    return V.cosine_topk(emb, list(qvec), k=10)
-
-
-SQL_COSINE_TOPK = """
-WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-comp AS (
-  SELECT e.vec_id,
-         sum(e.embedding[i.i]::DOUBLE * q.qe[i.i]::DOUBLE) AS dp,
-         sum(e.embedding[i.i]::DOUBLE * e.embedding[i.i]::DOUBLE) AS na,
-         sum(q.qe[i.i]::DOUBLE * q.qe[i.i]::DOUBLE) AS nq
-  FROM embeddings e CROSS JOIN q CROSS JOIN range(1, 65) i(i)
-  GROUP BY e.vec_id)
-SELECT vec_id, ROUND(dp / (sqrt(na) * sqrt(nq)), 5) AS cos_sim
-FROM comp ORDER BY cos_sim DESC, vec_id LIMIT 10
-"""
-
-
-def q_neardup_cosine(spark, sf_dir):
-    """Exact label-blocked cosine pairs — r7: routed through the BLAS
-    gram-matrix kernel (identical pairs + rounding, parity-locked by
-    tests/test_embedding_dedup_lsh.py::test_blas_pairs_match_expression_pairs).
-    The Column-expression join form scores each of the O(pairs) joined rows
-    with an interpreted HOF dot (~6 us/pair — 114 s for the 20M in-label
-    pairs at the driver's sf1.0); the kernel ships each label block ONCE
-    over Arrow and runs the all-pairs dot as one numpy ``V @ V.T``."""
-    return V.neardup_pairs_by_label_blas(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3
-    )
-
-
-SQL_NEARDUP = """
-WITH comp AS (
-  SELECT a.label AS lbl, a.vec_id AS id_a, b.vec_id AS id_b,
-         sum(a.embedding[i.i]::DOUBLE * b.embedding[i.i]::DOUBLE) AS dp,
-         sum(a.embedding[i.i]::DOUBLE * a.embedding[i.i]::DOUBLE) AS na,
-         sum(b.embedding[i.i]::DOUBLE * b.embedding[i.i]::DOUBLE) AS nb
-  FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-  CROSS JOIN range(1, 65) i(i)
-  GROUP BY 1, 2, 3)
-SELECT lbl, id_a, id_b, ROUND(dp / (sqrt(na) * sqrt(nb)), 5) AS cos_sim
-FROM comp WHERE ROUND(dp / (sqrt(na) * sqrt(nb)), 5) >= 0.3
-"""
-
-
-def q_embedding_dedup_groups(spark, sf_dir):
-    """Embedding-space dedup groups: blocked cosine near-dup pairs closed
-    into connected components (the same large-star/small-star fixpoint as
-    the text pipelines) — every vector mapped to its component-min group.
-    Completes the dedup-family matrix: exact / jaccard / LSH / simhash /
-    embedding all share one grouping endgame."""
-    from couch_to_mongo_spark.operators.components import (
-        attach_components,
-        connected_components,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # r7: pair stage routed through the BLAS gram kernel (same pairs,
-    # parity-locked) — the expression join cost 306 s at the driver's
-    # sf1.0 vs ~2 s for the kernel; the closure is unchanged
-    pairs = V.neardup_pairs_by_label_blas(emb, threshold=0.3)
-    comp = connected_components(pairs, src="id_a", dst="id_b")
-    return attach_components(emb, comp, id_col="vec_id", out_col="group_id")
-
-
-SQL_EMB_DEDUP_GROUPS = """
-WITH RECURSIVE comp AS (
-  SELECT a.label AS lbl, a.vec_id AS id_a, b.vec_id AS id_b,
-         sum(a.embedding[i.i]::DOUBLE * b.embedding[i.i]::DOUBLE) AS dp,
-         sum(a.embedding[i.i]::DOUBLE * a.embedding[i.i]::DOUBLE) AS na,
-         sum(b.embedding[i.i]::DOUBLE * b.embedding[i.i]::DOUBLE) AS nb
-  FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-  CROSS JOIN range(1, 65) i(i)
-  GROUP BY 1, 2, 3),
-pairs AS (SELECT id_a, id_b FROM comp
-          WHERE ROUND(dp / (sqrt(na) * sqrt(nb)), 5) >= 0.3),
-edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-reach(id, lbl) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.b = r.id
-)
-SELECT id AS vec_id, MIN(lbl) AS group_id FROM reach GROUP BY id
-"""
-
-
-def q_embedding_dedup_groups_lsh(spark, sf_dir):
-    """PRODUCTION embedding dedup (functions/vectors.py
-    embedding_dedup_groups_lsh): LSH-blocked candidate pairs (symmetric
-    multi-probe — no label column needed) -> per-bucket BLAS gram-matrix
-    verify -> connected-components closure. The label-free twin of
-    q_embedding_dedup_groups; n_planes=None derives the signature width
-    from the corpus count (vectors.derive_n_planes), and the oracle
-    replays the identical derivation + plane/probe/cap pipeline including
-    the recursive closure — so ONE code path serves 500 vectors and
-    10^10."""
-    return V.embedding_dedup_groups_lsh(
-        _t(spark, sf_dir, "embeddings"),
-        threshold=0.3,
-        n_planes=None,
-        dim=64,
-        probes=1,
-        max_bucket_size=200,
-    )
-
-
-SQL_EMB_DEDUP_GROUPS_LSH = """
-WITH RECURSIVE nv AS (
-  SELECT greatest(6, least(24, CAST(ceil(log2(count(*) / 8.0)) AS INT))) AS np
-  FROM embeddings),
-p AS (
-  SELECT i.i AS pi, j.j AS pj,
-         (CAST('0x' || substr(md5('pl' || CAST(i.i AS VARCHAR) || ':' || CAST(j.j AS VARCHAR)), 1, 15) AS BIGINT)
-          % 2001 - 1000) / 1000.0 AS w
-  FROM range(0, 24) i(i) CROSS JOIN range(0, 64) j(j)
-  WHERE i.i < (SELECT np FROM nv)),
-d AS (SELECT e.vec_id, p.pi, sum(e.embedding[p.pj + 1]::DOUBLE * p.w) AS dp
-      FROM embeddings e CROSS JOIN p GROUP BY e.vec_id, p.pi),
-b AS (SELECT vec_id,
-        CAST(sum(CASE WHEN dp > 0 THEN (1::BIGINT << pi) ELSE 0 END) AS BIGINT) AS bucket
-      FROM d GROUP BY vec_id),
-m AS (SELECT 0::BIGINT AS mm UNION ALL
-      SELECT (1::BIGINT << i.i) FROM range(0, 24) i(i)
-      WHERE i.i < (SELECT np FROM nv)),
-pb AS (SELECT vec_id, xor(bucket, mm) AS pbucket FROM b CROSS JOIN m),
-ok AS (SELECT pb.vec_id, pb.pbucket FROM pb
-       JOIN (SELECT pbucket, count(*) AS c FROM pb GROUP BY 1) s USING (pbucket)
-       WHERE s.c BETWEEN 2 AND 200),
-cand AS (SELECT DISTINCT a.vec_id AS id_a, b2.vec_id AS id_b
-         FROM ok a JOIN ok b2 ON a.pbucket = b2.pbucket AND a.vec_id < b2.vec_id),
-comp AS (SELECT c.id_a, c.id_b,
-          sum(x.embedding[i.i]::DOUBLE * y.embedding[i.i]::DOUBLE) AS dp,
-          sum(x.embedding[i.i]::DOUBLE * x.embedding[i.i]::DOUBLE) AS na,
-          sum(y.embedding[i.i]::DOUBLE * y.embedding[i.i]::DOUBLE) AS nb
-         FROM cand c JOIN embeddings x ON x.vec_id = c.id_a
-                     JOIN embeddings y ON y.vec_id = c.id_b
-         CROSS JOIN range(1, 65) i(i) GROUP BY 1, 2),
-pairs AS (SELECT id_a, id_b FROM comp
-          WHERE ROUND(dp / (sqrt(na) * sqrt(nb)), 5) >= 0.3),
-edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-          UNION SELECT id_b, id_a FROM pairs),
-reach(id, lbl) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT e.a, r.lbl FROM edges e JOIN reach r ON e.b = r.id
-)
-SELECT id AS vec_id, MIN(lbl) AS group_id FROM reach GROUP BY id
-"""
-
-
-def q_lsh_ann_buckets(spark, sf_dir):
-    return V.lsh_bucket_ann(_t(spark, sf_dir, "embeddings"), n_planes=8, dim=64)
-
-
-SQL_LSH_ANN = """
-WITH p AS (
-  SELECT i.i AS pi, j.j AS pj,
-         (CAST('0x' || substr(md5('pl' || CAST(i.i AS VARCHAR) || ':' || CAST(j.j AS VARCHAR)), 1, 15) AS BIGINT)
-          % 2001 - 1000) / 1000.0 AS w
-  FROM range(0, 8) i(i) CROSS JOIN range(0, 64) j(j)),
-d AS (SELECT e.vec_id, p.pi, sum(e.embedding[p.pj + 1]::DOUBLE * p.w) AS dp
-      FROM embeddings e CROSS JOIN p GROUP BY e.vec_id, p.pi)
-SELECT vec_id,
-       CAST(sum(CASE WHEN dp > 0 THEN (1::BIGINT << pi) ELSE 0 END) AS BIGINT) AS bucket
-FROM d GROUP BY vec_id
-"""
-
-
 def q_mask_pii(spark, sf_dir):
     """PII scrubbing (functions/text.py mask_pii): emails / dotted-quad
     IPs / long digit runs -> typed sentinels + per-class hit counts, a
@@ -1667,11 +1495,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": q_pack_sequences,
         "stratified_sample": q_stratified_sample,
         "token_budget_sample": q_token_budget_sample,
-        "cosine_topk": q_cosine_topk,
-        "neardup_cosine": q_neardup_cosine,
-        "embedding_dedup_groups": q_embedding_dedup_groups,
-        "embedding_dedup_groups_lsh": q_embedding_dedup_groups_lsh,
-        "lsh_ann_buckets": q_lsh_ann_buckets,
         "point_lookup": q_point_lookup,
         "count_probe": q_count_probe,
         "range_scan": q_range_scan,
@@ -1729,11 +1552,6 @@ def oracle_sql() -> dict[str, str]:
         "pack_sequences": SQL_PACK_SEQUENCES,
         "stratified_sample": SQL_STRATIFIED,
         "token_budget_sample": SQL_TOKEN_BUDGET,
-        "cosine_topk": SQL_COSINE_TOPK,
-        "neardup_cosine": SQL_NEARDUP,
-        "embedding_dedup_groups": SQL_EMB_DEDUP_GROUPS,
-        "embedding_dedup_groups_lsh": SQL_EMB_DEDUP_GROUPS_LSH,
-        "lsh_ann_buckets": SQL_LSH_ANN,
         "mask_pii": SQL_MASK_PII,
         "unigram_logprob": SQL_UNIGRAM,
         # round 2: the full engine path is oracle-checked too — final MOR

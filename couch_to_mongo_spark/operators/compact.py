@@ -16,10 +16,37 @@ delete-file retention rules.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from couch_to_mongo_spark.operators.merge import DELETED_COL, KEY_COLS, fold_stored_rows
 from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
+
+
+def rewrite_key_sorted(
+    table: LakeTable,
+    folded: DataFrame,
+    n_buckets: int,
+    n_partitions: int,
+    snapshot_hint: str,
+) -> tuple[dict[int, list[str]], int, dict[str, list]]:
+    """Write LWW-folded rows as one key-sorted file per bucket of an
+    ``n_buckets`` layout, uncommitted. Returns (new_files, rows,
+    per_file_stats) for the caller's commit. The one rewrite behind
+    compaction and rescale."""
+    df = folded.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets))
+    df = df.repartition(n_partitions, F.col(BUCKET_COL))
+    # narrow (per-partition) sort. BUCKET_COL leads the sort key: the
+    # dynamic-partition writer REQUIRES ordering on the partition column,
+    # and if our outputOrdering doesn't provide it Spark adds its own
+    # SortExec on _bucket — which is NOT stable under spill, so a big
+    # rewrite would silently lose the key order. Leading with _bucket
+    # satisfies the writer's required ordering structurally (no extra
+    # sort inserted).
+    df = df.sortWithinPartitions(BUCKET_COL, *KEY_COLS)
+    new_files = table.write_bucketed(df, snapshot_hint=snapshot_hint)
+    rows, per_file = table.file_stats(new_files)
+    return new_files, rows, per_file
 
 
 def compact(
@@ -50,22 +77,12 @@ def compact(
     df = fold_stored_rows(table.read_buckets(buckets))
     if purge_tombstones:
         df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-    df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], snap.n_buckets))
-    df = df.repartition(len(buckets), F.col(BUCKET_COL))
-    # narrow (per-partition) sort. BUCKET_COL leads the sort key: the
-    # dynamic-partition writer REQUIRES ordering on the partition column,
-    # and if our outputOrdering doesn't provide it Spark adds its own
-    # SortExec on _bucket — which is NOT stable under spill, so a big
-    # compaction would silently lose the key order. Leading with _bucket
-    # satisfies the writer's required ordering structurally (no extra
-    # sort inserted).
-    df = df.sortWithinPartitions(BUCKET_COL, *KEY_COLS)
-
-    new_files = table.write_bucketed(df, snapshot_hint=f"c{snap.version + 1:08d}")
+    new_files, _, per_file = rewrite_key_sorted(
+        table, df, snap.n_buckets, len(buckets), f"c{snap.version + 1:08d}"
+    )
     # rewrite-files commit: replace exactly the files we folded; delta files
     # appended by a concurrent merge since `snap` survive the rewrite (the
     # commit rebases on CommitConflict) — Iceberg's RewriteFiles semantics.
-    _, per_file = table.file_stats(new_files)
     replaced = {f for b in buckets for f in snap.files.get(str(b), [])}
     table.commit(
         new_files,

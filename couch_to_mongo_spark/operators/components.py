@@ -1,6 +1,6 @@
 """Connected components over a pair graph — the dedup-group endgame.
 
-Near-dup detection (MinHash/LSH, n-gram Jaccard, embedding cosine) emits
+Near-dup detection (MinHash/LSH, n-gram Jaccard, SimHash) emits
 *pairs*; a training-data pipeline needs *groups* with one canonical keeper
 per group (component min). At 100 TB the pair graph itself is large and its
 components can chain (A~B~C without A~C), so the grouping step must be a

@@ -31,10 +31,9 @@ migration; rescale is part of the lakehouse operational surface above it.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from couch_to_mongo_spark.operators.merge import KEY_COLS, fold_stored_rows
-from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
+from couch_to_mongo_spark.operators.compact import rewrite_key_sorted
+from couch_to_mongo_spark.operators.merge import fold_stored_rows
+from couch_to_mongo_spark.tableformat import LakeTable
 
 __all__ = ["rescale_buckets"]
 
@@ -49,16 +48,13 @@ def rescale_buckets(
     anything commits concurrently."""
     snap = table.snapshot()
     old_n = snap.n_buckets
-    df = fold_stored_rows(table.read(version=snap.version))
-    df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], new_n_buckets))
-    df = df.repartition(new_n_buckets, F.col(BUCKET_COL))
-    # _bucket leads: satisfies the partitioned writer's required ordering
-    # so no (spill-unstable) extra SortExec is inserted — see
-    # operators/compact.py
-    df = df.sortWithinPartitions(BUCKET_COL, *KEY_COLS)
-
-    new_files = table.write_bucketed(df, snapshot_hint=f"r{snap.version + 1:08d}")
-    rows, per_file = table.file_stats(new_files)
+    new_files, rows, per_file = rewrite_key_sorted(
+        table,
+        fold_stored_rows(table.read(version=snap.version)),
+        new_n_buckets,
+        new_n_buckets,
+        f"r{snap.version + 1:08d}",
+    )
     lineage = {
         "op": "rescale",
         "old_n_buckets": old_n,

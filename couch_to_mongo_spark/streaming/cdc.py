@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,6 +80,13 @@ def _pin_run_id(checkpoint_dir: str) -> str:
     except FileExistsError:
         with open(p) as fh:
             return fh.read().strip()
+
+
+def _local_path(uri: str) -> str:
+    """Local filesystem path of a file URI as Spark writes it: the source
+    log and ``inputFiles()`` percent-encode the path (a space becomes
+    ``%20``), so the scheme is dropped and the path decoded once."""
+    return unquote(urlparse(uri).path)
 
 
 class CdcPipeline:
@@ -316,12 +324,10 @@ class CdcPipeline:
                     if line.startswith("{"):
                         e = _json.loads(line)
                         if e.get("batchId") == batch_id and e.get("path"):
-                            paths.append(
-                                e["path"].removeprefix("file://").removeprefix("file:")
-                            )
+                            paths.append(e["path"])
         if not paths:
-            paths = [f.removeprefix("file:") for f in batch_df.inputFiles()]
-        return paths
+            paths = batch_df.inputFiles()
+        return [_local_path(p) for p in paths]
 
     # ---------------- maintenance ----------------
 

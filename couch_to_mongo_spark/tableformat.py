@@ -473,10 +473,7 @@ class LakeTable:
                 raise ValueError("pass version or as_of, not both")
             version = self.version_as_of(as_of)
         snap = self.snapshot(version)
-        rels = snap.all_files()
-        if min_seq is not None:
-            rels = [f for f in rels if self._seq_max_of(snap, f) is None
-                    or self._seq_max_of(snap, f) >= min_seq]
+        rels = snap.all_files() if min_seq is None else self._files_from_seq(snap, min_seq)
         files = [os.path.join(self.path, f) for f in rels]
         if not files:
             df = self.spark.createDataFrame([], snap.schema)
@@ -490,9 +487,16 @@ class LakeTable:
         return df
 
     @staticmethod
-    def _seq_max_of(snap: Snapshot, relpath: str):
-        st = snap.file_stats.get(relpath)
-        return None if not st else st[2]
+    def _files_from_seq(snap: Snapshot, min_seq: int) -> list[str]:
+        """The live files a ``min_seq`` read scans: those whose ``_seq`` max
+        reaches ``min_seq``, plus every file without seq stats."""
+        kept = []
+        for f in snap.all_files():
+            st = snap.file_stats.get(f)
+            seq_max = st[2] if st else None
+            if seq_max is None or seq_max >= min_seq:
+                kept.append(f)
+        return kept
 
     def seq_high_water(self, version: int | None = None) -> int | None:
         """Max ``_seq`` upper bound across the snapshot's live files —
@@ -511,10 +515,7 @@ class LakeTable:
         """(files_read, files_total) a min_seq read would scan — pruning
         observability for tests and ops."""
         snap = self.snapshot(version)
-        rels = snap.all_files()
-        kept = [f for f in rels if self._seq_max_of(snap, f) is None
-                or self._seq_max_of(snap, f) >= min_seq]
-        return len(kept), len(rels)
+        return len(self._files_from_seq(snap, min_seq)), len(snap.all_files())
 
     def read_appended(
         self, since_version: int, version: int | None = None
@@ -714,12 +715,9 @@ class LakeTable:
         commit may have written its manifests but not yet linked its
         snapshot. Time travel and read_appended stay valid within the
         retained window only."""
-        import time
-
         versions = self._existing_versions()
         if not versions:
-            return {"files_deleted": 0, "snapshots_expired": 0,
-                    "versions_pruned": 0, "manifests_deleted": 0}
+            return {"files_deleted": 0, "snapshots_expired": 0, "manifests_deleted": 0}
         keep_versions = versions[-keep_last:] if keep_last > 0 else []
         expired_versions = [v for v in versions if v not in set(keep_versions)]
         live: set[str] = set()
@@ -755,7 +753,6 @@ class LakeTable:
         return {
             "files_deleted": deleted,
             "snapshots_expired": len(expired_versions),
-            "versions_pruned": len(expired_versions),
             "manifests_deleted": manifests_deleted,
         }
 
@@ -766,7 +763,6 @@ class LakeTable:
         modified within ``grace_seconds`` (an in-flight concurrent write).
         Returns the deleted dir names."""
         import shutil
-        import time
 
         live_dirs: set[str] = set()
         for snap in self.history():

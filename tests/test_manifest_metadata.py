@@ -100,7 +100,7 @@ def test_expire_prunes_versions_and_manifests(table):
     for i in range(20):
         _append_one(table, i)
     stats = table.expire_snapshots(keep_last=2, manifest_grace_seconds=0.0)
-    assert stats["versions_pruned"] == 19  # v0..v18 gone, v19+v20 kept
+    assert stats["snapshots_expired"] == 19  # v0..v18 gone, v19+v20 kept
     assert stats["manifests_deleted"] > 0
     assert table._existing_versions() == [19, 20]
     # retained manifests are exactly what's on disk

@@ -48,7 +48,6 @@ def test_broadcast_join_chosen(spark):
 
 def test_top1_is_take_ordered(spark):
     assert has_top_k(E.q_checkpoint_top1(spark, SF))
-    assert has_top_k(E.q_cosine_topk(spark, SF))
     assert has_top_k(E.q_q3_shipping(spark, SF))
 
 
@@ -180,25 +179,6 @@ def test_read_state_key_filter_reaches_scan(spark, tmp_path):
     got = df.toPandas().sort_values(keys).reset_index(drop=True)
     assert len(want) > 0
     assert got.equals(want)
-
-
-def test_emb_lsh_pairs_no_cartesian_and_local_expansion(spark):
-    """The label-free embedding verify must be bucket-collision bound: no
-    CartesianProduct anywhere, probe expansion local (Generate), and the
-    whole candidates+verify stage costs exactly TWO exchanges — one hash
-    partition on pbucket (shared by the window size-gate and the streaming
-    gram kernel) plus the final cross-probe distinct. A third exchange
-    means the verify re-shuffled candidates (the r4 expression plan paid
-    two vector equi-joins here)."""
-    from couch_to_mongo_spark.functions import vectors as V
-
-    emb = spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
-    df = V.neardup_pairs_lsh(emb, threshold=0.3)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "Generate" in plan  # local probe-mask expansion
-    assert "MapInPandas" in plan, plan  # streaming BLAS gram verify
-    assert count_exchanges(df) == 2, plan
 
 
 def test_curate_corpus_no_cartesian_single_scan_branches(spark):

@@ -35,6 +35,22 @@ def test_stream_replay_parity(spark, tmp_path):
     assert_state_parity(read_state(pipe.table).toPandas(), expected_state(pdf))
 
 
+def test_stream_replay_parity_url_unsafe_dir(spark, tmp_path):
+    """Spark records input files as percent-encoded URIs; the drift check
+    must decode them (once: ``%41`` stays literal) to open the files."""
+    changes = str(tmp_path / "my changes %41")
+    pdf = generate_changes(changes, n_events=2000, n_convs=30, seed=19, n_files=2)
+    pipe = CdcPipeline(
+        spark,
+        table_path=str(tmp_path / "table"),
+        changes_dir=changes,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        n_buckets=8,
+    ).run_available()
+    assert pipe.batches_applied >= 1
+    assert_state_parity(read_state(pipe.table).toPandas(), expected_state(pdf))
+
+
 def test_crash_resume_from_checkpoint(spark, tmp_path):
     """Kill after 2 micro-batches; restart must fence/replay to parity."""
     pdf = generate_changes(
