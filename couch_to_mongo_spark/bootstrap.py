@@ -4,8 +4,8 @@ The reference's bulk phase partitions the sorted _id space into
 couch_batch_size ranges and fans range-scans out to a thread pool, bulk-
 inserting with an exists-in-sink skip (reference: Couch.java:106-189,
 230-318; Mongo.java:189-267). In Spark the whole phase is one declarative
-job — scan → normalize → dedup-by-key → bucketed write → single snapshot
-commit — with partitioning owned by the shuffle on ``bucket(conv_id)``
+job — scan → normalize → stamp → dedup-by-key → bucketed write → single
+snapshot commit — with partitioning owned by the shuffle on ``bucket(conv_id)``
 instead of a hand-built TreeMap of key ranges. Session lifecycle
 ("start"/"end" metadata ops, Mongo.java:311-321) maps to the lineage rows
 plus the atomic snapshot commit itself: a killed bootstrap leaves version 0
@@ -13,8 +13,10 @@ untouched (no partial state), so resume == rerun.
 
 Bootstrap rows are stamped ``_seq = BOOTSTRAP_SEQ`` (-1) and
 ``_rev = '0-bootstrap'`` so every real CDC event (seq >= 0, rev_gen >= 1)
-wins LWW against the bootstrap copy. The copy is written one file per
-bucket, like every other whole-bucket writer.
+wins LWW against the bootstrap copy. The normalized, stamped snapshot then
+goes through the one bucketed write (``merge.write_winners``): bucket
+repartition, window dedup by key, key sort, one file per bucket — the
+layout compaction produces.
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from couch_to_mongo_spark.functions.normalize import normalize_text
-from couch_to_mongo_spark.operators.dedup import lww_dedup
 from couch_to_mongo_spark.operators.merge import (
     DELETED_COL,
     KEY_COLS,
@@ -31,10 +32,11 @@ from couch_to_mongo_spark.operators.merge import (
     SEQ_COL,
     MergeResult,
     with_engine_schema,
+    write_winners,
 )
 from couch_to_mongo_spark.operators.schema_evolution import align_to_schema
 from couch_to_mongo_spark.streaming.lineage import LineageLog
-from couch_to_mongo_spark.tableformat import BUCKET_COL, LakeTable, bucket_expr
+from couch_to_mongo_spark.tableformat import LakeTable
 
 import os
 
@@ -63,21 +65,18 @@ def bulk_bootstrap(
     df = source_df
     if normalize and "text" in df.columns:
         df = df.withColumn("text", normalize_text(F.col("text")))
+    df = align_to_schema(
+        df.withColumn(SEQ_COL, F.lit(BOOTSTRAP_SEQ).cast("long"))
+        .withColumn(REV_COL, F.lit("0-bootstrap"))
+        .withColumn(DELETED_COL, F.lit(False)),
+        table.snapshot().schema,
+    )
     # defensive dedup: source snapshots can overlap at range boundaries
     # (the reference's boundary-overlap dedup, Couch.java:320-341 / P4)
     order_cols = ["ts"] if "ts" in df.columns else [KEY_COLS[0]]
-    df = lww_dedup(df, list(KEY_COLS), order_cols)
-    df = (
-        df.withColumn(SEQ_COL, F.lit(BOOTSTRAP_SEQ).cast("long"))
-        .withColumn(REV_COL, F.lit("0-bootstrap"))
-        .withColumn(DELETED_COL, F.lit(False))
+    new_files, n_rows, per_file = write_winners(
+        table, df, order_cols, n_buckets, snapshot_hint="s00000001"
     )
-    df = align_to_schema(df, table.snapshot().schema)
-    df = df.withColumn(BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets))
-    df = df.repartition(n_buckets, F.col(BUCKET_COL))
-
-    new_files = table.write_bucketed(df, snapshot_hint="s00000001")
-    n_rows, per_file = table.file_stats(new_files)
     result = MergeResult(
         skipped=False,
         n_inserts=n_rows,

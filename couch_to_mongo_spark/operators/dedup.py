@@ -9,19 +9,17 @@ rev hash)`` descending.
 Two implementations, deterministic and equivalent (tested against each
 other in tests/test_units.py):
 
-- :func:`lww_dedup` — ``max_by(struct(payload), struct(order))`` hash
-  aggregation. **The read-side fold** (``merge.fold_stored_rows``:
-  read_state, compaction, rescale, the change-feed pre-state). Spark's
-  hash aggregate does map-side partial aggregation, so a hot conversation
-  (millions of updates to one key) is combined per input partition
-  *before* the shuffle — skew is defused for free, O(distinct keys)
-  shuffle volume.
+- :func:`lww_dedup` — ``max_by(struct(payload), struct(order))`` grouped
+  by key: **the read-side fold only** (``merge.fold_stored_rows``).
+  Planned as a partial and a final ``SortAggregate``, each behind its own
+  Sort (a struct buffer is not hash-aggregate mutable); the partial
+  aggregate still combines a hot key per input partition before the
+  shuffle, and a key filter above the fold reaches the scan.
 - :func:`bucket_partitioned_lww` — bucket repartition, then a window LWW
-  inside those partitions: **the merge's write-side kernel** (one shuffle
-  shared with the bucketed write, one file per touched bucket). A hot
-  conversation's updates all hash to one bucket; the window folds each of
-  its keys to one row before the write, so the batch's write is
-  O(distinct keys), not O(events).
+  inside those partitions: **the write-side kernel** of every writer
+  (``merge.write_winners``), its one shuffle shared with the bucketed
+  write. The window folds a hot conversation's keys to one row each
+  before the write, so the write is O(distinct keys), not O(events).
 """
 
 from __future__ import annotations
@@ -56,7 +54,8 @@ def lww_dedup(
     ``max_by(struct(<all cols>), struct(<order cols>))`` — structs compare
     lexicographically field-by-field, so the ordering is total as long as
     ``order_cols`` ends in a tiebreaker (we use seq, rev_gen, _rev; seq is
-    globally unique so ties cannot occur in practice).
+    globally unique so ties cannot occur in practice). Planned as partial
+    and final ``SortAggregate``; the read-side fold, never a writer's.
 
     Key columns come from the group keys, not from the winner struct (same
     values, same column order): a filter on a key column above the fold
@@ -77,7 +76,7 @@ def bucket_partitioned_lww(
     order_cols: list[str],
     n_buckets: int,
 ) -> DataFrame:
-    """Single-shuffle LWW for the merge: repartition by ``bucket(key_cols[0])``
+    """Single-shuffle LWW for every writer: repartition by ``bucket(key_cols[0])``
     FIRST, then dedup with a window whose partitionBy is a superset of the
     partition key — Catalyst plans the window with NO further exchange
     (Sort + WindowGroupLimit prune losers in place), and a

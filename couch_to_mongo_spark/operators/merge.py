@@ -26,13 +26,15 @@ compaction, operators/compact.py, which also folds the deltas back to one
 key-sorted file per bucket), fixing the reference's delete-resurrection
 gap.
 
-One path, one shuffle (:func:`merge_batch`):
+One path, one shuffle (:func:`merge_batch`), through the one bucketed
+write every writer shares (:func:`write_winners`):
 1. ``bucket_partitioned_lww``: repartition by bucket, then window-LWW the
    batch to one row per key inside those partitions (dedup-before-write
    bounds hot-conversation skew);
-2. post-dedup transform (text normalizer) + poison quarantine;
-3. align to the evolved table schema, ``write_bucketed`` one delta file
-   per touched bucket;
+2. post-dedup transform (text normalizer) + poison quarantine, the
+   ``_deleted`` stamp, alignment to the evolved table schema;
+3. a key sort inside the bucket partitions, ``write_bucketed`` one
+   key-sorted delta file per touched bucket;
 4. lineage from the write itself: the source seq range from an
    ``Observation`` on the raw batch, rows applied from the parquet
    footers — no extra Spark job;
@@ -61,7 +63,7 @@ from couch_to_mongo_spark.operators.dedup import (
 )
 from couch_to_mongo_spark.operators.poison import POISON_COL
 from couch_to_mongo_spark.operators.schema_evolution import align_to_schema, evolve_schema
-from couch_to_mongo_spark.tableformat import BUCKET_COL, SEQ_COL, LakeTable, bucket_expr
+from couch_to_mongo_spark.tableformat import BUCKET_COL, SEQ_COL, LakeTable
 
 # the merge key: every table is keyed and bucketed by it
 KEY_COLS = ("conv_id", "turn_idx")
@@ -71,15 +73,17 @@ DELETED_COL = "_deleted"
 ENGINE_COLS = (SEQ_COL, REV_COL, DELETED_COL)
 # transient columns never persisted
 TRANSIENT_COLS = ("op", "seq", "rev_gen", BUCKET_COL)
+# the LWW order of stored rows (with_rev_gen supplies rev_gen)
+STORED_ORDER = [SEQ_COL, "rev_gen", REV_COL]
 
 
 def fold_stored_rows(df: DataFrame) -> DataFrame:
-    """The stored-row LWW fold: one row per key, the winner by (_seq,
-    rev generation, _rev). Tombstone winners are KEPT — compaction,
-    rescale and the change-feed pre-state need them (an out-of-order
-    replay of an old update must still lose to the tombstone)."""
+    """The read-side stored-row LWW fold: one row per key, the winner by
+    (_seq, rev generation, _rev). Tombstone winners are KEPT — the
+    change-feed pre-state needs them; :func:`resolve_live_state` drops
+    them after the fold."""
     df = with_rev_gen(df, rev_col=REV_COL)
-    return lww_dedup(df, list(KEY_COLS), [SEQ_COL, "rev_gen", REV_COL]).drop("rev_gen")
+    return lww_dedup(df, list(KEY_COLS), STORED_ORDER).drop("rev_gen")
 
 
 def resolve_live_state(df: DataFrame) -> DataFrame:
@@ -91,8 +95,43 @@ def resolve_live_state(df: DataFrame) -> DataFrame:
     if SEQ_COL in df.columns:
         df = fold_stored_rows(df)
     if DELETED_COL in df.columns:
-        df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+        df = drop_tombstones(df)
     return df.drop(*[c for c in ENGINE_COLS if c in df.columns])
+
+
+def drop_tombstones(df: DataFrame) -> DataFrame:
+    return df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+
+
+def write_winners(
+    table: LakeTable,
+    rows: DataFrame,
+    order_cols: list[str],
+    n_buckets: int,
+    snapshot_hint: str,
+    after_dedup=None,
+) -> tuple[dict[int, list[str]], int, dict[str, list]]:
+    """The one bucketed write behind merge, bootstrap, compaction and
+    rescale: the LWW winners of ``rows`` (by ``order_cols``) as one
+    key-sorted file per bucket of an ``n_buckets`` layout, uncommitted.
+    ``order_cols`` may name ``rev_gen``, derived here from ``_rev``.
+    Returns (new_files, rows, per_file_stats) for the caller's commit.
+
+    ``bucket_partitioned_lww`` is the one shuffle; ``after_dedup`` runs on
+    the winners and keeps ``_bucket``. ``_bucket`` leads the key sort: the
+    partitioned writer requires that ordering and would otherwise add its
+    own sort on ``_bucket`` alone. Spark drops the key sort after the
+    window; after a Python transform it replaces the writer's sort."""
+    rows = with_rev_gen(rows, rev_col=REV_COL)
+    out = bucket_partitioned_lww(rows, list(KEY_COLS), order_cols, n_buckets)
+    if after_dedup is not None:
+        out = after_dedup(out)
+    out = out.select(*[c for c in out.columns if c not in TRANSIENT_COLS], BUCKET_COL)
+    new_files = table.write_bucketed(
+        out.sortWithinPartitions(BUCKET_COL, *KEY_COLS), snapshot_hint=snapshot_hint
+    )
+    n_rows, per_file = table.file_stats(new_files)
+    return new_files, n_rows, per_file
 
 
 def engine_fields() -> list[T.StructField]:
@@ -168,7 +207,6 @@ def merge_batch(
 
     # metadata-only load: merge needs version/schema/n_buckets here
     snap = table.snapshot(materialize=False)
-    n_buckets = snap.n_buckets
 
     # the source seq range rides along the write as observed metrics
     src_range = Observation()
@@ -177,43 +215,41 @@ def merge_batch(
     )
     if REV_COL not in b.columns:
         b = b.withColumn(REV_COL, F.lit(None).cast("string"))
-    b = with_rev_gen(b, rev_col=REV_COL)
-    # Single-shuffle apply. The ONE exchange is the bucket repartition, done
-    # FIRST; everything downstream reuses it: the partition keys are a
-    # subset of the dedup window's partitionBy, so Catalyst plans the LWW
-    # as Sort+WindowGroupLimit+Window with NO further exchange, and the
-    # bucket-partitioned write streams straight out of the same partitions
-    # (one file per touched bucket). The payload crosses the wire once.
-    b = bucket_partitioned_lww(
-        b, list(KEY_COLS), ["seq", "rev_gen", REV_COL], n_buckets
-    )
-    b, n_poison, poison_cache = _transform_and_quarantine(
-        b, transform_after_dedup, dead_letter, run_id, batch_id
-    )
-    try:
-        b = b.withColumn(DELETED_COL, F.col("op") == F.lit("d")).withColumnRenamed(
+    evolved, n_poison, poison_cache = snap.schema, 0, None
+
+    def finish(w: DataFrame) -> DataFrame:
+        nonlocal evolved, n_poison, poison_cache
+        if transform_after_dedup is not None:
+            # on winners only: a Python kernel runs on n_keys rows, not n_events
+            w = transform_after_dedup(w)
+        if POISON_COL in w.columns:
+            # a poison-isolating transform (operators/poison.py): quarantine
+            # the rows it could not process, keep the healthy remainder — the
+            # reference's insertMany bisection (Mongo.java:250-261)
+            if dead_letter is None:
+                raise ValueError(f"transform produced {POISON_COL} but no dead_letter log given")
+            poison_cache = w.persist()
+            n_poison = dead_letter.append(
+                poison_cache.where(F.col(POISON_COL).isNotNull()), run_id, batch_id
+            )
+            w = poison_cache.where(F.col(POISON_COL).isNull()).drop(POISON_COL)
+        w = w.withColumn(DELETED_COL, F.col("op") == F.lit("d")).withColumnRenamed(
             "seq", SEQ_COL
         )
-        payload_fields = [
-            f
-            for f in b.schema.fields
-            if f.name not in TRANSIENT_COLS and f.name not in ENGINE_COLS
-        ]
-        evolved = evolve_schema(
-            snap.schema, with_engine_schema(T.StructType(payload_fields))
+        payload = [f for f in w.schema.fields if f.name not in TRANSIENT_COLS + ENGINE_COLS]
+        evolved = evolve_schema(snap.schema, with_engine_schema(T.StructType(payload)))
+        # rows keep their bucket partition and their _bucket value
+        return align_to_schema(w, T.StructType([*evolved.fields, w.schema[BUCKET_COL]]))
+
+    try:
+        delta, rows, per_file = write_winners(
+            table, b, ["seq", "rev_gen", REV_COL], snap.n_buckets,
+            f"s{snap.version + 1:08d}", after_dedup=finish,
         )
-        # align drops the physical bucket column; the ROWS stay in their
-        # bucket partitions (projections preserve partitioning), so the
-        # partitionBy write still emits one file per bucket
-        new_rows = align_to_schema(b, evolved).withColumn(
-            BUCKET_COL, bucket_expr(KEY_COLS[0], n_buckets)
-        )
-        delta = table.write_bucketed(new_rows, snapshot_hint=f"s{snap.version + 1:08d}")
     finally:
         if poison_cache is not None:
             poison_cache.unpersist()
     touched = sorted(delta.keys())
-    rows, per_file = table.file_stats(delta)
     result = MergeResult(
         skipped=False, rows_applied=rows, touched_buckets=len(touched), n_poison=n_poison
     )
@@ -312,27 +348,3 @@ def read_state(table: LakeTable, version: int | None = None) -> DataFrame:
     Catalyst pushes the predicate below the aggregate."""
     return resolve_live_state(table.read(version))
 
-
-def _transform_and_quarantine(b, transform_after_dedup, dead_letter, run_id, batch_id):
-    """Apply the post-dedup transform (e.g. the Arrow text normalizer) and,
-    if it is poison-isolating (operators/poison.py), quarantine the rows it
-    could not process and keep the healthy remainder — the Spark rendering
-    of the reference's insertMany bisection (Mongo.java:250-261). Returns
-    (df, n_poison, poison_cache); the caller unpersists the cache after the
-    write materializes."""
-    n_poison = 0
-    poison_cache = None
-    if transform_after_dedup is not None:
-        # applied to winners only, downstream of the dedup, so a Python
-        # kernel runs on n_keys rows across all cores rather than n_events
-        b = transform_after_dedup(b)
-    if POISON_COL in b.columns:
-        if dead_letter is None:
-            raise ValueError(
-                f"transform produced {POISON_COL} but no dead_letter log given"
-            )
-        poison_cache = b.persist()
-        poison = poison_cache.where(F.col(POISON_COL).isNotNull())
-        n_poison = dead_letter.append(poison, run_id, batch_id)
-        b = poison_cache.where(F.col(POISON_COL).isNull()).drop(POISON_COL)
-    return b, n_poison, poison_cache

@@ -17,10 +17,11 @@ atomic strict-replace commit:
   raises CommitConflict (its rows would otherwise be lost in the re-key),
   and the caller re-runs — the strict-replace commit's safety rule.
 
-The rewrite itself folds multi-version MOR deltas with the same LWW kernel
-compaction uses (tombstones kept — out-of-order replays must still lose to
-them), so the rescaled table starts compact: one key-sorted file per
-bucket, the layout compaction produces. Cost is one table-sized
+The rewrite itself folds multi-version MOR deltas through the one bucketed
+write compaction uses (``merge.write_winners``; tombstones kept —
+out-of-order replays must still lose to them), so the rescaled table
+starts compact: one key-sorted file per bucket, the layout compaction
+produces. Cost is one table-sized
 shuffle — O(data), amortized over the months the new layout serves; at
 100 TB you run it as a dedicated job, not inside the ingest loop.
 
@@ -31,8 +32,7 @@ migration; rescale is part of the lakehouse operational surface above it.
 
 from __future__ import annotations
 
-from couch_to_mongo_spark.operators.compact import rewrite_key_sorted
-from couch_to_mongo_spark.operators.merge import fold_stored_rows
+from couch_to_mongo_spark.operators.merge import STORED_ORDER, write_winners
 from couch_to_mongo_spark.tableformat import LakeTable
 
 __all__ = ["rescale_buckets"]
@@ -48,11 +48,8 @@ def rescale_buckets(
     anything commits concurrently."""
     snap = table.snapshot()
     old_n = snap.n_buckets
-    new_files, rows, per_file = rewrite_key_sorted(
-        table,
-        fold_stored_rows(table.read(version=snap.version)),
-        new_n_buckets,
-        new_n_buckets,
+    new_files, rows, per_file = write_winners(
+        table, table.read(version=snap.version), STORED_ORDER, new_n_buckets,
         f"r{snap.version + 1:08d}",
     )
     lineage = {

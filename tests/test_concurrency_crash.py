@@ -6,7 +6,7 @@ Covers round-2 hardening:
   forever; now staging dirs are uuid-suffixed and GC'd);
 - MOR append commits rebase automatically under concurrent writers;
 - compaction uses rewrite-files semantics: a delta appended by a racing
-  merge survives the rewrite;
+  merge survives the rewrite, and is not folded into it as well;
 - strict-replace (COW) commits refuse to rebase over a concurrent change
   to a touched bucket (data-loss guard).
 """
@@ -20,7 +20,12 @@ from pyspark.sql import functions as F
 
 from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.operators.compact import compact
-from couch_to_mongo_spark.operators.merge import merge_batch, read_state, with_engine_schema
+from couch_to_mongo_spark.operators.merge import (
+    fold_stored_rows,
+    merge_batch,
+    read_state,
+    with_engine_schema,
+)
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
 from couch_to_mongo_spark.tableformat import CommitConflict, LakeTable
@@ -118,6 +123,49 @@ def test_compaction_survives_racing_merge(spark, tmp_table_path):
     table._write_snapshot = racing
     folded = compact(table, max_files_per_bucket=1)
     assert folded and raced["done"]
+
+    import pandas as pd
+
+    combined = expected_state(pd.concat([base, late], ignore_index=True), normalize=False)
+    assert_state_parity(read_state(table).toPandas(), combined)
+
+
+def test_compaction_folds_exactly_the_files_it_replaces(spark, tmp_table_path, monkeypatch):
+    """Compaction reads the buckets at the snapshot whose files its commit
+    replaces. A merge committed between that snapshot and the read stays a
+    delta of its own; folding it into the compacted file too would store
+    its rows twice."""
+    table = _mk_table(spark, tmp_table_path, n_buckets=2)
+    base = make_changes_df(n_events=600, n_convs=8, seed=43, delete_frac=0.1)
+    for i, lo in enumerate(range(0, 600, 200)):
+        part = base[(base.seq >= lo) & (base.seq < lo + 200)]
+        merge_batch(table, _batch(spark, part), run_id="r", batch_id=i)
+    snap = table.snapshot()
+    want = fold_stored_rows(table.read(version=snap.version)).count()
+
+    # more conversations than the base: the racing delta adds new keys
+    late = make_changes_df(n_events=100, n_convs=40, seed=44, delete_frac=0.0,
+                           seq_start=10_000)
+    original = LakeTable.read_buckets
+    raced = []
+
+    def racing(self, buckets, version=None):
+        if not raced:
+            raced.append(True)
+            other = LakeTable(spark, table.path)
+            merge_batch(other, _batch(spark, late), run_id="r", batch_id=3)
+        return original(self, buckets, version=version)
+
+    monkeypatch.setattr(LakeTable, "read_buckets", racing)
+    folded = compact(table, max_files_per_bucket=1)
+    monkeypatch.undo()
+    assert set(folded) == {0, 1} and raced
+
+    after = table.snapshot()
+    raced_files = set(table.snapshot(snap.version + 1).all_files())
+    compacted = set(after.all_files()) - raced_files
+    assert compacted and raced_files - set(snap.all_files()) <= set(after.all_files())
+    assert sum(after.file_stats[f][0] for f in compacted) == want
 
     import pandas as pd
 

@@ -5,6 +5,7 @@ these tests fail it at CI time."""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 import pytest
@@ -52,8 +53,9 @@ def test_top1_is_take_ordered(spark):
 
 
 def test_lww_is_partial_aggregation_single_shuffle(spark):
-    """The correctness kernel must be a two-phase hash agg (map-side combine
-    = the built-in skew defense) with exactly one shuffle."""
+    """The read-side LWW fold must be a two-phase aggregate (max_by over a
+    struct plans as a partial and a final SortAggregate; the map-side
+    combine is the built-in skew defense) with exactly one shuffle."""
     df = E.q_lww_latest_state(spark, SF)
     assert count_exchanges(df) == 1, formatted_plan(df)
     assert count_partial_final_aggs(df) >= 2  # partial + final
@@ -280,3 +282,72 @@ def test_corpus_view_refresh_plan_shape(spark, tmp_path):
     counts = [int(m) for m in _re.findall(r"number of files: (\d+)", plan)]
     if counts:  # formatted plans include per-scan file counts
         assert max(counts) < total_files, (counts, total_files, plan)
+
+
+def _write_plans(spark, run) -> list[str]:
+    """The final executed-plan trees of the file writes ``run()`` starts,
+    read from the SQL status store (kept with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return {seq.apply(i).executionId(): seq.apply(i) for i in range(seq.size())}
+
+    seen = set(executions())
+    run()
+    trees = []
+    for eid, ex in sorted(executions().items()):
+        desc = ex.physicalPlanDescription()
+        if eid in seen or "InsertIntoHadoopFsRelationCommand" not in desc:
+            continue
+        tree = desc.split("\n\n")[0]
+        # AQE prints the final plan and then the initial one
+        trees.append(tree.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0])
+    return trees
+
+
+def test_every_bucketed_writer_plans_one_exchange(spark, tmp_path):
+    """Bootstrap, merge (with the text normalizer), compaction and rescale
+    write through one kernel: one Exchange (the bucket repartition, shared
+    by the window LWW and the partitioned write) and no aggregate. Merge's
+    write keeps its two Sorts: the window's, and the key sort after the
+    Python normalizer, which stands in for the writer's own sort."""
+    from couch_to_mongo_spark.bootstrap import bulk_bootstrap
+    from couch_to_mongo_spark.functions.normalize import normalize_text
+    from couch_to_mongo_spark.gen import make_changes_df
+    from couch_to_mongo_spark.operators.compact import compact
+    from couch_to_mongo_spark.operators.merge import merge_batch, with_engine_schema
+    from couch_to_mongo_spark.operators.rescale import rescale_buckets
+    from couch_to_mongo_spark.oracle import expected_state
+    from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
+    from couch_to_mongo_spark.tableformat import LakeTable
+    from pyspark.sql import functions as F
+
+    pdf = make_changes_df(n_events=600, n_convs=10, seed=7, delete_frac=0.1)
+    src = spark.createDataFrame(expected_state(pdf, normalize=False))
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=4
+    )
+
+    def norm(df):
+        return df.withColumn("text", normalize_text(F.col("text")))
+
+    def merges():
+        for i in range(2):
+            batch = spark.createDataFrame(pdf[pdf.seq % 2 == i])
+            merge_batch(table, batch, "r", i, transform_after_dedup=norm)
+
+    writers = {
+        "bootstrap": lambda: bulk_bootstrap(spark, str(tmp_path / "b"), src, n_buckets=4),
+        "merge": merges,
+        "compact": lambda: compact(table, max_files_per_bucket=1),
+        "rescale": lambda: rescale_buckets(table, 8),
+    }
+    for name, run in writers.items():
+        trees = _write_plans(spark, run)
+        assert trees, name
+        for tree in trees:
+            assert len(re.findall(r"\bExchange \(\d+\)", tree)) == 1, (name, tree)
+            assert "Aggregate" not in tree, (name, tree)
+            if name == "merge":
+                assert len(re.findall(r"\bSort \(\d+\)", tree)) <= 2, tree

@@ -155,6 +155,19 @@ def test_compaction_folds_files_and_preserves_state(spark, tmp_path):
     from couch_to_mongo_spark.tableformat import LakeTable
     from couch_to_mongo_spark.functions.normalize import normalize_text
 
+    import os as _os
+
+    import pandas as _pd
+
+    def assert_key_sorted(t, what):
+        # every written file is key-ordered, so parquet row-group min/max
+        # on the key stays tight for scan-time skipping
+        for fl in t.snapshot().files.values():
+            for rel in fl:
+                f = _pd.read_parquet(_os.path.join(t.path, rel))
+                keys = list(zip(f["conv_id"], f["turn_idx"]))
+                assert keys == sorted(keys), f"{what} file {rel} not key-sorted"
+
     pdf = make_changes_df(n_events=3000, n_convs=20, seed=47, delete_frac=0.1)
     table = LakeTable.create(
         spark, str(tmp_path / "t"), with_engine_schema(TRANSCRIPT_SCHEMA), n_buckets=4
@@ -166,6 +179,7 @@ def test_compaction_folds_files_and_preserves_state(spark, tmp_path):
         merge_batch(table, b, run_id="r", batch_id=i)
     before = max(len(fl) for fl in table.snapshot().files.values())
     assert before >= 5
+    assert_key_sorted(table, "merge delta")
 
     state_before = read_state(table).toPandas()
     folded = compact(table, max_files_per_bucket=2)
@@ -177,17 +191,7 @@ def test_compaction_folds_files_and_preserves_state(spark, tmp_path):
         expected_state(pdf),
     )
 
-    # every compacted file is key-ordered, so parquet row-group min/max on
-    # the key stays tight for scan-time skipping
-    import os as _os
-
-    import pandas as _pd
-
-    for fl in table.snapshot().files.values():
-        for rel in fl:
-            f = _pd.read_parquet(_os.path.join(table.path, rel))
-            keys = list(zip(f["conv_id"], f["turn_idx"]))
-            assert keys == sorted(keys), f"compacted file {rel} not key-sorted"
+    assert_key_sorted(table, "compacted")
 
     # tombstone purge drops deleted rows physically
     compact(table, max_files_per_bucket=0, purge_tombstones=True)
@@ -197,6 +201,14 @@ def test_compaction_folds_files_and_preserves_state(spark, tmp_path):
         read_state(table).toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True),
         expected_state(pdf),
     )
+
+    # a bootstrap writes its copy through the same kernel
+    from couch_to_mongo_spark.bootstrap import bulk_bootstrap
+
+    boot, _ = bulk_bootstrap(
+        spark, str(tmp_path / "boot"), spark.createDataFrame(expected_state(pdf)), n_buckets=4
+    )
+    assert_key_sorted(boot, "bootstrap")
 
 
 def test_merge_stats_classify_delete_reinsert(spark, tmp_path):
