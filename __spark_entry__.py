@@ -1352,12 +1352,12 @@ GROUP BY k.doc_id
 
 def q_engine_replay(spark, sf_dir):
     """Full engine path, oracle-checked: derived change feed → two bucketed
-    MOR MERGE batches with the Arrow-pandas_udf text normalizer → a
-    compaction between them (rewrite-files) → LWW read with tombstone
-    elimination. The DuckDB oracle (SQL_ENGINE_REPLAY) folds the same feed
-    and applies a SQL twin of the normalizer — hash-level equality proves
-    the *engine* (table format + MOR + compaction + normalize), not just
-    the dedup kernel."""
+    MOR MERGE batches with the JVM text normalizer → a compaction
+    between them (rewrite-files) → LWW read with tombstone elimination.
+    The DuckDB oracle (SQL_ENGINE_REPLAY) folds the same feed and applies
+    a SQL twin of the normalizer — hash-level equality proves the *engine*
+    (table format + MOR + compaction + normalize), not just the dedup
+    kernel."""
     from couch_to_mongo_spark.functions.normalize import normalize_text
     from couch_to_mongo_spark.operators.compact import compact
     from couch_to_mongo_spark.operators.merge import merge_batch, read_state, with_engine_schema

@@ -31,6 +31,7 @@ from couch_to_mongo_spark.operators.merge import (
     REV_COL,
     SEQ_COL,
     MergeResult,
+    _fenced_result,
     with_engine_schema,
     write_winners,
 )
@@ -59,8 +60,11 @@ def bulk_bootstrap(
     table = LakeTable.create(
         spark, table_path, with_engine_schema(payload_schema), n_buckets=n_buckets
     )
+    lineage = LineageLog(os.path.join(table_path, "_lineage"))
     if table.is_batch_committed(run_id, 0):
-        return table, MergeResult(skipped=True)
+        result = _fenced_result(table, run_id, 0)
+        lineage.backfill(run_id, 0, result)
+        return table, result
 
     df = source_df
     if normalize and "text" in df.columns:
@@ -94,15 +98,5 @@ def bulk_bootstrap(
         new_file_stats=per_file,
     )
     result.snapshot_id = snap.snapshot_id
-    LineageLog(os.path.join(table_path, "_lineage")).append(
-        run_id,
-        0,
-        seq_min=BOOTSTRAP_SEQ,
-        seq_max=BOOTSTRAP_SEQ,
-        rows_applied=n_rows,
-        n_inserts=n_rows,
-        snapshot_id=snap.snapshot_id,
-        partition_stats={"touched_buckets": len(new_files)},
-    )
+    lineage.append_result(run_id, 0, result)
     return table, result
-

@@ -1,13 +1,15 @@
-"""Transcript text normalization — the engine's single Python kernel.
+"""Transcript text normalization.
 
 The reference passes documents through byte-for-byte (reference:
 Couch.java:295 ``Document.parse(row.getDoc())``); our input_hint instead
 requires per-turn text equality under stable turn ordering, so the engine
 normalizes text once at ingest: Unicode NFC + collapse runs of whitespace
-to single spaces + strip. Implemented as an Arrow-vectorized
-``pandas_udf`` (Series -> Series) — no per-row Python anywhere
-(SURVEY.md §2.12). ``normalize_text_py`` is the plain-Python oracle twin
-used by parity tests and oracle.py.
+to single spaces + strip. ``normalize_text`` does it as a JVM Column
+expression, so the ingest path runs no Python worker.
+``normalize_text_py`` is the plain-Python definition it follows: oracle.py
+and the parity tests use it, and it shares no code with the engine.
+``normalize_kernel`` is the pandas form the opt-in poison guard
+(operators/poison.py) wraps.
 """
 
 from __future__ import annotations
@@ -16,38 +18,43 @@ import re
 import unicodedata
 
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _WS = re.compile(r"\s+")
 
+# every code point Python's \s matches in a str, as one Java regex class
+# (Java's \s is a different set, even under (?U): it lacks \x1C-\x1F)
+_JVM_WS = (
+    r"[\t\n\x0B\f\r\x1C-\x1F \x85\xA0\u1680\u2000-\u200A\u2028\u2029\u202F\u205F\u3000]+"
+)
+
 
 def normalize_text_py(s: str | None) -> str | None:
-    """Single-value oracle implementation (must match the UDF bit-for-bit)."""
+    """Single-value oracle implementation (``normalize_text`` must match
+    it bit-for-bit)."""
     if s is None:
         return None
     return _WS.sub(" ", unicodedata.normalize("NFC", s)).strip()
 
 
-def normalize_series(s: pd.Series) -> pd.Series:
-    """Vectorized normalizer over a pandas Series: NFC, whitespace
-    collapse, strip. Shared by the pandas_udf and the poison-isolating
-    mapInPandas kernel."""
-    # str accessor ops are C-implemented in pandas; NFC needs a map but
-    # stays inside one Arrow batch (no per-row Python UDF round trips).
-    out = s.map(lambda v: unicodedata.normalize("NFC", v) if v is not None else None)
-    return out.str.replace(_WS, " ", regex=True).str.strip()
-
-
-@F.pandas_udf(T.StringType())
-def normalize_text(s: pd.Series) -> pd.Series:
-    """Vectorized normalizer: NFC, whitespace collapse, strip."""
-    return normalize_series(s)
+def normalize_text(text: Column) -> Column:
+    """NFC, whitespace collapse, strip — as a JVM expression over ``text``.
+    NFC is ICU4J's, which ships in Spark's ``jars/``; the call throws on
+    null, hence the guard. After the collapse only single U+0020 spaces can
+    remain at the ends, which is all ``trim`` strips."""
+    nfc = F.java_method(
+        F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"), text, F.lit(False)
+    )
+    return F.when(text.isNotNull(), F.trim(F.regexp_replace(nfc, _JVM_WS, " ")))
 
 
 def normalize_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     """Schema-preserving pandas kernel form (for
     :func:`couch_to_mongo_spark.operators.poison.isolate_poison`)."""
     if "text" in pdf.columns:
-        pdf = pdf.assign(text=normalize_series(pdf["text"]))
+        nfc = pdf["text"].map(
+            lambda v: unicodedata.normalize("NFC", v) if v is not None else None
+        )
+        pdf = pdf.assign(text=nfc.str.replace(r"\s+", " ", regex=True).str.strip())
     return pdf

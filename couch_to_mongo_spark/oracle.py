@@ -4,7 +4,8 @@ Replaces the reference's count-only validation (reference: README.md:41-47,
 ``db.sample_docs.count()``) with full-state equality: DuckDB folds the same
 change files — sort by (seq, rev generation, rev hash), keep last per
 (conv_id, turn_idx), drop keys whose winner is a delete, normalize text
-with the same Python function the engine's pandas_udf uses.
+with ``normalize_text_py``, the plain-Python definition the engine's JVM
+normalizer follows (no code shared with the engine).
 """
 
 from __future__ import annotations

@@ -30,11 +30,12 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     # make the package importable on python workers regardless of the
-    # consumer's cwd: cloudpickle serializes module-level functions (the
-    # pandas_udf normalizer, poison kernels) BY REFERENCE, so executors
-    # must be able to `import couch_to_mongo_spark`. Locally the worker
-    # daemon inherits PYTHONPATH from this process; on a cluster the
-    # north_rule path is spark-submit --py-files dist/*.zip instead.
+    # consumer's cwd: cloudpickle serializes module-level functions BY
+    # REFERENCE, so executors running the opt-in poison kernels must be
+    # able to `import couch_to_mongo_spark` (the default ingest path runs
+    # no Python worker). Locally the worker daemon inherits PYTHONPATH
+    # from this process; on a cluster the north_rule path is spark-submit
+    # --py-files dist/*.zip instead.
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if pkg_root not in pp.split(os.pathsep):

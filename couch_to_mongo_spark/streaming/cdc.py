@@ -9,7 +9,7 @@ rendering:
       -> foreachBatch(batch_id, df):
            fence(run_id, batch_id)                # exactly-once replay guard
            drift-check(df.inputFiles())           # schema evolution
-           normalize text (Arrow pandas_udf)      # C7
+           normalize text (JVM expression)        # C7
            LWW dedup + MERGE INTO table           # A4 + S6 (merge_batch)
            lineage.append(...)                    # S7
 
@@ -243,32 +243,13 @@ class CdcPipeline:
         )
         if res.skipped:
             self.batches_fenced += 1
-            # a crash between snapshot commit and lineage append loses the
-            # batch's lineage row; the fenced replay backfills it from the
-            # committed snapshot's lineage the skip result carries
-            self._backfill_lineage(batch_id, res)
+            self.lineage.backfill(self.run_id, batch_id, res)
             self._refresh_view(batch_df, batch_id, res)
             return
         self.batches_applied += 1
         self._refresh_view(batch_df, batch_id, res)
         self._maybe_compact()
-        self._append_lineage(batch_id, res, n_poison=res.n_poison)
-
-    def _append_lineage(self, batch_id: int, res, **partition_stats) -> None:
-        """The batch's lineage row from its merge result; ``partition_stats``
-        join the result's touched-bucket count."""
-        self.lineage.append(
-            self.run_id,
-            batch_id,
-            seq_min=res.seq_min,
-            seq_max=res.seq_max,
-            rows_applied=res.rows_applied,
-            n_inserts=res.n_inserts,
-            n_updates=res.n_updates,
-            n_deletes=res.n_deletes,
-            snapshot_id=res.snapshot_id,
-            partition_stats={"touched_buckets": res.touched_buckets, **partition_stats},
-        )
+        self.lineage.append_result(self.run_id, batch_id, res, n_poison=res.n_poison)
 
     def _refresh_view(self, batch_df: DataFrame, batch_id: int, res) -> None:
         """Refresh the maintained corpus view for this batch's touched
@@ -401,11 +382,6 @@ class CdcPipeline:
             # high-water stamp, crashed-run leftovers included. Fenced at
             # the primary's seq hwm under the dedicated catch-up run key.
             self.view.catch_up(run_id=f"{self.run_id}:catchup")
-
-    def _backfill_lineage(self, batch_id: int, res) -> None:
-        if res.snapshot_id is None or self.lineage.has(self.run_id, batch_id):
-            return
-        self._append_lineage(batch_id, res, backfilled=1)
 
     # ---------------- drivers ----------------
 

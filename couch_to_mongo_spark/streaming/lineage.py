@@ -85,6 +85,29 @@ class LineageLog:
         pq.write_table(pa.Table.from_pylist([row], schema=LINEAGE_SCHEMA), p)
         return p
 
+    def append_result(self, run_id: str, batch_id: int, res, **partition_stats) -> str:
+        """The batch's lineage row from its ``MergeResult``;
+        ``partition_stats`` join the result's touched-bucket count."""
+        return self.append(
+            run_id,
+            batch_id,
+            seq_min=res.seq_min,
+            seq_max=res.seq_max,
+            rows_applied=res.rows_applied,
+            n_inserts=res.n_inserts,
+            n_updates=res.n_updates,
+            n_deletes=res.n_deletes,
+            snapshot_id=res.snapshot_id,
+            partition_stats={"touched_buckets": res.touched_buckets, **partition_stats},
+        )
+
+    def backfill(self, run_id: str, batch_id: int, res) -> None:
+        """A crash between snapshot commit and lineage append loses the
+        batch's row; the fenced re-run writes it from the committed
+        snapshot's lineage its skip result ``res`` carries."""
+        if res.snapshot_id is not None and not self.has(run_id, batch_id):
+            self.append_result(run_id, batch_id, res, backfilled=1)
+
     def has(self, run_id: str, batch_id: int) -> bool:
         """Fast existence probe by filename (no data read)."""
         import glob

@@ -309,9 +309,10 @@ def _write_plans(spark, run) -> list[str]:
 def test_every_bucketed_writer_plans_one_exchange(spark, tmp_path):
     """Bootstrap, merge (with the text normalizer), compaction and rescale
     write through one kernel: one Exchange (the bucket repartition, shared
-    by the window LWW and the partitioned write) and no aggregate. Merge's
-    write keeps its two Sorts: the window's, and the key sort after the
-    Python normalizer, which stands in for the writer's own sort."""
+    by the window LWW and the partitioned write), no aggregate and no
+    Python evaluation node. Merge's write has one Sort, the window's: the
+    normalizer is a JVM expression, so the key sort after it is redundant
+    and the writer needs no sort of its own."""
     from couch_to_mongo_spark.bootstrap import bulk_bootstrap
     from couch_to_mongo_spark.functions.normalize import normalize_text
     from couch_to_mongo_spark.gen import make_changes_df
@@ -349,5 +350,7 @@ def test_every_bucketed_writer_plans_one_exchange(spark, tmp_path):
         for tree in trees:
             assert len(re.findall(r"\bExchange \(\d+\)", tree)) == 1, (name, tree)
             assert "Aggregate" not in tree, (name, tree)
+            for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+                assert node not in tree, (name, tree)
             if name == "merge":
-                assert len(re.findall(r"\bSort \(\d+\)", tree)) <= 2, tree
+                assert len(re.findall(r"\bSort \(\d+\)", tree)) == 1, tree

@@ -90,6 +90,26 @@ def test_normalizer_matches_python_twin(spark):
     assert got[1] == "a b c"
 
 
+def test_normalizer_matches_python_on_every_code_point(spark):
+    """The JVM normalizer equals ``normalize_text_py`` on every
+    non-surrogate code point, alone and after "a" (where combining marks
+    compose), on every Hangul LV syllable + trailing jamo pair, and on
+    None and ""."""
+    cps = [chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    lv = [chr(0xAC00 + 28 * i) for i in range(19 * 21)]
+    hangul = [s + chr(t) for s in lv for t in range(0x11A8, 0x11C3)]
+    texts = [*cps, *("a" + c for c in cps), *hangul, None, ""]
+    assert len(texts) == 2 * 1_112_064 + 399 * 27 + 2
+    pdf = pd.DataFrame({"text": texts, "want": [normalize_text_py(s) for s in texts]})
+    got = normalize_text(F.col("text"))
+    bad = (
+        spark.createDataFrame(pdf, schema="text string, want string")
+        .where(~got.eqNullSafe(F.col("want")))
+        .select("text", "want", got.alias("got"))
+    )
+    assert bad.limit(20).collect() == []
+
+
 def test_evolve_schema_rules():
     base = T.StructType([T.StructField("a", T.StringType()), T.StructField("b", T.IntegerType())])
     add = T.StructType([T.StructField("b", T.IntegerType()), T.StructField("c", T.DoubleType())])
