@@ -1,8 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query contract: Spark queries with DuckDB twins (PySpark target).
 
 ``entry(spark)`` runs the flagship query (the real CDC engine end-to-end on
-sf0.001). ``queries()``/``oracle_sql()`` expose one entry per implemented
-operator from SURVEY.md §2 plus the training-data operator family; each
+sf0.001). ``queries()``/``oracle_sql()`` expose 32 entries over the
+fixture's ``events`` and ``documents`` tables: 9 engine checks (the LWW and
+change-feed folds, the engine and corpus-view replays, conversation
+rendering, boilerplate and packing, sequence packing, rev ordering) and 23
+text-family queries (dedup, quality, decontamination, sampling, PII). Each
 oracle is ANSI-ish DuckDB SQL over the same parquet views.
 
 Cross-engine determinism rules used throughout:
@@ -119,150 +122,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) 
       FROM events)
 WHERE rn = 1
 """
-
-
-def q_anti_join_new_keys(spark, sf_dir):
-    """F1/JN2: keys present in the feed but absent from the sink dimension."""
-    ev = _t(spark, sf_dir, "events").select("user_id").distinct()
-    cust = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("user_id"))
-    return ev.join(cust, "user_id", "left_anti")
-
-
-SQL_ANTI = """
-SELECT DISTINCT user_id FROM events
-WHERE user_id NOT IN (SELECT c_custkey FROM customer)
-"""
-
-
-def q_checkpoint_top1(spark, sf_dir):
-    """O2: latest checkpoint row — orderBy desc limit 1 (TakeOrdered top-k)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.orderBy(F.col("event_id").desc())
-        .limit(1)
-        .select("event_id", _epoch("ts").alias("ts_epoch"))
-    )
-
-
-SQL_TOP1 = """
-SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch
-FROM events ORDER BY event_id DESC LIMIT 1
-"""
-
-
-def q_session_lifecycle(spark, sf_dir):
-    """A1: per-session lifecycle aggregation (start/end detection analogue)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        _epoch(F.min("ts")).alias("first_epoch"),
-        _epoch(F.max("ts")).alias("last_epoch"),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("has_end"),
-        F.countDistinct("event_type").alias("n_event_types"),
-    )
-
-
-SQL_SESSION = """
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(floor(epoch(min(ts))) AS BIGINT) AS first_epoch,
-       CAST(floor(epoch(max(ts))) AS BIGINT) AS last_epoch,
-       max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS has_end,
-       CAST(count(DISTINCT event_type) AS BIGINT) AS n_event_types
-FROM events GROUP BY user_id
-"""
-
-
-def q_batch_lineage_stats(spark, sf_dir):
-    """A5/S7: per-batch seq-range + counts (lineage rows)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.withColumn("batch_id", (F.col("event_id") / 1000).cast("long"))
-        .groupBy("batch_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("event_id").alias("seq_min"),
-            F.max("event_id").alias("seq_max"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-
-
-SQL_BATCH = """
-SELECT CAST(event_id // 1000 AS BIGINT) AS batch_id,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       min(event_id) AS seq_min, max(event_id) AS seq_max,
-       ROUND(sum(value), 2) AS sum_value
-FROM events GROUP BY 1
-"""
-
-
-def q_union_dedup(spark, sf_dir):
-    """§2.8: union + distinct of two event selections."""
-    ev = _t(spark, sf_dir, "events")
-    a = ev.where(F.col("event_type") == "signup").select("event_id", "user_id")
-    b = ev.where(F.col("value") > 150).select("event_id", "user_id")
-    return a.unionByName(b).distinct()
-
-
-SQL_UNION = """
-SELECT event_id, user_id FROM events WHERE event_type = 'signup'
-UNION
-SELECT event_id, user_id FROM events WHERE value > 150
-"""
-
-
-def q_json_extract(spark, sf_dir):
-    """J2/C1-C2: nested JSON field extraction + aggregation."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.withColumn("k", F.get_json_object("props", "$.k").cast("int"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-    )
-
-
-SQL_JSON = """
-SELECT CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
-       CAST(count(*) AS BIGINT) AS n, ROUND(sum(value), 2) AS sum_value
-FROM events GROUP BY 1
-"""
-
-
-def q_range_scan(spark, sf_dir):
-    """S2: partition/predicate-pruned range scan."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.where(
-        (F.col("user_id").between(10, 20)) & (F.col("event_type") == "click")
-    ).select("event_id", "user_id", "value")
-
-
-SQL_RANGE = """
-SELECT event_id, user_id, value FROM events
-WHERE user_id BETWEEN 10 AND 20 AND event_type = 'click'
-"""
-
-
-def q_point_lookup(spark, sf_dir):
-    """S3: point lookup by key."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.where(F.col("event_id") == 1234).select(
-        "event_id", "user_id", "event_type", "value"
-    )
-
-
-SQL_POINT = """
-SELECT event_id, user_id, event_type, value FROM events WHERE event_id = 1234
-"""
-
-
-def q_count_probe(spark, sf_dir):
-    """S8: sink count probe."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.agg(F.count(F.lit(1)).alias("n_rows"))
-
-
-SQL_COUNT = "SELECT CAST(count(*) AS BIGINT) AS n_rows FROM events"
 
 
 def _derive_changes(ev: DataFrame) -> DataFrame:
@@ -464,159 +323,6 @@ ranked AS (SELECT *, row_number() OVER (
              PARTITION BY user_id ORDER BY rev_gen DESC, rev DESC, event_id DESC) rn
            FROM r)
 SELECT user_id, event_id, rev_gen AS winning_gen FROM ranked WHERE rn = 1
-"""
-
-
-def q_sessionize(spark, sf_dir):
-    """Sessionization: gap > 12 h starts a new session (lag + cumsum window)."""
-    from pyspark.sql import Window as W
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", _epoch("ts").alias("ep")
-    )
-    w = W.partitionBy("user_id").orderBy("ep", "event_id")
-    gap = F.col("ep") - F.lag("ep").over(w)
-    df = ev.withColumn("new_s", F.when(gap.isNull() | (gap > 43200), 1).otherwise(0))
-    df = df.withColumn(
-        "session_id", F.sum("new_s").over(w.rowsBetween(W.unboundedPreceding, 0))
-    )
-    return df.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ep").alias("start_epoch"),
-        F.max("ep").alias("end_epoch"),
-    )
-
-
-SQL_SESSIONIZE = """
-WITH e AS (SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ep FROM events),
-g AS (SELECT *, CASE WHEN ep - lag(ep) OVER w IS NULL
-                       OR ep - lag(ep) OVER w > 43200 THEN 1 ELSE 0 END AS new_s
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ep, event_id)),
-s AS (SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ep, event_id
-                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM g)
-SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
-       min(ep) AS start_epoch, max(ep) AS end_epoch
-FROM s GROUP BY user_id, session_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# TPC-H-ish relational coverage (joins / aggs / sorts)
-# ---------------------------------------------------------------------------
-
-def q_q1_pricing(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-SQL_Q1 = """
-SELECT l_returnflag, l_linestatus,
-       ROUND(sum(l_quantity), 2) AS sum_qty,
-       ROUND(sum(l_extendedprice), 2) AS sum_base_price,
-       ROUND(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       ROUND(avg(l_quantity), 4) AS avg_qty,
-       ROUND(avg(l_discount), 4) AS avg_disc,
-       CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem WHERE l_shipdate <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_broadcast_enrich(spark, sf_dir):
-    """JN: fact ⋈ broadcast(dim) — revenue per market segment."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-    )
-
-
-SQL_BCAST = """
-SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders,
-       ROUND(sum(o_totalprice), 2) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-"""
-
-
-def q_topk_per_group(spark, sf_dir):
-    """O/window: top-3 orders per market segment (rank window, deterministic
-    tiebreak)."""
-    from pyspark.sql import Window as W
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    j = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-    w = W.partitionBy("c_mktsegment").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        j.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select(
-            "c_mktsegment",
-            F.col("rk").cast("long").alias("rk"),
-            "o_orderkey",
-            "o_totalprice",
-        )
-    )
-
-
-SQL_TOPK = """
-SELECT c_mktsegment, rk, o_orderkey, o_totalprice FROM (
-  SELECT c_mktsegment, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY c_mktsegment
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rk
-  FROM orders JOIN customer ON o_custkey = c_custkey) t
-WHERE rk <= 3
-"""
-
-
-def q_q3_shipping(spark, sf_dir):
-    """Multi-join (C ⋈ O ⋈ L) + agg + deterministic top-10."""
-    cust = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < "1995-03-15")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > "1995-03-15")
-    j = cust.join(orders, cust.c_custkey == orders.o_custkey).join(
-        li, orders.o_orderkey == li.l_orderkey
-    )
-    agg = j.groupBy("l_orderkey", "o_orderdate").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
-    )
-    return (
-        agg.orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-        .select("l_orderkey", F.col("o_orderdate").cast("string").alias("o_orderdate"), "revenue")
-    )
-
-
-SQL_Q3 = """
-SELECT l_orderkey, CAST(o_orderdate AS VARCHAR) AS o_orderdate, revenue FROM (
-  SELECT l_orderkey, o_orderdate,
-         ROUND(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-  FROM customer JOIN orders ON c_custkey = o_custkey
-                JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE c_mktsegment = 'BUILDING'
-    AND o_orderdate < DATE '1995-03-15' AND l_shipdate > DATE '1995-03-15'
-  GROUP BY l_orderkey, o_orderdate) t
-ORDER BY revenue DESC, l_orderkey LIMIT 10
 """
 
 
@@ -1449,18 +1155,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # r7 ORDERING NOTE (VERDICT r6 "What's wrong" #1): the external
-    # correctness harness verifies the FIRST 50 entries in insertion
-    # order, and since r5 new operators appended past that cap collected
-    # no external correctness rows (engine_replay included). The 10
-    # previously-capped-out entries now sit inside the first 50; the 10
-    # rotated to the tail (point_lookup .. topk_per_group) are trivial
-    # relational probes that were externally green every round since r01.
-    # The first entry stays a cheap probe so JVM/session warmup does not
-    # bill a heavy query.
     return {
         "lww_latest_state": q_lww_latest_state,
-        "anti_join_new_keys": q_anti_join_new_keys,
         "cdc_fold": q_cdc_fold,
         "engine_replay": q_engine_replay,
         "corpus_view_replay": q_corpus_view_replay,
@@ -1470,9 +1166,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate_turns": q_boilerplate_turns,
         "conversation_pack": q_conversation_pack,
         "rev_order": q_rev_order,
-        "sessionize": q_sessionize,
-        "q1_pricing": q_q1_pricing,
-        "q3_shipping": q_q3_shipping,
         "dedup_exact": q_dedup_exact,
         "doc_fingerprint": q_fingerprint,
         "minhash_lsh_buckets": q_minhash_lsh,
@@ -1495,41 +1188,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": q_pack_sequences,
         "stratified_sample": q_stratified_sample,
         "token_budget_sample": q_token_budget_sample,
-        "point_lookup": q_point_lookup,
-        "count_probe": q_count_probe,
-        "range_scan": q_range_scan,
-        "checkpoint_top1": q_checkpoint_top1,
-        "union_dedup": q_union_dedup,
-        "json_extract": q_json_extract,
-        "batch_lineage_stats": q_batch_lineage_stats,
-        "session_lifecycle": q_session_lifecycle,
-        "broadcast_enrich": q_broadcast_enrich,
-        "topk_per_group": q_topk_per_group,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         "lww_latest_state": SQL_LWW,
-        "anti_join_new_keys": SQL_ANTI,
-        "checkpoint_top1": SQL_TOP1,
-        "session_lifecycle": SQL_SESSION,
-        "batch_lineage_stats": SQL_BATCH,
-        "union_dedup": SQL_UNION,
-        "json_extract": SQL_JSON,
-        "range_scan": SQL_RANGE,
-        "point_lookup": SQL_POINT,
-        "count_probe": SQL_COUNT,
         "cdc_fold": SQL_CDC_FOLD,
         "render_conversations": SQL_RENDER_CONV,
         "boilerplate_turns": SQL_BOILERPLATE,
         "conversation_pack": SQL_CONV_PACK,
         "rev_order": SQL_REV,
-        "sessionize": SQL_SESSIONIZE,
-        "q1_pricing": SQL_Q1,
-        "broadcast_enrich": SQL_BCAST,
-        "topk_per_group": SQL_TOPK,
-        "q3_shipping": SQL_Q3,
         "dedup_exact": SQL_DEDUP_EXACT,
         "doc_fingerprint": SQL_FP,
         "minhash_lsh_buckets": SQL_MINHASH_LSH,

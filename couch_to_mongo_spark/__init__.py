@@ -14,6 +14,3 @@ lineage — re-expressed Spark-first:
 """
 
 __version__ = "0.1.0"
-
-from couch_to_mongo_spark.session import get_spark  # noqa: F401
-from couch_to_mongo_spark.tableformat import LakeTable  # noqa: F401

@@ -119,7 +119,6 @@ class CdcPipeline:
         self.compact_threshold = compact_threshold
         self.compact_async = compact_async
         self.compactions = 0
-        self.view_compactions = 0
         self._compact_thread = None
         self._compact_error: BaseException | None = None
         # snapshot retention on the maintenance loop: a long tail commits
@@ -177,7 +176,6 @@ class CdcPipeline:
         # (corpus_view.catch_up recovers the floor from view manifests).
         self.view = None
         self.view_refresh_every = max(int(view_refresh_every), 1)
-        self._last_batch_id: int | None = None
         if maintain_view is not None:
             from couch_to_mongo_spark.operators.corpus_view import (
                 RenderedCorpusView,
@@ -268,7 +266,6 @@ class CdcPipeline:
         must not be."""
         if self.view is None:
             return
-        self._last_batch_id = batch_id
         if self.view_refresh_every > 1:
             if (batch_id + 1) % self.view_refresh_every == 0:
                 self.view.catch_up(run_id=f"{self.run_id}:catchup")
@@ -337,8 +334,8 @@ class CdcPipeline:
                 self.table, max_files_per_bucket=self.compact_threshold
             ):
                 self.compactions += 1
-            if do_view and self.view.maybe_compact(self.compact_threshold):
-                self.view_compactions += 1
+            if do_view:
+                self.view.maybe_compact(self.compact_threshold)
             if do_expire:
                 self.table.expire_snapshots(keep_last=self.retention_keep_last)
                 if self.view is not None:

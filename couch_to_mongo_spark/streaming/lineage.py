@@ -109,12 +109,14 @@ class LineageLog:
             self.append_result(run_id, batch_id, res, backfilled=1)
 
     def has(self, run_id: str, batch_id: int) -> bool:
-        """Fast existence probe by filename (no data read)."""
+        """Fast existence probe by filename (no data read). The run id is
+        matched literally and the suffix is exactly ``append``'s 6-hex
+        uuid, so neither a glob character in the id nor a run whose id
+        extends this one (``x`` vs ``x-00000001``) can decide the probe."""
         import glob
 
-        return bool(
-            glob.glob(os.path.join(self.path, f"lineage-{run_id}-{batch_id:08d}-*.parquet"))
-        )
+        name = f"lineage-{glob.escape(run_id)}-{batch_id:08d}-??????.parquet"
+        return bool(glob.glob(os.path.join(glob.escape(self.path), name)))
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.path, "*.parquet"))

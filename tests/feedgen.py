@@ -1,4 +1,5 @@
-"""Deterministic change-feed generator (SURVEY.md §2.1 S9, FIXTURES.md §2).
+"""Deterministic change-feed generator for the tests (SURVEY.md §2.1 S9,
+FIXTURES.md §2).
 
 Spark-free (numpy/pandas/pyarrow) so fixtures are reproducible
 byte-for-byte: every value is a pure function of (seed, conv_id, turn_idx,

@@ -1,11 +1,11 @@
-"""Physical-plan inspection helpers (SURVEY.md §4).
+"""Physical-plan inspection helpers for tests/test_plans.py (SURVEY.md §4).
 
 The reference hand-schedules its physical plan (thread pool + manual range
-partitions); here Catalyst owns it, and these helpers are how we *assert*
-that the optimizer actually delivered: filters pushed to the parquet scan,
-columns pruned, small dims broadcast, aggregations map-side partial,
-top-k as TakeOrderedAndProject. Used by tests/test_plans.py so plan
-regressions fail CI, not just slow down the cluster.
+partitions); here Catalyst owns it, and these helpers are how the tests
+*assert* that the optimizer actually delivered: filters pushed to the
+parquet scan, small sides broadcast, aggregations map-side partial, one
+shuffle per bucketed write. Plan regressions fail CI, not just slow down
+the cluster.
 """
 
 from __future__ import annotations
@@ -30,16 +30,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return out
 
 
-def read_schema_columns(df: DataFrame) -> list[list[str]]:
-    """Column lists actually read by each parquet scan (pruning evidence)."""
-    plan = formatted_plan(df)
-    schemas = []
-    for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
-        cols = [c.split(":")[0].strip() for c in m.group(1).split(",") if c.strip()]
-        schemas.append(cols)
-    return schemas
-
-
 def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
@@ -51,10 +41,6 @@ def count_exchanges(df: DataFrame) -> int:
     plan prints each node twice: tree + detail)."""
     plan = formatted_plan(df)
     return len(re.findall(r"\(\d+\) Exchange\b", plan))
-
-
-def has_top_k(df: DataFrame) -> bool:
-    return "TakeOrderedAndProject" in formatted_plan(df)
 
 
 def count_partial_final_aggs(df: DataFrame) -> int:

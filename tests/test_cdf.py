@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import pandas as pd
 
-from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.operators.cdf import ChangeFeedLog
 from couch_to_mongo_spark.operators.merge import (
     merge_batch,
@@ -17,6 +16,8 @@ from couch_to_mongo_spark.operators.merge import (
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
 from couch_to_mongo_spark.tableformat import LakeTable
+
+from feedgen import make_changes_df
 
 
 def _setup(spark, path, n_events=1500, seed=61):
@@ -93,7 +94,7 @@ def test_streaming_pipeline_emits_cdf(spark, tmp_path):
     """emit_cdf=True on the streaming pipeline: the feed written during an
     availableNow replay folds back to the final table state (text is
     normalized by the pipeline, so compare against the normalized table)."""
-    from couch_to_mongo_spark.gen import generate_changes
+    from feedgen import generate_changes
     from couch_to_mongo_spark.streaming.cdc import CdcPipeline
 
     generate_changes(

@@ -6,8 +6,9 @@ from __future__ import annotations
 import json
 
 import submit_main
-from couch_to_mongo_spark.gen import generate_changes
 from couch_to_mongo_spark.streaming.cdc import CdcPipeline
+
+from feedgen import generate_changes
 
 
 def test_rescale_and_changes_cli(spark, tmp_path, capsys):

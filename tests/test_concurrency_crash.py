@@ -18,7 +18,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.operators.compact import compact
 from couch_to_mongo_spark.operators.merge import (
     fold_stored_rows,
@@ -29,6 +28,8 @@ from couch_to_mongo_spark.operators.merge import (
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
 from couch_to_mongo_spark.tableformat import CommitConflict, LakeTable
+
+from feedgen import make_changes_df
 
 
 def _mk_table(spark, path, n_buckets=4):

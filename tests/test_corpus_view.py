@@ -153,7 +153,7 @@ def test_pipeline_maintains_corpus_view(spark, tmp_path):
     """CdcPipeline(maintain_view=...): after the stream drains, the view
     equals a full re-render of the live state; a crash-replay under the
     same checkpoint fences every batch and leaves the view converged."""
-    from couch_to_mongo_spark.gen import generate_changes
+    from feedgen import generate_changes
     from couch_to_mongo_spark.streaming.cdc import CdcPipeline
 
     generate_changes(
@@ -245,7 +245,7 @@ def test_pipeline_deferred_view_refresh(spark, tmp_path):
     """CdcPipeline(view_refresh_every=3): per-batch refresh is skipped,
     catch-ups run every 3rd batch and at end of run; the drained view
     equals the full rebuild, and a crash-replay converges identically."""
-    from couch_to_mongo_spark.gen import generate_changes
+    from feedgen import generate_changes
     from couch_to_mongo_spark.streaming.cdc import CdcPipeline
 
     generate_changes(

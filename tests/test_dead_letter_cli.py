@@ -18,7 +18,7 @@ from tests.test_poison import MARKER, make_fussy_kernel
 
 @pytest.fixture()
 def quarantined(spark, tmp_path):
-    from couch_to_mongo_spark.gen import make_changes_df, write_change_files
+    from feedgen import make_changes_df, write_change_files
 
     pdf = make_changes_df(n_events=500, n_convs=10, seed=77, delete_frac=0.0)
     winners = pdf.sort_values("seq").groupby(["conv_id", "turn_idx"]).tail(1)

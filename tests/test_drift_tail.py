@@ -15,11 +15,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from couch_to_mongo_spark.gen import make_changes_df, write_change_files
 from couch_to_mongo_spark.operators.merge import read_state
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.sources.changes import feed_schema_drift, infer_feed_schema
 from couch_to_mongo_spark.streaming.cdc import CdcPipeline
+
+from feedgen import make_changes_df, write_change_files
 
 
 def _write_feed_file(path: str, seqs, score_type: pa.DataType, mtime: int):

@@ -1,7 +1,9 @@
 """Every ``couch_to_mongo_spark`` import in the engine, the CLI, the
 DuckDB engine checks and the benchmark resolves — module-level imports and the
 lazy ones inside functions and CLI branches alike, which no single run of
-the suite reaches all of. Pure ``ast`` + ``importlib``: no Spark session."""
+the suite reaches all of — and every package module is imported from one of
+those non-test entry points, so code only the tests use lives under
+``tests/``. Pure ``ast`` + ``importlib``: no Spark session."""
 
 from __future__ import annotations
 
@@ -73,3 +75,37 @@ def test_engine_imports_resolve():
         if not _resolves(mod, name)
     ]
     assert not broken, "\n".join(broken)
+
+
+def _module_file(mod: str) -> str | None:
+    path = os.path.join(ROOT, *mod.split("."))
+    for f in (os.path.join(path, "__init__.py"), path + ".py"):
+        if os.path.isfile(f):
+            return f
+    return None
+
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    """Walk the import graph (lazy imports included) from the CLI, the
+    DuckDB engine checks and the benchmark; importing ``a.b.c`` also
+    imports the packages ``a`` and ``a.b``."""
+    todo = [os.path.join(ROOT, "submit_main.py"), os.path.join(ROOT, "__spark_entry__.py")]
+    bench = os.path.join(ROOT, "perfbench")
+    todo += [
+        os.path.join(bench, f)
+        for f in os.listdir(bench)
+        if f.endswith(".py") and f != "test_perfbench.py"
+    ]
+    seen: set[str] = set()
+    while todo:
+        for _, mod, name in _engine_imports(todo.pop()):
+            for target in [mod] + ([f"{mod}.{name}"] if name else []):
+                parts = target.split(".")
+                for k in range(1, len(parts) + 1):
+                    f = _module_file(".".join(parts[:k]))
+                    if f and f not in seen:
+                        seen.add(f)
+                        todo.append(f)
+    package = {p for p in _sources() if p.startswith(os.path.join(ROOT, PKG) + os.sep)}
+    unreachable = sorted(os.path.relpath(p, ROOT) for p in package - seen)
+    assert not unreachable, "only tests import:\n" + "\n".join(unreachable)

@@ -10,11 +10,12 @@ from __future__ import annotations
 
 import pandas as pd
 
-from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.operators.compact import compact
 from couch_to_mongo_spark.operators.merge import merge_batch, read_state, with_engine_schema
 from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
 from couch_to_mongo_spark.tableformat import LakeTable
+
+from feedgen import make_changes_df
 
 
 def _apply(spark, table, pdf, bid):

@@ -7,11 +7,12 @@ import os
 
 import pandas as pd
 
-from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.sources.json_changes import (
     DeadLetterLog,
     read_json_changes_batch,
 )
+
+from feedgen import make_changes_df
 
 
 def write_jsonl_feed(tmp_path, pdf: pd.DataFrame, poison: int = 5):

@@ -11,11 +11,12 @@ import pandas as pd
 import pytest
 
 from couch_to_mongo_spark.functions.normalize import normalize_kernel
-from couch_to_mongo_spark.gen import make_changes_df, write_change_files
 from couch_to_mongo_spark.operators.merge import read_state
 from couch_to_mongo_spark.operators.poison import POISON_COL, isolate_poison
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.streaming.cdc import CdcPipeline
+
+from feedgen import make_changes_df, write_change_files
 
 MARKER = "\x00POISON\x00"  # NUL-framed: an honestly unencodable-ish payload
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.operators.merge import (
     merge_batch,
     read_state,
@@ -17,6 +16,8 @@ from couch_to_mongo_spark.operators.rescale import rescale_buckets
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
 from couch_to_mongo_spark.tableformat import CommitConflict, LakeTable
+
+from feedgen import make_changes_df
 
 
 def _mk_table(spark, path, n_buckets=4):

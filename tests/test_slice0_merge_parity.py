@@ -8,13 +8,14 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.functions.normalize import normalize_text
 from couch_to_mongo_spark.operators.cdf import ChangeFeedLog
 from couch_to_mongo_spark.operators.merge import merge_batch, read_state, with_engine_schema
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
 from couch_to_mongo_spark.tableformat import LakeTable
+
+from feedgen import make_changes_df
 
 
 def spark_changes(spark, pdf: pd.DataFrame):

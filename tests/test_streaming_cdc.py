@@ -11,10 +11,11 @@ import os
 
 import pytest
 
-from couch_to_mongo_spark.gen import generate_changes, make_changes_df, write_change_files
 from couch_to_mongo_spark.operators.merge import read_state
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.streaming.cdc import CdcPipeline
+
+from feedgen import generate_changes, make_changes_df, write_change_files
 
 
 def run_pipeline(spark, tmp_path, **kw):

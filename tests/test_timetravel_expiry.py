@@ -8,11 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from couch_to_mongo_spark.functions.normalize import normalize_text
-from couch_to_mongo_spark.gen import make_changes_df
 from couch_to_mongo_spark.operators.merge import merge_batch, read_state, with_engine_schema
 from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 from couch_to_mongo_spark.schemas import TRANSCRIPT_SCHEMA
 from couch_to_mongo_spark.tableformat import LakeTable
+
+from feedgen import make_changes_df
 
 
 @pytest.fixture()
@@ -106,7 +107,7 @@ def test_pipeline_retention_bounds_snapshot_log(spark, tmp_path):
     log bounded via the maintenance loop, while state parity, fences, and
     cross-run LWW convergence all survive expiry (fences ride in every
     retained snapshot)."""
-    from couch_to_mongo_spark.gen import generate_changes
+    from feedgen import generate_changes
     from couch_to_mongo_spark.operators.merge import read_state
     from couch_to_mongo_spark.streaming.cdc import CdcPipeline
 

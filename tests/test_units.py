@@ -137,7 +137,7 @@ def test_align_null_fills(spark):
 def test_bootstrap_bulk_copy(spark, tmp_path):
     from couch_to_mongo_spark.bootstrap import bulk_bootstrap
     from couch_to_mongo_spark.operators.merge import merge_batch, read_state
-    from couch_to_mongo_spark.gen import make_changes_df
+    from feedgen import make_changes_df
     from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
 
     snap_pdf = (
@@ -167,7 +167,7 @@ def test_bootstrap_bulk_copy(spark, tmp_path):
 
 
 def test_compaction_folds_files_and_preserves_state(spark, tmp_path):
-    from couch_to_mongo_spark.gen import make_changes_df
+    from feedgen import make_changes_df
     from couch_to_mongo_spark.operators.compact import compact
     from couch_to_mongo_spark.operators.merge import merge_batch, read_state, with_engine_schema
     from couch_to_mongo_spark.oracle import assert_state_parity, expected_state
@@ -291,6 +291,31 @@ def test_lineage_reads_with_null_first_row(spark, tmp_path):
     assert pdf["seq_max"].isna().tolist() == [True, False, False]
     assert pdf["n_updates"].isna().tolist() == [True, True, False]
     assert log.last_seq() == 12
+
+
+def test_lineage_has_matches_run_id_literally(tmp_path):
+    """The existence probe behind the fenced-rerun backfill matches its
+    own run's file exactly: a run id with glob characters finds its row
+    (so a rerun does not write a second one), and a run whose id extends
+    another's (``x-00000001``) does not answer for it."""
+    from types import SimpleNamespace
+
+    from couch_to_mongo_spark.streaming.lineage import LineageLog
+
+    log = LineageLog(str(tmp_path / "lineage"))
+    for run_id in ("snap[1]", "a*b", "c?d"):
+        log.append(run_id, 0, seq_min=0, seq_max=4, rows_applied=5, snapshot_id=1)
+        assert log.has(run_id, 0), run_id
+    res = SimpleNamespace(
+        seq_min=0, seq_max=4, rows_applied=5, n_inserts=None, n_updates=None,
+        n_deletes=None, snapshot_id=1, touched_buckets=1,
+    )
+    log.backfill("snap[1]", 0, res)
+    assert (log.read_pandas()["run_id"] == "snap[1]").sum() == 1
+
+    log.append("x-00000001", 5, seq_min=5, seq_max=9, rows_applied=5, snapshot_id=2)
+    assert not log.has("x", 1)
+    assert log.has("x-00000001", 5)
 
 
 def test_footer_stats_parallel_path_matches_serial(spark, tmp_table_path):
